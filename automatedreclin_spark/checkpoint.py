@@ -11,6 +11,12 @@ implemented as:
                                   (lineage counters), user metadata, schema
     <base>/<stage>/_COMMITTED     commit marker written LAST
 
+Every counter comes from the write itself: ``rows`` and any stage-specific
+metric are observed while the snapshot is written, and the per-partition
+counts are read from the written files' parquet footers (the file name
+carries the writing task's partition id), so committing a stage scans
+nothing twice.
+
 A stage is only considered committed when the marker exists, so a job killed
 mid-write re-runs that stage from its inputs (idempotent: same stage name →
 same deterministic content). ``resume=True`` (default) makes re-running a
@@ -21,12 +27,26 @@ tests/test_pipeline.py.
 from __future__ import annotations
 
 import json
+import re
 import time
 from pathlib import Path
-from typing import Any, Callable
+from typing import Any, Callable, Sequence
 
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
+
+_PART_FILE = re.compile(r"part-(\d+)")
+
+
+def _rows_per_partition(data_dir: Path) -> dict[int, int]:
+    """Rows of each writing task, summed from the parquet footers of the
+    files it wrote. Tasks that wrote no rows write no file."""
+    out: dict[int, int] = {}
+    for f in data_dir.glob("part-*.parquet"):
+        pid = int(_PART_FILE.match(f.name).group(1))
+        out[pid] = out.get(pid, 0) + pq.read_metadata(f).num_rows
+    return dict(sorted(out.items()))
 
 
 class CheckpointManager:
@@ -54,6 +74,7 @@ class CheckpointManager:
         builder: Callable[[], DataFrame],
         meta: dict[str, Any] | None = None,
         inputs: list[str] | None = None,
+        observations: Sequence[Observation] = (),
     ) -> DataFrame:
         """Run (or resume) a checkpointed stage. The builder's output is
         materialized to parquet; reading it back also truncates lineage for
@@ -62,7 +83,11 @@ class CheckpointManager:
         ``inputs`` names the upstream committed stages this stage reads; their
         rows_out become this stage's explicit rows_in lineage (SURVEY §7.0's
         (stage, iter, rows_in, rows_out) row). Stages fed by external tables
-        pass no inputs and record rows_in = null."""
+        pass no inputs and record rows_in = null.
+
+        ``observations`` are attached by the builder somewhere in its plan;
+        their metrics, collected by the snapshot write, are added to the
+        manifest's ``meta``, where a resumed run reads them back."""
         sdir = self._stage_dir(name)
         data_dir = sdir / "data"
         if self.resume and self.is_committed(name):
@@ -88,15 +113,11 @@ class CheckpointManager:
         df = df.observe(obs, F.count(F.lit(1)).alias("rows_out"))
         df.write.mode("overwrite").parquet(str(data_dir))
         rows_out = int(obs.get["rows_out"])
+        meta = dict(meta or {})
+        for o in observations:
+            meta.update(o.get)
         out = self.spark.read.parquet(str(data_dir))
-
-        # Per-partition lineage counters of the committed snapshot (cheap:
-        # one count over the freshly written parquet).
-        per_part = (
-            out.groupBy(F.spark_partition_id().alias("partition_id"))
-            .agg(F.count(F.lit(1)).alias("rows"))
-            .collect()
-        )
+        per_part = _rows_per_partition(data_dir)
         # Explicit rows_in lineage: each named upstream stage's committed
         # rows_out, read from its manifest (committed strictly before us).
         inputs_rows: dict[str, int] = {}
@@ -119,10 +140,10 @@ class CheckpointManager:
             "rows": rows_out,
             "rows_in": rows_in,
             "inputs": inputs_rows,
-            "partitions": {int(r["partition_id"]): int(r["rows"]) for r in per_part},
+            "partitions": per_part,
             "schema": out.schema.simpleString(),
             "elapsed_sec": round(time.time() - t0, 3),
-            "meta": meta or {},
+            "meta": meta,
         }
         sdir.mkdir(parents=True, exist_ok=True)
         (sdir / "manifest.json").write_text(json.dumps(manifest, indent=2, default=str))

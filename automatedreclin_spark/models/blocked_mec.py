@@ -92,6 +92,17 @@ class BlockedMecResult:
     iter_seconds: list[float] = field(default_factory=list)
     iter_substage_seconds: list[dict[str, float]] = field(default_factory=list)
     stage_seconds: dict[str, float] = field(default_factory=dict)
+    #: the persisted frames M_est, scored and block_estimates read lazily:
+    #: Ω with its gammas, the block summary and the final match keys.
+    cached: list[DataFrame] = field(default_factory=list, repr=False)
+
+    def unpersist(self) -> None:
+        """Release the fit's cached frames. M_est, scored and
+        block_estimates stay valid but recompute Ω, comparators included,
+        when read again, so release only once they are consumed (e.g.
+        written to a checkpoint)."""
+        for df in self.cached:
+            df.unpersist()
 
 
 def _estimate_side(
@@ -244,7 +255,6 @@ def blocked_mec(
     a_col: str = "a",
     b_col: str = "b",
     seed: int = 1,
-    checkpoint_dir: str | None = None,
     pairs: DataFrame | None = None,
     verbose: bool = False,
 ) -> BlockedMecResult:
@@ -400,7 +410,7 @@ def blocked_mec(
             alpha=alpha, n_U_fit=0, b_params=None, cpar_params=None,
             block_estimates=None,
             u_fit_diagnostics=pd.DataFrame(), scored=scored,
-            stage_seconds=stage_seconds,
+            stage_seconds=stage_seconds, cached=[omega, summary_df, M],
         )
 
     prev_match: dict | None = None
@@ -563,10 +573,6 @@ def blocked_mec(
 
         # (e) q̂ with full |U|; n_U = max(n_U_min, min(N, round Σq̂)); n_M = N − n_U.
         scored = scored.withColumn("q_est", _q_est_expr(float(n_U_count), float(N)))
-        if checkpoint_dir is not None:
-            path = f"{checkpoint_dir}/blocked_mec_iter_{it}"
-            scored.write.mode("overwrite").parquet(path)
-            scored = scored.sparkSession.read.parquet(path)
         q_sum = float(scored.agg(F.sum("q_est")).collect()[0][0])
         n_U_est = max(n_U_min, min(N, round(q_sum)))
         n_M_est = N - n_U_est
@@ -700,4 +706,5 @@ def blocked_mec(
         iter_seconds=iter_seconds,
         iter_substage_seconds=iter_substage_seconds,
         stage_seconds=stage_seconds,
+        cached=[omega, summary_df, M],
     )

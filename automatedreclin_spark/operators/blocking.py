@@ -21,7 +21,7 @@ from __future__ import annotations
 
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
 #: Mersenne prime modulus shared with ops/dedup.py minhash.
@@ -234,10 +234,19 @@ def find_hot_blocks(summary: DataFrame, max_pairs_per_block: int) -> DataFrame:
     return summary.filter(F.col("pair_count") > max_pairs_per_block).select("block")
 
 
-def cap_blocks(summary: DataFrame, max_pairs_per_block: int) -> tuple[DataFrame, DataFrame]:
+def cap_blocks(summary: DataFrame, max_pairs_per_block: int,
+               report: Observation | None = None) -> tuple[DataFrame, DataFrame]:
     """Split the block summary into (kept, dropped-oversized). Dropped blocks
     are reported like the reference's excluded records rather than silently
-    exploding the shuffle."""
-    kept = summary.filter(F.col("pair_count") <= max_pairs_per_block)
-    dropped = summary.filter(F.col("pair_count") > max_pairs_per_block)
-    return kept, dropped
+    exploding the shuffle. ``report`` observes their number and pair total
+    (``dropped_blocks``, ``dropped_pairs``) while the kept side is
+    evaluated, so reporting costs no extra job."""
+    over = F.col("pair_count") > max_pairs_per_block
+    if report is not None:
+        summary = summary.observe(
+            report,
+            F.count(F.when(over, 1)).alias("dropped_blocks"),
+            F.coalesce(F.sum(F.when(over, F.col("pair_count"))), F.lit(0))
+            .alias("dropped_pairs"),
+        )
+    return summary.filter(~over), summary.filter(over)

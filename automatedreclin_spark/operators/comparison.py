@@ -18,6 +18,7 @@ from pyspark.sql import functions as F
 
 from automatedreclin_spark.functions.comparators import Comparator, cmp_identical
 from automatedreclin_spark.operators.pairs import cross_pairs, label_pairs
+from automatedreclin_spark.operators.util import ensure_parallelism, planned_partitions
 
 
 @dataclass
@@ -116,8 +117,6 @@ def comparison_vectors(
         # parallelism — where the generic under-partition guard below would
         # instead shuffle the ALREADY-EXPANDED pair table (73.5M rows paying
         # an Exchange for a 15k-row problem at sf0.1; guide §2.4).
-        from automatedreclin_spark.operators.util import ensure_parallelism
-
         pair_df = cross_pairs(ensure_parallelism(A, factor=3), B,
                               a_col=a_col, b_col=b_col)
     else:
@@ -129,7 +128,7 @@ def comparison_vectors(
     # (e.g. produced inside one broadcast-join task) would serialize the whole
     # gamma stage. Round-robin the narrow id table across the cluster first.
     target = pair_df.sparkSession.sparkContext.defaultParallelism * 3
-    if pair_df.rdd.getNumPartitions() < target:
+    if planned_partitions(pair_df) < target:
         pair_df = pair_df.repartition(target)
 
     join_vars = list(variables)

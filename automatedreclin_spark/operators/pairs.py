@@ -11,6 +11,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from automatedreclin_spark.operators.util import planned_partitions
+
 
 def cross_pairs(A: DataFrame, B: DataFrame, a_col: str = "a", b_col: str = "b") -> DataFrame:
     """J1 — full Cartesian pair space Ω = A × B (reference
@@ -51,7 +53,7 @@ def block_pairs(
     # 3x cores: finer tasks amortize stragglers in the CPU-bound scoring tail
     # (a single slow partition otherwise idles the rest of the cluster).
     target = spark.sparkContext.defaultParallelism * 3
-    if a_side.rdd.getNumPartitions() < target:
+    if planned_partitions(a_side) < target:
         a_side = a_side.repartition(target, F.col("block"), F.col("a"))
     joined = a_side.join(b_side, "block")
     if dedup is None:

@@ -16,6 +16,47 @@ from pyspark.storagelevel import StorageLevel
 _LOCAL_CKPT_LEVEL = StorageLevel.MEMORY_AND_DISK
 
 
+def _kind(node) -> str:
+    return node.getClass().getSimpleName()
+
+
+def _plan_partitions(node) -> int:
+    if _kind(node) == "AdaptiveSparkPlanExec":
+        # The not-yet-executed adaptive plan: its current physical plan
+        # already carries the planned exchanges.
+        return _plan_partitions(node.executedPlan())
+    n = node.outputPartitioning().numPartitions()
+    if n > 0:
+        return n
+    # Unknown partitioning: a narrow node keeps its input's partitions, a
+    # broadcast join its streamed side's (broadcast inputs never count).
+    children = []
+    it = node.children().iterator()
+    while it.hasNext():
+        child = it.next()
+        if not _kind(child).startswith(("BroadcastExchange", "BroadcastQueryStage")):
+            children.append(child)
+    if children:
+        counts = [_plan_partitions(c) for c in children]
+        return sum(counts) if _kind(node) == "UnionExec" else max(counts)
+    if _kind(node) == "InMemoryTableScanExec":
+        return _plan_partitions(node.relation().cachedPlan())
+    # A scan leaf: building its RDD lists the input splits, it runs no job.
+    return node.execute().getNumPartitions()
+
+
+def planned_partitions(df: DataFrame) -> int:
+    """Partition count of ``df`` read from its planned physical plan.
+
+    ``df.rdd.getNumPartitions()`` is no substitute under adaptive execution:
+    it executes every upstream shuffle stage to learn the final count and
+    then throws the stages away (4 jobs just to plan block_pairs,
+    comparison_vectors and ensure_parallelism over one shuffled input,
+    tests/test_plans.py). This reads the plan instead and launches no Spark
+    job. A shuffle's count is the planned one, before adaptive coalescing."""
+    return _plan_partitions(df._jdf.queryExecution().executedPlan())
+
+
 def ensure_parallelism(df: DataFrame, factor: int = 1) -> DataFrame:
     """Round-robin repartition to cluster parallelism when the input is
     under-partitioned (e.g. a single small parquet file). CPU-heavy narrow
@@ -23,7 +64,7 @@ def ensure_parallelism(df: DataFrame, factor: int = 1) -> DataFrame:
     the SCAN produced, which has nothing to do with how expensive the
     downstream expressions are. No-op when already parallel enough."""
     target = df.sparkSession.sparkContext.defaultParallelism * factor
-    if df.rdd.getNumPartitions() < target:
+    if planned_partitions(df) < target:
         return df.repartition(target)
     return df
 

@@ -27,8 +27,9 @@ from __future__ import annotations
 from dataclasses import dataclass
 
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
+from pyspark.storagelevel import StorageLevel
 
 from automatedreclin_spark.checkpoint import CheckpointManager
 from automatedreclin_spark.functions.comparators import (
@@ -41,6 +42,7 @@ from automatedreclin_spark.models.blocked_mec import BlockedMecResult, blocked_m
 from automatedreclin_spark.operators.blocking import cap_blocks, files_candidate_blocks
 from automatedreclin_spark.operators.clustering import cluster_matches, connected_components
 from automatedreclin_spark.operators.pairs import block_pairs
+from automatedreclin_spark.operators.util import release_checkpoint
 from automatedreclin_spark.evaluation import evaluation, pairwise_f1
 
 
@@ -52,7 +54,8 @@ class LinkageRun:
     fit: BlockedMecResult | None
     candidate_pairs: int
     n_components: int
-    dropped_blocks: int
+    dropped_blocks: int         # probe blocks cap_blocks dropped ...
+    dropped_pairs: int          # ... and the candidate pairs they held
     eval_metrics: dict | None = None
 
 
@@ -86,14 +89,30 @@ def link_repo_files(
     A = ck.stage("10_records_A", lambda: prepare_records(files_A, "a"))
     B = ck.stage("10_records_B", lambda: prepare_records(files_B, "b"))
 
+    # Frames a stage builder cached; released once the stage commits.
+    held: list[DataFrame] = []
+
+    def hold(df: DataFrame) -> DataFrame:
+        held.append(df)
+        return df
+
+    def release_held() -> None:
+        for df in held:
+            df.unpersist()
+            release_checkpoint(df)
+        held.clear()
+
+    dropped_obs = Observation("dropped_blocks")
+
     def build_candidates() -> DataFrame:
-        blocks_a = files_candidate_blocks(
-            A, "a", n_buckets=n_buckets,
-            path_probes=path_probes, content_probes=content_probes,
-        )
-        blocks_b = files_candidate_blocks(
-            B, "b", n_buckets=n_buckets,
-            path_probes=path_probes, content_probes=content_probes,
+        # The minhash block assignments feed both the block sizes and the
+        # pair join; persisted, each side's token hashing runs once.
+        blocks_a, blocks_b = (
+            hold(files_candidate_blocks(
+                R, id_col, n_buckets=n_buckets,
+                path_probes=path_probes, content_probes=content_probes,
+            ).persist(StorageLevel.MEMORY_AND_DISK))
+            for R, id_col in ((A, "a"), (B, "b"))
         )
         # Probe-block sizes are capped BEFORE the join: a probe bucket whose
         # pair count explodes (e.g. a boilerplate content shingle) is dropped
@@ -103,7 +122,7 @@ def link_repo_files(
         sizes = a_counts.join(b_counts, "block").withColumn(
             "pair_count", F.col("n_a") * F.col("n_b")
         )
-        kept, dropped = cap_blocks(sizes, max_pairs_per_block)
+        kept, _ = cap_blocks(sizes, max_pairs_per_block, report=dropped_obs)
         keep_keys = kept.select("block")
         blocks_a = blocks_a.join(keep_keys, "block", "left_semi")
         blocks_b = blocks_b.join(keep_keys, "block", "left_semi")
@@ -111,19 +130,30 @@ def link_repo_files(
 
     pairs = ck.stage("20_candidates", build_candidates,
                      meta={"n_buckets": n_buckets, "path_probes": path_probes,
-                           "content_probes": content_probes},
-                     inputs=["10_records_A", "10_records_B"])
-    n_pairs = ck.manifest("20_candidates")["rows"]
+                           "content_probes": content_probes,
+                           "max_pairs_per_block": max_pairs_per_block},
+                     inputs=["10_records_A", "10_records_B"],
+                     observations=[dropped_obs])
+    release_held()
+    cand = ck.manifest("20_candidates")
+    n_pairs = cand["rows"]
+
+    comp_obs = Observation("components")
 
     def build_components() -> DataFrame:
         # A-node = a*2, B-node = b*2+1 (namespaced); component id becomes the
-        # disjoint selection-block id.
+        # disjoint selection-block id. A component's id is its smallest node
+        # id, so each component has exactly one row with id == component.
         edges = pairs.select((F.col("a") * 2).alias("u"), (F.col("b") * 2 + 1).alias("v"))
-        return connected_components(edges)
+        return hold(connected_components(edges)).observe(
+            comp_obs,
+            F.count(F.when(F.col("id") == F.col("component"), 1)).alias("n_components"),
+        )
 
     comp = ck.stage("30_components", build_components,
-                    inputs=["20_candidates"])
-    n_components = comp.select("component").distinct().count()
+                    inputs=["20_candidates"], observations=[comp_obs])
+    release_held()
+    n_components = ck.manifest("30_components")["meta"]["n_components"]
 
     a_blocks = comp.filter(F.col("id") % 2 == 0).select(
         (F.col("id") / 2).cast("long").alias("a"), F.col("component").alias("block")
@@ -134,8 +164,8 @@ def link_repo_files(
     # expand into its full cross product.
     labeled_pairs = pairs.join(a_blocks, "a").select("block", "a", "b")
 
-    # Stage 40: blocked inverted MEC. Iteration-level snapshots go under the
-    # same checkpoint root; a committed stage skips the whole fit on resume.
+    # Stage 40: blocked inverted MEC. The fit keeps its state in memory and
+    # is checkpointed as a whole: a committed stage skips it on resume.
     fit = None
     if not (resume and ck.is_committed("40_linkage")):
         fit = blocked_mec(
@@ -153,15 +183,19 @@ def link_repo_files(
             },
             pairs=labeled_pairs,
             seed=seed,
-            checkpoint_dir=f"{checkpoint_dir}/40_linkage_iters",
         )
     matches = ck.stage(
         "40_linkage", lambda: fit.M_est,
         inputs=["10_records_A", "10_records_B", "20_candidates", "30_components"],
     )
+    if fit is not None:
+        # Only now: M_est is a lazy plan over the fit's cache, and releasing
+        # it before the write would rerun the comparators.
+        fit.unpersist()
 
-    clusters = ck.stage("50_clusters", lambda: cluster_matches(matches),
+    clusters = ck.stage("50_clusters", lambda: hold(cluster_matches(matches)),
                         inputs=["40_linkage"])
+    release_held()
 
     def build_entities() -> DataFrame:
         a_side = clusters.filter(F.col("side") == 0).select(
@@ -199,7 +233,8 @@ def link_repo_files(
         fit=fit,
         candidate_pairs=n_pairs,
         n_components=n_components,
-        dropped_blocks=0,
+        dropped_blocks=cand["meta"]["dropped_blocks"],
+        dropped_pairs=cand["meta"]["dropped_pairs"],
         eval_metrics=eval_metrics,
     )
 

@@ -64,6 +64,13 @@ def get_spark(
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
+        # Let AQE coalesce shuffles inside persisted plans too. Spark 4.1
+        # defaults this to false, which pins every cached plan (Ω, the
+        # fit's match sets, the block summary) at the full shuffle-partition
+        # count: on local[2], each blocked selection over a 300x600
+        # link_repo_files' 9.7k candidate pairs ran its grouped-map sweep as
+        # 32 Python tasks. Coalesced, the sweep runs as one task.
+        .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
         # Arrow transfer for pandas UDFs (comparators) — mandatory for the
         # vectorized comparison-vector stage. Batch size 2048 (not the 10000
         # default): measured on the 50M-pair scoring workload, smaller

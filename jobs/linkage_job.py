@@ -37,6 +37,8 @@ def main() -> None:
         SparkSession.builder.appName("reclin-linkage")
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
+        # as in session.get_spark: coalesce shuffles inside cached plans
+        .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
         .config("spark.sql.ansi.enabled", "false")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .getOrCreate()
@@ -67,6 +69,8 @@ def main() -> None:
     summary = {
         "candidate_pairs": run.candidate_pairs,
         "components": run.n_components,
+        "dropped_blocks": run.dropped_blocks,
+        "dropped_pairs": run.dropped_pairs,
         "matches": run.matches.count(),
         "invariant_violations": violations,
         "eval": run.eval_metrics,

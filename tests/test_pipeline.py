@@ -157,3 +157,70 @@ def test_stage_with_missing_declared_input_raises(spark, tmp_path):
     # the valid upstream alone works
     ck.stage("down_ok", lambda: spark.range(2), inputs=["up"])
     assert ck.manifest("down_ok")["rows_in"] == 3
+
+
+def _persistent_rdd_ids(spark) -> set[int]:
+    return {int(k) for k in spark.sparkContext._jsc.getPersistentRDDs().keySet()}
+
+
+@pytest.fixture(scope="module")
+def capped_run(spark, corpus, tmp_path_factory):
+    """A fresh run with a per-block pair cap small enough to drop blocks,
+    with the JVM's persisted RDDs recorded around it."""
+    A, B, _ = corpus
+    ckdir = str(tmp_path_factory.mktemp("capped_ck"))
+    before = _persistent_rdd_ids(spark)
+    run = link_repo_files(spark, A, B, checkpoint_dir=ckdir, max_pairs_per_block=20)
+    after = _persistent_rdd_ids(spark)
+    return run, ckdir, before, after
+
+
+def test_dropped_blocks_are_reported(spark, corpus, capped_run):
+    """cap_blocks' drops reach the 20_candidates manifest and LinkageRun,
+    and agree with the block summary computed independently."""
+    import json
+    from pathlib import Path
+
+    from automatedreclin_spark.operators.blocking import files_candidate_blocks
+
+    run, ckdir, _, _ = capped_run
+    A, B, _ = corpus
+    a_counts, b_counts = (
+        files_candidate_blocks(R, id_col, n_buckets=4096).groupBy("block")
+        .agg(F.count(F.lit(1)).alias(f"n_{id_col}"))
+        for R, id_col in ((A, "a"), (B, "b"))
+    )
+    over = (a_counts.join(b_counts, "block")
+            .withColumn("pair_count", F.col("n_a") * F.col("n_b"))
+            .filter(F.col("pair_count") > 20))
+    expected = over.agg(F.count(F.lit(1)).alias("blocks"),
+                        F.sum("pair_count").alias("pairs")).collect()[0]
+    assert expected["blocks"] > 0
+    assert run.dropped_blocks == expected["blocks"]
+    assert run.dropped_pairs == expected["pairs"]
+    meta = json.loads((Path(ckdir) / "20_candidates" / "manifest.json").read_text())["meta"]
+    assert meta["dropped_blocks"] == run.dropped_blocks
+    assert meta["dropped_pairs"] == run.dropped_pairs
+
+
+def test_run_leaves_no_cache_behind(spark, capped_run):
+    """Every RDD persisted while link_repo_files runs (block assignments,
+    Ω, the block summary, match sets, lineage cuts) is released by the
+    time it returns."""
+    _, _, before, after = capped_run
+    assert after - before == set()
+
+
+def test_component_count_is_committed_and_reused(spark, corpus, first_run):
+    """n_components is observed while 30_components is written, kept in its
+    manifest, and read back unchanged on resume."""
+    from automatedreclin_spark.checkpoint import CheckpointManager
+
+    run1, ckdir = first_run
+    comp = spark.read.parquet(f"{ckdir}/30_components/data")
+    assert run1.n_components == comp.select("component").distinct().count()
+    man = CheckpointManager(spark, ckdir).manifest("30_components")
+    assert man["meta"]["n_components"] == run1.n_components
+    A, B, labels = corpus
+    run2 = link_repo_files(spark, A, B, checkpoint_dir=ckdir, labels=labels)
+    assert run2.n_components == run1.n_components

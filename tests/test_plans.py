@@ -166,3 +166,56 @@ def test_mec_iterations_scan_narrow_cached_gamma_base(spark):
     # the denominator is computed by a projection, not stored in that cache
     assert any("denominator" in ln and "Project" in ln
                for ln in plan.splitlines()), plan
+
+
+def _job_ids(spark) -> set[int]:
+    return set(spark.sparkContext.statusTracker().getJobIdsForGroup(None))
+
+
+def test_building_pair_plans_launches_no_job(spark):
+    """Deciding whether to spread an input reads the planned physical plan:
+    building block_pairs, comparison_vectors and ensure_parallelism over a
+    shuffled input runs no Spark job (a partition-count probe through
+    df.rdd would execute the upstream shuffles and discard them)."""
+    import pandas as pd
+
+    from automatedreclin_spark.operators.comparison import comparison_vectors
+    from automatedreclin_spark.operators.pairs import block_pairs
+    from automatedreclin_spark.operators.util import ensure_parallelism
+
+    recs = pd.DataFrame({"id": range(1, 201), "name": [f"n{i % 17}" for i in range(200)]})
+    A = spark.createDataFrame(recs.rename(columns={"id": "a"}))
+    B = spark.createDataFrame(recs.rename(columns={"id": "b"}))
+    # groupBy: a shuffle whose partition count is only known once it runs
+    blocks_a = A.groupBy("a").agg(F.max(F.length("name")).alias("block"))
+    blocks_b = B.select("b", F.length("name").alias("block"))
+    pairs = blocks_a.join(blocks_b.distinct(), "block").select("a", "b")
+
+    before = _job_ids(spark)
+    block_pairs(blocks_a, blocks_b)
+    comparison_vectors(A, B, ["name"], pairs=pairs, check_finite=False)
+    ensure_parallelism(pairs, factor=3)
+    assert _job_ids(spark) == before
+
+
+def test_cached_grouped_map_runs_data_sized(spark):
+    """The session lets adaptive execution coalesce shuffles inside persisted
+    plans: a cached grouped-map over 10k rows runs in fewer tasks than the
+    shuffle-partition count, not one Python task per shuffle partition."""
+    tracker = spark.sparkContext.statusTracker()
+    old = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", "64")
+    df = spark.range(10_000).select((F.col("id") % 97).alias("g"),
+                                    F.col("id").cast("double").alias("x"))
+    out = df.groupBy("g").applyInPandas(lambda pdf: pdf, schema=df.schema)
+    try:
+        out.persist()
+        before = _job_ids(spark)
+        assert out.count() == 10_000
+        stages = [tracker.getStageInfo(s) for j in _job_ids(spark) - before
+                  for s in tracker.getJobInfo(j).stageIds]
+        tasks = [s.numTasks for s in stages if s is not None]
+        assert tasks and max(tasks) < 64, tasks
+    finally:
+        out.unpersist()
+        spark.conf.set("spark.sql.shuffle.partitions", old)
