@@ -1045,6 +1045,7 @@ def q_blocked_mec_customer(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("m_h") > F.least("na", "nb"))
         .count()
     )
+    res.unpersist()  # every scalar above is computed; release Ω and M
     return _invariant_df(spark, [
         ("m_size_minus_n_m_est", float(cnt - res.n_M_est)),
         ("n_m_plus_n_u_minus_n", float(res.n_M_est + res.n_U_est - res.candidate_pair_count)),
@@ -1421,6 +1422,7 @@ def q_blocked_mec_alpha(spark: SparkSession, sf_dir: str) -> DataFrame:
                          != applied["n_U_current"] - applied["requested_n_drop"]).sum())
         req_viol = int((diag["requested_n_drop"]
                         != (0.25 * diag["n_U_current"]).astype(int)).sum())
+    res.unpersist()  # every scalar above is computed; release Ω and M
     return _invariant_df(spark, [
         ("m_size_minus_n_m_est", float(cnt - res.n_M_est)),
         ("one_to_one_a_violations", float(cnt - int(agg["da"]))),
@@ -1568,6 +1570,7 @@ def q_blocked_mec_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
         .count()
     )
     neg_nm = res.block_estimates.filter(F.col("nonmatches_min") < 0).count()
+    res.unpersist()  # every scalar above is computed; release Ω and M
     return _invariant_df(spark, [
         ("m_size_minus_n_m_est", float(cnt - res.n_M_est)),
         ("one_to_one_a_violations", float(cnt - int(agg["da"]))),

@@ -219,3 +219,33 @@ def test_cached_grouped_map_runs_data_sized(spark):
     finally:
         out.unpersist()
         spark.conf.set("spark.sql.shuffle.partitions", old)
+
+
+def test_connected_components_launches_few_jobs(spark):
+    """A 10k-edge graph that fits the driver is materialized once and
+    finished there: at most 4 Spark jobs, collecting the output included
+    (distributed large-star/small-star rounds cost ~9 jobs each)."""
+    import numpy as np
+    import pandas as pd
+
+    from automatedreclin_spark.operators.clustering import connected_components
+
+    rng = np.random.default_rng(3)
+    edges = spark.createDataFrame(pd.DataFrame({
+        "u": rng.integers(0, 8_000, 10_000), "v": rng.integers(0, 8_000, 10_000)}))
+    before = _job_ids(spark)
+    rows = connected_components(edges).collect()
+    assert rows
+    launched = _job_ids(spark) - before
+    assert len(launched) <= 4, len(launched)
+
+
+@pytest.mark.parametrize("name", ["blocked_mec_customer", "blocked_mec_alpha",
+                                  "blocked_mec_dups"])
+def test_registry_fit_queries_leave_no_cache_behind(spark, name):
+    """The registry's blocked_mec queries release the fit's cached Ω and
+    match set once their invariants are computed."""
+    persistent = spark.sparkContext._jsc.getPersistentRDDs
+    before = persistent().size()
+    assert QUERIES[name](spark, SF).count() > 0
+    assert persistent().size() == before
