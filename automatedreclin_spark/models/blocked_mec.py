@@ -7,12 +7,19 @@ scale path: blocking bounds the pair space, the classifier is fit INVERTED
 probability), and the structural bounds come from the block summary
 (ν = Σ min(n_Ah, n_Bh); n_U_min = N − ν).
 
-Spark execution per iteration (all over one persisted gamma base):
-  1 agg over M (match-side params) → driver Newton with fallback chain
-  1 agg over U_fit (nonmatch-side params)
-  score + q̂ column exprs → 1 agg (Σq̂)
-  per-block ascending greedy (applyInPandas) + global top-k → new M
-  convergence on driver scalars / match-set hash
+One fit loop, two routes for the operations over Ω. The block-summary
+aggregation that yields ν also yields N = |Ω|, before any comparator runs:
+- **driver** (N < ``_FIT_LOCAL``): the narrow Ω (block, a, b, gammas) is
+  collected once — the comparators run inside that collect — and init,
+  every iteration and the outputs run in numpy (``_LocalOmega``). A fit
+  is one Ω collect plus the block-summary aggregation, whatever its
+  iteration count; ``M_est`` and ``scored`` are local frames.
+- **distributed** (``_SparkOmega``): Ω is persisted once, then per iteration
+    1 fused agg over Ω → match- and nonmatch-side params (driver Newton
+      with the fallback chain)
+    score + q̂ column exprs → 1 agg (Σq̂)
+    per-block ascending greedy (applyInPandas) + global top-k → new M,
+      counted; an ``exceptAll`` probe when its size is unchanged.
 
 The optional ``alpha`` nonmatch-drop (T6, spec in
 papers/nonmatch_fraction_spec_updated.pdf) ranks current nonmatches by q̂ and
@@ -25,18 +32,18 @@ from __future__ import annotations
 import math
 import time
 from dataclasses import dataclass, field
-from typing import Any
+from typing import Any, Callable
 
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.window import Window
+from pyspark.sql.types import DoubleType, StructField, StructType
 from pyspark.storagelevel import StorageLevel
 
 from automatedreclin_spark.functions.numerics import gamma_shape_newton
 from automatedreclin_spark.models import families as fam
-from automatedreclin_spark.operators.blocking import BlockSummary, block_summary
+from automatedreclin_spark.operators.blocking import block_summary
 from automatedreclin_spark.operators.comparison import (
     comparison_vectors,
     finite_gamma_aggs,
@@ -44,10 +51,20 @@ from automatedreclin_spark.operators.comparison import (
     raise_if_nonfinite,
 )
 from automatedreclin_spark.operators.pairs import block_pairs
-from automatedreclin_spark.operators.selection import retain_top_n, select_mec_pairs
+from automatedreclin_spark.operators.selection import (
+    greedy_select_local,
+    retain_top_n,
+    select_mec_pairs,
+)
 from automatedreclin_spark.evaluation import evaluation, get_metrics, get_confusion
 
 _INF = float("inf")
+
+#: |Ω| below which the fit runs on the driver: 2M pairs of (block, a, b) and
+#: three gammas are ~100 MB of numpy columns there (the size of
+#: clustering._FINISH_LOCAL's edge bound). From it up, Ω stays distributed;
+#: 0 keeps every fit distributed.
+_FIT_LOCAL = 2_000_000
 
 #: alpha U-drop path: materialize the narrow U projection (keys + score +
 #: gammas, DISK_ONLY) once per iteration when |U| is at least this, so the
@@ -79,21 +96,26 @@ class BlockedMecResult:
     cpar_params: pd.DataFrame | None
     block_estimates: DataFrame | None
     u_fit_diagnostics: pd.DataFrame
+    #: where the Ω operations ran: "driver" (numpy over one Ω collect) or
+    #: "distributed" (Spark jobs over the persisted Ω)
+    route: str
     blocking_eval: dict[str, float] | None = None
     eval_metrics: dict[str, float] | None = None
     confusion: list[list[int]] | None = None
     scored: DataFrame | None = None
     #: wall-clock attribution, mirroring MecResult: total seconds per
     #: iteration, their substage split (side_fits = M/U parameter estimation
-    #: incl. the alpha retention passes; q_sum = the Σq̂ aggregation;
-    #: select = per-block greedy + truncation + new-M count/convergence),
-    #: and the non-iterative stages (init_agg = guard agg that materializes
-    #: the Ω cache; init_select = the ascending init greedy of ν pairs).
+    #: incl. the alpha retention passes; q_sum = scoring and Σq̂;
+    #: select = greedy + truncation + new-M count/convergence),
+    #: and the non-iterative stages (init_agg = the guard agg that
+    #: materializes the Ω cache, or on the driver route the Ω collect;
+    #: init_select = the ascending init greedy of ν pairs).
     iter_seconds: list[float] = field(default_factory=list)
     iter_substage_seconds: list[dict[str, float]] = field(default_factory=list)
     stage_seconds: dict[str, float] = field(default_factory=dict)
     #: the persisted frames M_est, scored and block_estimates read lazily:
-    #: Ω with its gammas, the block summary and the final match keys.
+    #: Ω with its gammas, the block summary and the final match keys (the
+    #: block summary alone on the driver route, whose outputs are local).
     cached: list[DataFrame] = field(default_factory=list, repr=False)
 
     def unpersist(self) -> None:
@@ -109,22 +131,15 @@ def _estimate_side(
     df: DataFrame,
     b_gammas: list[str],
     cpar_gammas: list[str],
-    side: str,
-    fallback: dict[str, list[float]] | None,
-    context: str = "blocked_mec()",
 ) -> dict[str, Any]:
-    """One aggregation pass → binary rates + hurdle-Gamma params with the
-    reference's fallback chain (``estimate_hurdle_gamma_params``
-    internals.R:1443-1502): <2 positives or non-finite estimate → fallback
-    (alpha, beta); no fallback → error."""
+    """One aggregation pass → the binary-rate and hurdle-Gamma sufficient
+    statistics of ``df`` (see ``_side_params_from_row``)."""
     aggs: list = []
     if b_gammas:
         aggs += fam.binary_fit_aggs(b_gammas, "rate")
     if cpar_gammas:
         aggs += fam.cpar_fit_aggs(cpar_gammas, "s")
-    row = df.agg(*aggs).collect()[0].asDict()
-    return _side_params_from_row(row, b_gammas, cpar_gammas, side, fallback,
-                                 context)
+    return df.agg(*aggs).collect()[0].asDict()
 
 
 def _side_params_from_row(
@@ -136,8 +151,11 @@ def _side_params_from_row(
     context: str = "blocked_mec()",
     suffix: str = "",
 ) -> dict[str, Any]:
-    """Parameter extraction + reference fallback chain from an aggregate row;
-    ``suffix`` addresses null-masked gamma projections (fused two-side agg)."""
+    """Binary rates + hurdle-Gamma params from an aggregate row, with the
+    reference's fallback chain (``estimate_hurdle_gamma_params``
+    internals.R:1443-1502): <2 positives or non-finite estimate → fallback
+    (alpha, beta); no fallback → error. ``suffix`` addresses null-masked
+    gamma projections (fused two-side agg)."""
     out: dict[str, Any] = {}
     if b_gammas:
         out["rate"] = [float(row[f"rate_{g}{suffix}"]) for g in b_gammas]
@@ -179,54 +197,6 @@ def _side_params_from_row(
     return out
 
 
-def _estimate_sides_fused(
-    scored: DataFrame,
-    M: DataFrame,
-    n_M_count: int,
-    b_gammas: list[str],
-    cpar_gammas: list[str],
-    m_fallback: dict[str, list[float]] | None,
-    u_fallback: dict[str, list[float]] | None,
-    context: str = "blocked_mec()",
-) -> tuple[dict[str, Any], dict[str, Any]]:
-    """M-side and full-U-side sufficient statistics in ONE pass over Ω
-    (the default no-alpha-drop path): a membership flag (broadcast when the
-    match set is small) plus null-masked gamma projections feed conditional
-    aggregations — every fit agg is null-ignoring, so masking ≡ filtering.
-    Replaces one semi-join-agg plus one anti-join-agg (two full passes over
-    Ω) per iteration. When M is empty the reference fits the match side on
-    all of Ω and U = Ω too (internals.R:1516-1518)."""
-    gammas = list(dict.fromkeys(b_gammas + cpar_gammas))
-    if n_M_count:
-        keys = M.select("a", "b").withColumn("_in_m", F.lit(True))
-        if n_M_count <= 5_000_000:
-            keys = F.broadcast(keys)
-        flagged = scored.join(keys, ["a", "b"], "left")
-        m_mask = F.col("_in_m").isNotNull()
-        u_mask = F.col("_in_m").isNull()
-    else:
-        flagged = scored
-        m_mask = F.lit(True)
-        u_mask = F.lit(True)
-    flagged = flagged.withColumns({
-        **{f"{g}__m": F.when(m_mask, F.col(g)) for g in gammas},
-        **{f"{g}__u": F.when(u_mask, F.col(g)) for g in gammas},
-    })
-    aggs: list = []
-    if b_gammas:
-        aggs += fam.binary_fit_aggs([f"{g}__m" for g in b_gammas], "rate")
-        aggs += fam.binary_fit_aggs([f"{g}__u" for g in b_gammas], "rate")
-    if cpar_gammas:
-        aggs += fam.cpar_fit_aggs([f"{g}__m" for g in cpar_gammas], "s")
-        aggs += fam.cpar_fit_aggs([f"{g}__u" for g in cpar_gammas], "s")
-    row = flagged.agg(*aggs).collect()[0].asDict()
-    match_params = _side_params_from_row(
-        row, b_gammas, cpar_gammas, "M", m_fallback, context, suffix="__m")
-    nonmatch_params = _side_params_from_row(
-        row, b_gammas, cpar_gammas, "U", u_fallback, context, suffix="__u")
-    return match_params, nonmatch_params
-
-
 def _q_est_expr(n_U: float, N: float):
     """q̂ = posterior nonmatch prob with the reference's guards
     (``estimate_inverted_q`` internals.R:1744-1753)."""
@@ -236,6 +206,377 @@ def _q_est_expr(n_U: float, N: float):
     q = F.least(F.lit(1.0), F.greatest(F.lit(0.0), q))
     q = F.when(r == _INF, F.lit(1.0)).when((r == 0) & (denom > 0), F.lit(0.0)).otherwise(q)
     return F.when(q.isNull() | F.isnan(q), F.lit(1.0)).otherwise(q)
+
+
+class _SparkOmega:
+    """The distributed route: Ω persisted once; every fit statistic is one
+    aggregation job, every selection a ``select_mec_pairs`` call. A match
+    set is a persisted (a, b) key frame."""
+
+    route = "distributed"
+
+    def __init__(self, omega: DataFrame, variables: list[str],
+                 gamma_cols: list[str], b_gammas: list[str],
+                 cpar_gammas: list[str], duplicates_in_A: bool):
+        self.b_gammas, self.cpar_gammas = b_gammas, cpar_gammas
+        self.duplicates_in_A = duplicates_in_A
+        # Init score: disagreement norm (C6).
+        terms = [(1.0 - F.col(g)) ** 2 for g in b_gammas] + [
+            F.col(g) ** 2 for g in cpar_gammas
+        ]
+        init_norm = F.sqrt(sum(terms[1:], terms[0]))
+        self.omega = omega.withColumn("init_disagreement", init_norm).persist(
+            StorageLevel.MEMORY_AND_DISK
+        )
+        # The C5 guard and |Ω| fuse into one aggregation over the PERSISTED
+        # Ω — it doubles as the cache-materializing pass, so the comparator
+        # UDFs execute exactly once per pair for the whole fit.
+        row = self.omega.agg(
+            F.count(F.lit(1)).alias("_n"), *finite_gamma_aggs(gamma_cols)
+        ).collect()[0].asDict()
+        try:
+            raise_if_nonfinite(row, variables, gamma_cols)
+        except ValueError:
+            self.omega.unpersist()
+            raise
+        self.n = int(row["_n"])
+        self.scored = self.omega
+
+    def select(self, n_M: float, ratio_col: str = "ratio") -> tuple[DataFrame, int]:
+        """Ascending-score greedy pick of n_M pairs (T2). keys_only: the
+        selection is consumed as (a, b) keys alone, so the full-row semi
+        rejoin over Ω is skipped (r6; guide §2.3 "project early")."""
+        M = select_mec_pairs(
+            self.scored, float(n_M), block_col="block", ascending=True,
+            invalid_to_never=True, ratio_col=ratio_col,
+            duplicates_in_A=self.duplicates_in_A, n_pairs=self.n,
+            keys_only=True,
+        ).select("a", "b").persist(StorageLevel.MEMORY_AND_DISK)
+        return M, M.count()
+
+    def fused_row(self, M: DataFrame, n_M: int) -> dict:
+        """M-side and full-U-side sufficient statistics in ONE pass over Ω
+        (the default no-alpha-drop path), suffixed ``__m``/``__u``: a
+        membership flag (broadcast when the match set is small) plus
+        null-masked gamma projections feed conditional aggregations — every
+        fit agg is null-ignoring, so masking ≡ filtering. Replaces one
+        semi-join-agg plus one anti-join-agg (two full passes over Ω) per
+        iteration. When M is empty the reference fits the match side on
+        all of Ω and U = Ω too (internals.R:1516-1518)."""
+        b_gammas, cpar_gammas = self.b_gammas, self.cpar_gammas
+        gammas = list(dict.fromkeys(b_gammas + cpar_gammas))
+        if n_M:
+            keys = M.select("a", "b").withColumn("_in_m", F.lit(True))
+            if n_M <= 5_000_000:
+                keys = F.broadcast(keys)
+            flagged = self.scored.join(keys, ["a", "b"], "left")
+            m_mask = F.col("_in_m").isNotNull()
+            u_mask = F.col("_in_m").isNull()
+        else:
+            flagged = self.scored
+            m_mask = F.lit(True)
+            u_mask = F.lit(True)
+        flagged = flagged.withColumns({
+            **{f"{g}__m": F.when(m_mask, F.col(g)) for g in gammas},
+            **{f"{g}__u": F.when(u_mask, F.col(g)) for g in gammas},
+        })
+        aggs: list = []
+        if b_gammas:
+            aggs += fam.binary_fit_aggs([f"{g}__m" for g in b_gammas], "rate")
+            aggs += fam.binary_fit_aggs([f"{g}__u" for g in b_gammas], "rate")
+        if cpar_gammas:
+            aggs += fam.cpar_fit_aggs([f"{g}__m" for g in cpar_gammas], "s")
+            aggs += fam.cpar_fit_aggs([f"{g}__u" for g in cpar_gammas], "s")
+        return flagged.agg(*aggs).collect()[0].asDict()
+
+    def m_row(self, M: DataFrame, n_M: int) -> dict:
+        """Match-side statistics for the alpha path (full Ω if M is empty).
+        A SEMI-join aggregation: the aggregate's input is |M| rows after
+        the broadcast-semi filter, where a flagged full-Ω pass with masked
+        aggregates was measured 105.8 s at the 400M-pair heavy anchor (vs
+        ~1 s of semi-agg benefit at sf0.1 — tried in r6 and reverted)."""
+        m_df = self.scored.join(M, ["a", "b"], "left_semi") if n_M else self.scored
+        return _estimate_side(m_df, self.b_gammas, self.cpar_gammas)
+
+    def retained_u_rows(self, M: DataFrame, n_U: int, n_keep: int,
+                        full_base_needed: Callable[[dict], bool]
+                        ) -> tuple[dict, dict | None]:
+        """The alpha path's ranked-retention U fit: statistics of the n_keep
+        retained nonmatches plus their ``_pos_<gamma>`` positive counts,
+        and — only when ``full_base_needed`` says so for that row — the
+        statistics of all of U (reference semantics, internals.R:1808-1815).
+        retain_top_n's own fused nonnull+distinct pass doubles as the
+        U-cache materializer."""
+        from automatedreclin_spark.operators.selection import _trace
+        _tt = time.time()
+        b_gammas, cpar_gammas = self.b_gammas, self.cpar_gammas
+        gammas = list(dict.fromkeys(b_gammas + cpar_gammas))
+        U = self.scored.join(M, ["a", "b"], "left_anti")
+        # The retention + fit make ~9 passes over U (nonnull count,
+        # rank-bracket min/max + 1-4 histogram levels, boundary counts,
+        # boundary-slice sort, minimum-sample + U-side fit) and every
+        # one references the score column, whose lazy definition is the
+        # full hurdle-gamma ratio arithmetic over Ω — ~400 s/pass at the
+        # 400M-pair heavy anchor (measured: 4,241 s side_fits, BENCH.md
+        # round-5 adjudication). Materialize ONE narrow projection
+        # (keys + score + gammas) instead, at DISK_ONLY: serialized
+        # columnar batches on local disk, zero heap pressure — unlike a
+        # full-width MEMORY_AND_DISK copy, which re-promoted
+        # deserialized blocks and OOM'd a 28 GB heap in an earlier run.
+        # Below the threshold the lazy recompute is cheaper than the
+        # write; tests monkeypatch it to 0 to pin plan-independence.
+        narrow_cols = list(dict.fromkeys(["a", "b", "block", "q_est"] + gammas))
+        materialized = n_U >= _ALPHA_U_MATERIALIZE_MIN
+        if materialized:
+            U = U.select(*narrow_cols).persist(StorageLevel.DISK_ONLY)
+        # retention order (internals.R:1831-1839): q_est desc nulls last,
+        # then (a, b, block) asc — computed scale-safe (exact-histogram
+        # filter cut when the score cardinality is bounded, sketch cut +
+        # boundary-tie resolution otherwise), NOT a global row_number
+        # window that would funnel every nonmatch through one task.
+        U_fit = retain_top_n(U, n_keep, "q_est", tie_cols=("a", "b", "block"),
+                             n_total=n_U)
+        _tt = _trace("alpha retain_top_n build", _tt)
+        # ONE pass over the retained set: minimum-sample positive counts
+        # (≥2 positives per cpar var or valid fallback) fused with the
+        # U-side fit aggregates — the fit row is discarded in the rare
+        # fallback-to-full-base case, where a second pass over full U is
+        # unavoidable.
+        aggs: list = [
+            F.count(F.when(F.col(g) > 0, 1)).alias(f"_pos_{g}")
+            for g in cpar_gammas
+        ]
+        if b_gammas:
+            aggs += fam.binary_fit_aggs(b_gammas, "rate")
+        if cpar_gammas:
+            aggs += fam.cpar_fit_aggs(cpar_gammas, "s")
+        fit_row = U_fit.agg(*aggs).collect()[0].asDict()
+        _tt = _trace("alpha retained-set fused agg", _tt)
+        full_row = (_estimate_side(U, b_gammas, cpar_gammas)
+                    if full_base_needed(fit_row) else None)
+        if materialized:
+            U.unpersist()
+        _trace("alpha u-side estimate", _tt)
+        return fit_row, full_row
+
+    def score(self, match_params: dict, nonmatch_params: dict,
+              n_U: int, N: int) -> float:
+        """(d) score s = u/m with NA/neg → +Inf guard
+        (score_inverted_mec_ratio internals.R:1653-1686), (e) q̂ with full
+        |U|; returns Σq̂. try_divide: a zero match-side density is a
+        legitimate "certain nonmatch" → NULL → guarded to +Inf (R
+        semantics: x/0 = Inf, then score_inverted_mec_ratio maps NA/neg to
+        Inf, internals.R:1683-1685)."""
+        b_gammas, cpar_gammas = self.b_gammas, self.cpar_gammas
+        expr = F.lit(1.0)
+        if b_gammas:
+            expr = expr * F.try_divide(
+                fam.bernoulli_product_expr(b_gammas, nonmatch_params["rate"]),
+                fam.bernoulli_product_expr(b_gammas, match_params["rate"]),
+            )
+        if cpar_gammas:
+            expr = expr * F.try_divide(
+                fam.hurdle_gamma_product_expr(
+                    cpar_gammas, nonmatch_params["p_0"],
+                    nonmatch_params["alpha"], nonmatch_params["beta"],
+                ),
+                fam.hurdle_gamma_product_expr(
+                    cpar_gammas, match_params["p_0"],
+                    match_params["alpha"], match_params["beta"],
+                ),
+            )
+        guarded = F.when(expr.isNull() | F.isnan(expr) | (expr < 0), F.lit(_INF)).otherwise(expr)
+        self.scored = self.omega.withColumn("ratio", guarded).withColumn(
+            "q_est", _q_est_expr(float(n_U), float(N)))
+        return float(self.scored.agg(F.sum("q_est")).collect()[0][0])
+
+    def zero_scores(self) -> None:
+        self.scored = self.omega.withColumns({"ratio": F.lit(0.0), "q_est": F.lit(0.0)})
+
+    def same_set(self, M_new: DataFrame, M: DataFrame) -> bool:
+        """Equal-sized key sets: equal iff M_new \\ M is empty."""
+        return M_new.exceptAll(M).limit(1).count() == 0
+
+    def release(self, M: DataFrame) -> None:
+        M.unpersist()
+
+    def outputs(self, M: DataFrame) -> tuple[DataFrame, DataFrame]:
+        M_est = (
+            self.scored.join(M, ["a", "b"], "left_semi")
+            .select("a", "b", "block", "ratio")
+            .orderBy("block", "a", "b")
+        )
+        return M_est, self.scored
+
+    def cached(self, M: DataFrame) -> list[DataFrame]:
+        return [self.omega, M]
+
+
+def _fit_row_local(G: dict[str, np.ndarray], rows, b_gammas: list[str],
+                   cpar_gammas: list[str], suffix: str = "") -> dict:
+    """The aggregate row of ``binary_fit_aggs``/``cpar_fit_aggs`` (same
+    keys) over the Ω rows ``rows`` (a mask or index array; None = all)."""
+    def pick(g):
+        return G[g] if rows is None else G[g][rows]
+
+    row: dict = {}
+    for g in b_gammas:
+        row[f"rate_{g}{suffix}"] = float(np.mean(pick(g)))
+    for g in cpar_gammas:
+        x = pick(g)
+        pos = x[x > 0]
+        row[f"s_p0_{g}{suffix}"] = float(np.mean(x == 0))
+        row[f"s_npos_{g}{suffix}"] = len(pos)
+        row[f"s_sum_{g}{suffix}"] = float(pos.sum())
+        row[f"s_sumlog_{g}{suffix}"] = float(np.log(pos).sum())
+    return row
+
+
+def _hurdle_gamma_product_local(G: dict[str, np.ndarray], gammas: list[str],
+                                p_0, alpha, beta) -> np.ndarray:
+    """``families.hurdle_gamma_product_expr`` in numpy, operation for
+    operation (a log of a non-positive gamma gives NaN where Spark gives
+    NULL; both end as a +Inf ratio)."""
+    out = None
+    for g, p0, a, b in zip(gammas, p_0, alpha, beta):
+        x = G[g]
+        log_c = a * math.log(b) - math.lgamma(a)
+        dens_pos = (1.0 - p0) * np.exp(log_c + (a - 1.0) * np.log(x) - b * x)
+        term = np.where(x == 0, float(p0), dens_pos)
+        out = term if out is None else out * term
+    return out
+
+
+def _bernoulli_product_local(G: dict[str, np.ndarray], gammas: list[str],
+                             probs) -> np.ndarray:
+    """``families.bernoulli_product_expr`` in numpy."""
+    out = None
+    for g, p in zip(gammas, probs):
+        term = G[g] * float(p) + (1.0 - G[g]) * float(1.0 - p)
+        out = term if out is None else out * term
+    return out
+
+
+class _LocalOmega:
+    """The driver route: the narrow Ω collected once, sorted by (a, b,
+    block) so that every sum and tie order is independent of the order
+    partitions arrive in; every statistic, score and selection is numpy
+    over its columns. A match set is a boolean row mask."""
+
+    route = "driver"
+
+    def __init__(self, omega: DataFrame, variables: list[str],
+                 gamma_cols: list[str], b_gammas: list[str],
+                 cpar_gammas: list[str], duplicates_in_A: bool):
+        self.b_gammas, self.cpar_gammas = b_gammas, cpar_gammas
+        self.duplicates_in_A = duplicates_in_A
+        self.spark, self.schema = omega.sparkSession, omega.schema
+        self.pdf = omega.toPandas().sort_values(["a", "b", "block"],
+                                                ignore_index=True)
+        G = {g: self.pdf[g].to_numpy(np.float64) for g in gamma_cols}
+        raise_if_nonfinite(
+            {f"_nf_{g}": int((~np.isfinite(G[g])).sum()) for g in gamma_cols},
+            variables, gamma_cols)
+        self.n = len(self.pdf)
+        self.a = self.pdf["a"].to_numpy()
+        self.b = self.pdf["b"].to_numpy()
+        terms = [(1.0 - G[g]) ** 2 for g in b_gammas] + [G[g] ** 2 for g in cpar_gammas]
+        G["init_disagreement"] = np.sqrt(sum(terms[1:], terms[0]))
+        self.G = G
+
+    def select(self, n_M: float, ratio_col: str = "ratio") -> tuple[np.ndarray, int]:
+        # Blocks are record-disjoint, so the one global budgeted sweep picks
+        # exactly the per-block sweeps' survivors truncated by (key, a, b).
+        idx = greedy_select_local(
+            self.a, self.b, self.G[ratio_col], float(n_M),
+            duplicates_in_A=self.duplicates_in_A, ascending=True,
+            invalid_to_never=True,
+        )
+        M = np.zeros(self.n, dtype=bool)
+        M[idx] = True
+        return M, len(idx)
+
+    def fused_row(self, M: np.ndarray, n_M: int) -> dict:
+        m_rows, u_rows = (M, ~M) if n_M else (None, None)
+        return {
+            **_fit_row_local(self.G, m_rows, self.b_gammas, self.cpar_gammas, "__m"),
+            **_fit_row_local(self.G, u_rows, self.b_gammas, self.cpar_gammas, "__u"),
+        }
+
+    def m_row(self, M: np.ndarray, n_M: int) -> dict:
+        return _fit_row_local(self.G, M if n_M else None,
+                              self.b_gammas, self.cpar_gammas)
+
+    def retained_u_rows(self, M: np.ndarray, n_U: int, n_keep: int,
+                        full_base_needed: Callable[[dict], bool]
+                        ) -> tuple[dict, dict | None]:
+        u_idx = np.flatnonzero(~M)
+        # q̂ desc (numpy sorts NaN last), then (a, b, block) asc: the row
+        # order, which the stable sort keeps among equal q̂.
+        kept = u_idx[np.argsort(-self.G["q_est"][u_idx], kind="stable")[:n_keep]]
+        fit_row = _fit_row_local(self.G, kept, self.b_gammas, self.cpar_gammas)
+        for g in self.cpar_gammas:
+            fit_row[f"_pos_{g}"] = int((self.G[g][kept] > 0).sum())
+        full_row = (_fit_row_local(self.G, u_idx, self.b_gammas, self.cpar_gammas)
+                    if full_base_needed(fit_row) else None)
+        return fit_row, full_row
+
+    def score(self, match_params: dict, nonmatch_params: dict,
+              n_U: int, N: int) -> float:
+        """``_SparkOmega.score`` in numpy. Spark's try_divide turns a zero
+        denominator into NULL, and a NULL ratio becomes +Inf; here the
+        quotient is ±Inf or NaN, and a NaN or negative ratio becomes +Inf,
+        which matches."""
+        G, b_gammas, cpar_gammas = self.G, self.b_gammas, self.cpar_gammas
+        with np.errstate(all="ignore"):
+            r = np.ones(self.n)
+            if b_gammas:
+                r = r * (_bernoulli_product_local(G, b_gammas, nonmatch_params["rate"])
+                         / _bernoulli_product_local(G, b_gammas, match_params["rate"]))
+            if cpar_gammas:
+                r = r * (
+                    _hurdle_gamma_product_local(
+                        G, cpar_gammas, nonmatch_params["p_0"],
+                        nonmatch_params["alpha"], nonmatch_params["beta"])
+                    / _hurdle_gamma_product_local(
+                        G, cpar_gammas, match_params["p_0"],
+                        match_params["alpha"], match_params["beta"]))
+            r = np.where(np.isnan(r) | (r < 0), _INF, r)
+            # _q_est_expr: Spark's least(1, NaN) is 1 (NaN sorts greatest)
+            # and a division by zero is NULL, which greatest(0, ·) skips.
+            denom = n_U * (r - 1.0) + float(N)
+            q = n_U * r / denom
+            q = np.where(np.isnan(q), 1.0, np.clip(q, 0.0, 1.0))
+            q[denom == 0] = 0.0
+            q[r == _INF] = 1.0
+            q[(r == 0) & (denom > 0)] = 0.0
+        G["ratio"], G["q_est"] = r, q
+        return float(q.sum())
+
+    def zero_scores(self) -> None:
+        self.G["ratio"] = self.G["q_est"] = np.zeros(self.n)
+
+    def same_set(self, M_new: np.ndarray, M: np.ndarray) -> bool:
+        return bool(np.array_equal(M_new, M))
+
+    def release(self, M: np.ndarray) -> None:
+        pass
+
+    def outputs(self, M: np.ndarray) -> tuple[DataFrame, DataFrame]:
+        """Local frames with the distributed route's schemas."""
+        extra = ["init_disagreement", "ratio", "q_est"]
+        scored_pdf = self.pdf.assign(**{c: self.G[c] for c in extra})
+        scored = self.spark.createDataFrame(scored_pdf, StructType(
+            self.schema.fields + [StructField(c, DoubleType()) for c in extra]))
+        keys = ["a", "b", "block"]
+        m_pdf = scored_pdf.loc[M, keys + ["ratio"]].sort_values(
+            ["block", "a", "b"], ignore_index=True)
+        M_est = self.spark.createDataFrame(m_pdf, StructType(
+            [self.schema[c] for c in keys] + [StructField("ratio", DoubleType())]))
+        return M_est, scored
+
+    def cached(self, M: np.ndarray) -> list[DataFrame]:
+        return []
 
 
 def blocked_mec(
@@ -304,6 +645,7 @@ def blocked_mec(
         pair_df = block_pairs(A, B, block_col=block_col, a_col=a_col, b_col=b_col,
                               dedup=False)
         summary_df = summary.summary
+        n_pairs = summary.candidate_pair_count
         if duplicates_in_A:
             # Blocks present only in A have n_b = 0 (block_summary full outer
             # join) → pair_count = 0 while _cap = n_a > 0; clamp so the
@@ -326,18 +668,17 @@ def blocked_mec(
         ).withColumn(
             "nonmatches_min", F.col("pair_count") - _cap
         ).persist(StorageLevel.MEMORY_AND_DISK)
-        nu = int(
-            summary_df.agg(F.sum(_cap)).collect()[0][0] or 0
-        )
-    # check_finite=False: the C5 guard and |Ω| fuse into one aggregation over
-    # the PERSISTED Ω below — it doubles as the cache-materializing pass, so
-    # the comparator UDFs execute exactly once per pair for the whole fit
-    # (previously the guard and the count each re-ran the uncached scan).
+        # |Ω| rides along with ν: the route is chosen before any comparator
+        # runs, at no extra job.
+        totals = summary_df.agg(F.sum(_cap).alias("nu"),
+                                F.sum("pair_count").alias("n")).collect()[0]
+        nu, n_pairs = int(totals["nu"] or 0), int(totals["n"] or 0)
+    # check_finite=False: each route runs the C5 guard over the Ω it
+    # materializes, so the comparators execute exactly once per pair.
     cv = comparison_vectors(
         A, B, variables, comparators=comparators, pairs=pair_df,
         a_col=a_col, b_col=b_col, check_finite=False,
     )
-    omega = cv.omega
 
     b_vars = [v for v in variables if methods[v] == "binary"]
     cpar_vars = [v for v in variables if methods[v] == "continuous_parametric"]
@@ -357,37 +698,24 @@ def blocked_mec(
         {"alpha": list(start_cpar["alpha_M"]), "beta": list(start_cpar["beta_M"])}
         if start_cpar else None
     )
-
-    # Init: disagreement norm (C6) → ascending greedy pick of ν pairs (T2).
-    disagreement_terms = [(1.0 - F.col(g)) ** 2 for g in b_gammas] + [
-        F.col(g) ** 2 for g in cpar_gammas
-    ]
-    init_norm = F.sqrt(sum(disagreement_terms[1:], disagreement_terms[0]))
     stage_seconds["pair_setup"] = round(time.time() - _stage_t0, 2)
+
     _stage_t0 = time.time()
-    omega = omega.withColumn("init_disagreement", init_norm).persist(
-        StorageLevel.MEMORY_AND_DISK
-    )
-    _guard_row = omega.agg(
-        F.count(F.lit(1)).alias("_n"), *finite_gamma_aggs(cv.gamma_cols)
-    ).collect()[0].asDict()
-    raise_if_nonfinite(_guard_row, variables, cv.gamma_cols)
-    N = int(_guard_row["_n"])
+    omega_ops = _LocalOmega if n_pairs < _FIT_LOCAL else _SparkOmega
+    try:
+        om = omega_ops(cv.omega, variables, cv.gamma_cols, b_gammas,
+                       cpar_gammas, duplicates_in_A)
+    except ValueError:  # the C5 guard: leave no cache behind
+        summary_df.unpersist()
+        raise
+    N = om.n
     cv._n = N
     n_U_min = N - nu
     stage_seconds["init_agg"] = round(time.time() - _stage_t0, 2)
 
     _stage_t0 = time.time()
-    # keys_only: the init selection is consumed as (a, b) keys alone, so the
-    # full-row semi rejoin over Ω that select_mec_pairs would otherwise add
-    # (gammas + init_disagreement, discarded by the .select below) is skipped
-    # — one less pass over the persisted Ω (r6; guide §2.3 "project early").
-    M = select_mec_pairs(
-        omega, float(max(0, nu)), block_col="block", ascending=True,
-        invalid_to_never=True, ratio_col="init_disagreement",
-        duplicates_in_A=duplicates_in_A, n_pairs=N, keys_only=True,
-    ).select("a", "b").persist(StorageLevel.MEMORY_AND_DISK)
-    n_M_count = M.count()
+    # Init: disagreement norm (C6) → ascending greedy pick of ν pairs (T2).
+    M, n_M_count = om.select(max(0, nu), ratio_col="init_disagreement")
     n_U_count = N - n_M_count
     stage_seconds["init_select"] = round(time.time() - _stage_t0, 2)
 
@@ -401,16 +729,16 @@ def blocked_mec(
                 "blocked_mec() initialized an empty nonmatch complement before "
                 "reaching the structural one-to-one bound."
             )
-        scored = omega.withColumns({"ratio": F.lit(0.0), "q_est": F.lit(0.0)})
-        M_est = scored.join(M, ["a", "b"], "left_semi").select("a", "b", "block", "ratio")
+        om.zero_scores()
+        M_est, scored = om.outputs(M)
         return BlockedMecResult(
             M_est=M_est, n_M_est=n_M_count, n_U_est=0,
             candidate_pair_count=N, nu=nu, n_U_min=n_U_min, iter=0,
             convergence_reason="structural_no_nonmatch_complement",
             alpha=alpha, n_U_fit=0, b_params=None, cpar_params=None,
             block_estimates=None,
-            u_fit_diagnostics=pd.DataFrame(), scored=scored,
-            stage_seconds=stage_seconds, cached=[omega, summary_df, M],
+            u_fit_diagnostics=pd.DataFrame(), route=om.route, scored=scored,
+            stage_seconds=stage_seconds, cached=[summary_df, *om.cached(M)],
         )
 
     prev_match: dict | None = None
@@ -419,8 +747,18 @@ def blocked_mec(
     n_U_old = n_U_count
     convergence_reason = "max_iter"
     it = 1
-    scored = omega
     match_params = nonmatch_params = None
+
+    def full_base_needed(fit_row: dict) -> bool:
+        """The retained set fails the minimum sample: a cpar variable with
+        < 2 positives and no valid previous nonmatch fallback."""
+        prev_ok = prev_nonmatch is not None and "alpha" in prev_nonmatch
+        for i, g in enumerate(cpar_gammas):
+            fb_valid = prev_ok and math.isfinite(prev_nonmatch["alpha"][i]) \
+                and prev_nonmatch["alpha"][i] > 0
+            if fit_row[f"_pos_{g}"] < 2 and not fb_valid:
+                return True
+        return False
 
     while True:
         _iter_t0 = _sub_t0 = time.time()
@@ -443,149 +781,48 @@ def blocked_mec(
             reason = "requested_drop_zero"
         if reason is not None:
             # No alpha drop → U_fit = full U: both sides in ONE pass over Ω.
-            match_params, nonmatch_params = _estimate_sides_fused(
-                scored, M, n_M_count, b_gammas, cpar_gammas,
-                m_fallback, u_fallback,
-            )
+            row = om.fused_row(M, n_M_count)
+            match_params = _side_params_from_row(
+                row, b_gammas, cpar_gammas, "M", m_fallback, suffix="__m")
+            nonmatch_params = _side_params_from_row(
+                row, b_gammas, cpar_gammas, "U", u_fallback, suffix="__u")
             n_U_fit = n_U_count
-            diagnostics.append({
-                "iter": it, "n_U_current": n_U_count, "alpha": alpha,
-                "requested_n_drop": requested_drop, "n_U_fit": n_U_fit,
-                "alpha_applied": False, "reason": reason,
-            })
         else:
             # alpha U-drop path (T6): match side from M (full Ω if M empty —
-            # internals.R:1516-1518), then the ranked-retention U fit. The
-            # m-side stats stay a SEMI-join aggregation: the aggregate's
-            # input is |M| rows after the broadcast-semi filter, where a
-            # flagged full-Ω pass with masked aggregates was measured 105.8 s
-            # at the 400M-pair heavy anchor (vs ~1 s of semi-agg benefit at
-            # sf0.1 — tried in r6 and reverted). retain_top_n's own fused
-            # nonnull+distinct pass doubles as the U-cache materializer.
-            from automatedreclin_spark.operators.selection import _trace
-            _tt = time.time()
-            score_col = "q_est" if "q_est" in scored.columns else "ratio"
-            gammas = list(dict.fromkeys(b_gammas + cpar_gammas))
-            m_df = scored.join(M, ["a", "b"], "left_semi") if n_M_count else scored
-            match_params = _estimate_side(m_df, b_gammas, cpar_gammas, "M", m_fallback)
-            _tt = _trace("alpha m-side estimate", _tt)
-            U = scored.join(M, ["a", "b"], "left_anti")
+            # internals.R:1516-1518), then the ranked-retention U fit.
+            match_params = _side_params_from_row(
+                om.m_row(M, n_M_count), b_gammas, cpar_gammas, "M", m_fallback)
             n_keep = n_U_count - requested_drop
-            # The retention + fit make ~9 passes over U (nonnull count,
-            # rank-bracket min/max + 1-4 histogram levels, boundary counts,
-            # boundary-slice sort, minimum-sample + U-side fit) and every
-            # one references the score column, whose lazy definition is the
-            # full hurdle-gamma ratio arithmetic over Ω — ~400 s/pass at the
-            # 400M-pair heavy anchor (measured: 4,241 s side_fits, BENCH.md
-            # round-5 adjudication). Materialize ONE narrow projection
-            # (keys + score + gammas) instead, at DISK_ONLY: serialized
-            # columnar batches on local disk, zero heap pressure — unlike a
-            # full-width MEMORY_AND_DISK copy, which re-promoted
-            # deserialized blocks and OOM'd a 28 GB heap in an earlier run.
-            # Below the threshold the lazy recompute is cheaper than the
-            # write; tests monkeypatch it to 0 to pin plan-independence.
-            narrow_cols = list(dict.fromkeys(
-                ["a", "b", "block", score_col] + gammas))
-            materialized = n_U_count >= _ALPHA_U_MATERIALIZE_MIN
-            if materialized:
-                U = U.select(*narrow_cols).persist(StorageLevel.DISK_ONLY)
-            # retention order (internals.R:1831-1839): q_est desc nulls last,
-            # then (a, b, block) asc — computed scale-safe (exact-histogram
-            # filter cut when the score cardinality is bounded, sketch cut +
-            # boundary-tie resolution otherwise), NOT a global row_number
-            # window that would funnel every nonmatch through one task.
-            U_fit = retain_top_n(U, n_keep, score_col,
-                                 tie_cols=("a", "b", "block"),
-                                 n_total=n_U_count)
-            _tt = _trace("alpha retain_top_n build", _tt)
-            # ONE pass over the retained set: minimum-sample positive counts
-            # (≥2 positives per cpar var or valid fallback) fused with the
-            # U-side fit aggregates — the fit row is discarded in the rare
-            # fallback-to-full-base case, where a second pass over full U
-            # (reference semantics, internals.R:1808-1815) is unavoidable.
-            aggs: list = [
-                F.count(F.when(F.col(g) > 0, 1)).alias(f"_pos_{g}")
-                for g in cpar_gammas
-            ]
-            if b_gammas:
-                aggs += fam.binary_fit_aggs(b_gammas, "rate")
-            if cpar_gammas:
-                aggs += fam.cpar_fit_aggs(cpar_gammas, "s")
-            fit_row = U_fit.agg(*aggs).collect()[0].asDict()
-            ok = True
-            if cpar_gammas:
-                prev_ok = prev_nonmatch is not None and "alpha" in (prev_nonmatch or {})
-                for i, g in enumerate(cpar_gammas):
-                    fb_valid = prev_ok and math.isfinite(prev_nonmatch["alpha"][i]) \
-                        and prev_nonmatch["alpha"][i] > 0
-                    if fit_row[f"_pos_{g}"] < 2 and not fb_valid:
-                        ok = False
-                        break
-            if ok:
+            fit_row, full_row = om.retained_u_rows(
+                M, n_U_count, n_keep, full_base_needed)
+            if full_row is None:
                 n_U_fit = n_keep
                 reason = "alpha_reliability_drop"
             else:
                 n_U_fit = n_U_count
                 reason = "minimum_sample_full_base"
-            diagnostics.append({
-                "iter": it, "n_U_current": n_U_count, "alpha": alpha,
-                "requested_n_drop": requested_drop, "n_U_fit": n_U_fit,
-                "alpha_applied": reason == "alpha_reliability_drop", "reason": reason,
-            })
-            _tt = _trace("alpha retained-set fused agg", _tt)
             # nonmatch-side params from S_U (or full U on fallback).
-            if ok:
-                nonmatch_params = _side_params_from_row(
-                    fit_row, b_gammas, cpar_gammas, "U", u_fallback)
-            else:
-                nonmatch_params = _estimate_side(
-                    U, b_gammas, cpar_gammas, "U", u_fallback)
-            if materialized:
-                U.unpersist()
-            _trace("alpha u-side estimate", _tt)
+            nonmatch_params = _side_params_from_row(
+                fit_row if full_row is None else full_row,
+                b_gammas, cpar_gammas, "U", u_fallback)
+        diagnostics.append({
+            "iter": it, "n_U_current": n_U_count, "alpha": alpha,
+            "requested_n_drop": requested_drop, "n_U_fit": n_U_fit,
+            "alpha_applied": reason == "alpha_reliability_drop", "reason": reason,
+        })
 
         _side_fits_sec = time.time() - _sub_t0
         _sub_t0 = time.time()
-        # (d) score s = u/m with NA/neg → +Inf guard
-        #     (score_inverted_mec_ratio internals.R:1653-1686).
-        # try_divide: a zero match-side density is a legitimate "certain
-        # nonmatch" → NULL → guarded to +Inf (R semantics: x/0 = Inf, then
-        # score_inverted_mec_ratio maps NA/neg to Inf, internals.R:1683-1685).
-        expr = F.lit(1.0)
-        if b_gammas:
-            expr = expr * F.try_divide(
-                fam.bernoulli_product_expr(b_gammas, nonmatch_params["rate"]),
-                fam.bernoulli_product_expr(b_gammas, match_params["rate"]),
-            )
-        if cpar_gammas:
-            expr = expr * F.try_divide(
-                fam.hurdle_gamma_product_expr(
-                    cpar_gammas, nonmatch_params["p_0"],
-                    nonmatch_params["alpha"], nonmatch_params["beta"],
-                ),
-                fam.hurdle_gamma_product_expr(
-                    cpar_gammas, match_params["p_0"],
-                    match_params["alpha"], match_params["beta"],
-                ),
-            )
-        guarded = F.when(expr.isNull() | F.isnan(expr) | (expr < 0), F.lit(_INF)).otherwise(expr)
-        scored = omega.withColumn("ratio", guarded)
-
-        # (e) q̂ with full |U|; n_U = max(n_U_min, min(N, round Σq̂)); n_M = N − n_U.
-        scored = scored.withColumn("q_est", _q_est_expr(float(n_U_count), float(N)))
-        q_sum = float(scored.agg(F.sum("q_est")).collect()[0][0])
+        # (d)+(e) score s = u/m and q̂; n_U = max(n_U_min, min(N, round Σq̂));
+        # n_M = N − n_U.
+        q_sum = om.score(match_params, nonmatch_params, n_U_count, N)
         n_U_est = max(n_U_min, min(N, round(q_sum)))
         n_M_est = N - n_U_est
         _q_sum_sec = time.time() - _sub_t0
         _sub_t0 = time.time()
 
         # (f) new M by ascending-s greedy (T2).
-        M_new = select_mec_pairs(
-            scored, float(n_M_est), block_col="block", ascending=True,
-            invalid_to_never=True, keys_only=True,
-            duplicates_in_A=duplicates_in_A, n_pairs=N,
-        ).select("a", "b").persist(StorageLevel.MEMORY_AND_DISK)
-        n_M_new = M_new.count()
+        M_new, n_M_new = om.select(n_M_est)
         n_U_new = N - n_M_new
         iter_substage_seconds.append({
             "side_fits": round(_side_fits_sec, 2),
@@ -601,14 +838,10 @@ def blocked_mec(
         vec = np.array(vec_parts)
 
         can_check = it >= 2
-        same_set = False
-        if can_check and n_M_new == n_M_count:
-            same_set = (
-                M_new.exceptAll(M).limit(1).count() == 0
-            )
+        same_set = can_check and n_M_new == n_M_count and om.same_set(M_new, M)
         if can_check and abs(n_U_est - n_U_old) < delta:
             convergence_reason = "n_U_delta"
-        elif can_check and same_set:
+        elif same_set:
             convergence_reason = "match_set_unchanged"
         elif can_check and prev_vec is not None and len(prev_vec) == len(vec) \
                 and float(np.linalg.norm(prev_vec - vec)) < eps:
@@ -623,7 +856,7 @@ def blocked_mec(
             prev_match, prev_nonmatch, prev_vec = match_params, nonmatch_params, vec
             n_U_old = n_U_est
             iter_seconds.append(round(time.time() - _iter_t0, 2))
-            M.unpersist()
+            om.release(M)
             M = M_new
             n_M_count = n_M_new
             n_U_count = n_U_new
@@ -633,17 +866,13 @@ def blocked_mec(
             continue
 
         iter_seconds.append(round(time.time() - _iter_t0, 2))
-        M.unpersist()
+        om.release(M)
         M = M_new
         n_M_count = n_M_new
         break
 
     _stage_t0 = time.time()
-    M_est = (
-        scored.join(M, ["a", "b"], "left_semi")
-        .select("a", "b", "block", "ratio")
-        .orderBy("block", "a", "b")
-    )
+    M_est, scored = om.outputs(M)
     n_U_selected = N - n_M_count
 
     block_estimates = (
@@ -699,6 +928,7 @@ def blocked_mec(
         cpar_params=_param_table(cpar_gammas, match_params, nonmatch_params, "cpar") if cpar_gammas else None,
         block_estimates=block_estimates,
         u_fit_diagnostics=pd.DataFrame(diagnostics),
+        route=om.route,
         blocking_eval=blocking_eval,
         eval_metrics=eval_metrics,
         confusion=confusion,
@@ -706,5 +936,5 @@ def blocked_mec(
         iter_seconds=iter_seconds,
         iter_substage_seconds=iter_substage_seconds,
         stage_seconds=stage_seconds,
-        cached=[omega, summary_df, M],
+        cached=[summary_df, *om.cached(M)],
     )

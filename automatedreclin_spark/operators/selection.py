@@ -128,11 +128,13 @@ def _block_greedy_pdf(pdf: pd.DataFrame, duplicates_in_A: bool, ascending: bool,
 #: frames, and the resident-frame memory pressure degrades over the fit).
 #: The resolution is the chunked path's LOW-YIELD ESCALATION (see
 #: ``_blocked_survivors_chunked``): after a low-yield round whose tie-front
-#: zip gates out, the next round sweeps the residual WHOLE — i.e. the
-#: chunked path degenerates to at most (one capped round + one one-shot
-#: round) on adversarial tie fronts, and keeps O(cap) transfer everywhere
-#: else. With that bound the chunked path is the right default at scale,
-#: so the crossover stays at the measured 20M.
+#: zip gates out, the next round sweeps the residual WHOLE. Prefix rounds
+#: that each remove more than 10% of the residual may come before the
+#: first low-yield round; after it, the tie-fronted residual clears within
+#: about two more rounds (blocks the zip handled in the escalation round
+#: can keep a non-front-class residual for further rounds). O(cap)
+#: transfer holds everywhere else. With that the chunked path is the
+#: right default at scale, so the crossover stays at the measured 20M.
 BLOCK_SWEEP_CHUNK_MIN = int(
     os.environ.get("SPARK_GRAFT_BLOCK_SWEEP_CHUNK_MIN", "20000000"))
 #: first chunk per block = max(_BLOCK_CHUNK_FLOOR, factor · m_h) pairs
@@ -613,7 +615,7 @@ def _blocked_survivors_chunked(
         # now, treating this round's selections as used records, and save
         # the low-yield residual materializations the r5 trace measured at
         # ~58% of the iteration-2 select wall.
-        if (not zip_attempted and not full_sweep and sel is not None
+        if (not zip_attempted and sel is not None
                 and n_remaining is not None
                 and n_remaining > _TIE_FRONT_MIN_REMAINING):
             if sum_cap0 is None:

@@ -2,6 +2,7 @@
 (reference inst/tinytest/test_mec_blocking.R, scenarios re-created with
 explicit block assignments in place of the external ANN blocking run)."""
 
+import numpy as np
 import pandas as pd
 import pytest
 from pyspark.sql import functions as F
@@ -10,7 +11,16 @@ from automatedreclin_spark.functions.comparators import (
     abs_distance,
     jarowinkler_complement,
 )
+import automatedreclin_spark.models.blocked_mec as bm
 from automatedreclin_spark.models.blocked_mec import blocked_mec
+
+
+@pytest.fixture
+def route():
+    """The route the scenario tests run on at module level: the driver (the
+    default bound; every scenario here is far below it).
+    ``TestDistributedRoute`` reruns them on the distributed route."""
+    return "driver"
 
 
 def _contract(res):
@@ -28,7 +38,7 @@ def _contract(res):
         assert ((q >= 0) & (q <= 1)).all()
 
 
-def test_singleton_blocks_all_match(spark):
+def test_singleton_blocks_all_match(spark, route):
     """5×5 identical tables, 1×1 blocks → all pairs matched, n_U_est = 0
     (structural path; test_mec_blocking.R:83-163)."""
     names = ["Emma", "Liam", "Olivia", "Noah", "Ava"]
@@ -43,6 +53,7 @@ def test_singleton_blocks_all_match(spark):
     }))
     true = spark.createDataFrame(pd.DataFrame({"a": range(1, 6), "b": range(1, 6)}))
     res = blocked_mec(A, B, ["name", "surname"], true_matches=true)
+    assert res.route == route
     assert res.n_M_est == 5
     assert res.n_U_est == 0
     assert res.candidate_pair_count == 5
@@ -55,7 +66,7 @@ def test_singleton_blocks_all_match(spark):
     _contract(res)
 
 
-def test_singleton_nonmatch(spark):
+def test_singleton_nonmatch(spark, route):
     """2×2 with one shared record per block → both pairs matched
     (test_mec_blocking.R:206-233)."""
     A = spark.createDataFrame(pd.DataFrame({
@@ -67,6 +78,7 @@ def test_singleton_nonmatch(spark):
         "block": [1, 2],
     }))
     res = blocked_mec(A, B, ["name", "surname"])
+    assert res.route == route
     assert res.n_M_est == 2
     assert res.n_U_est == 0
     m = res.M_est.orderBy("a").toPandas()
@@ -74,7 +86,7 @@ def test_singleton_nonmatch(spark):
     _contract(res)
 
 
-def test_threshold_blocks(spark):
+def test_threshold_blocks(spark, route):
     """1×3 blocks: A records 1 and 4 against B triples → exactly the two
     exact-agreement pairs match, n_U_est = 4, MMR = 2/3
     (test_mec_blocking.R:235-304)."""
@@ -92,6 +104,7 @@ def test_threshold_blocks(spark):
     }))
     true = spark.createDataFrame(pd.DataFrame({"a": range(1, 7), "b": range(1, 7)}))
     res = blocked_mec(A, B, ["name", "surname"], true_matches=true)
+    assert res.route == route
     assert res.candidate_pair_count == 6
     assert res.n_M_est == 2
     assert res.n_U_est == 4
@@ -104,11 +117,9 @@ def test_threshold_blocks(spark):
     _contract(res)
 
 
-def test_cpar_blocked(spark):
-    """Mixed binary + continuous-parametric blocked fit (like fit_cpar,
-    test_mec_blocking.R:172-204) with larger fuzzy blocks."""
-    import numpy as np
-    rng = np.random.default_rng(2)
+def _cpar_case(spark):
+    """40×40 records in 5 fuzzy blocks: B names half exact copies, half
+    typo'd; two continuous-parametric gammas and one binary."""
     n = 40
     base = [f"name{i:02d}" for i in range(n)]
     sur = [f"sur{i:02d}" for i in range(n)]
@@ -123,16 +134,27 @@ def test_cpar_blocked(spark):
         "b": range(1, n + 1), "name": b_names, "surname": sur,
         "city": ["c1"] * (n // 2) + ["c2"] * (n // 2), "block": blocks,
     }))
-    res = blocked_mec(
-        A, B, ["name", "surname", "city"],
+    return A, B, dict(
+        variables=["name", "surname", "city"],
         comparators={"name": jarowinkler_complement(),
                      "surname": jarowinkler_complement()},
         methods={"name": "continuous_parametric",
                  "surname": "continuous_parametric"},
+    )
+
+
+def test_cpar_blocked(spark, route):
+    """Mixed binary + continuous-parametric blocked fit (like fit_cpar,
+    test_mec_blocking.R:172-204) with larger fuzzy blocks."""
+    A, B, fit_args = _cpar_case(spark)
+    n = 40
+    res = blocked_mec(
+        A, B, **fit_args,
         true_matches=spark.createDataFrame(
             pd.DataFrame({"a": range(1, n + 1), "b": range(1, n + 1)})
         ),
     )
+    assert res.route == route
     assert res.cpar_params is not None and res.b_params is not None
     assert list(res.cpar_params["variable"]) == ["gamma_name", "gamma_surname"]
     assert list(res.b_params["variable"]) == ["gamma_city"]
@@ -156,7 +178,7 @@ def test_alpha_validation(spark):
         blocked_mec(A, B, ["name"], methods={"name": "hit_miss"})
 
 
-def test_alpha_u_drop_diagnostics(spark):
+def test_alpha_u_drop_diagnostics(spark, route):
     """alpha > 0 exercises the U-fit drop (T6) and its reason codes."""
     import numpy as np
     rng = np.random.default_rng(6)
@@ -172,6 +194,7 @@ def test_alpha_u_drop_diagnostics(spark):
         "city": [f"c{i % 3}" for i in range(n)], "block": [i % 4 for i in range(n)],
     }))
     res = blocked_mec(A, B, ["name", "city"], alpha=0.3)
+    assert res.route == route
     d = res.u_fit_diagnostics
     assert list(d["reason"])[0] == "first_u_fit_full"
     later = set(d["reason"][1:])
@@ -198,7 +221,7 @@ def test_evaluation_diagnostics_helpers(spark):
     assert md["candidate_flr"] == pytest.approx(1 / 2)
 
 
-def test_pairs_mode_restricts_omega(spark):
+def test_pairs_mode_restricts_omega(spark, route):
     """pairs mode (the giant-component scale path): Ω is exactly the given
     candidate pairs, never the within-block cross product; nu derives from
     the pairs' distinct ids."""
@@ -215,6 +238,7 @@ def test_pairs_mode_restricts_omega(spark):
         "b": [1, 2, 2, 3, 3, 4],
     }))
     res = blocked_mec(A, B, ["name"], pairs=cand)
+    assert res.route == route
     assert res.candidate_pair_count == 6          # NOT 16
     assert res.nu == 4                            # min(4 distinct a, 4 distinct b)
     m = res.M_est.orderBy("a").toPandas()
@@ -227,11 +251,11 @@ def test_alpha_drop_scale_path_matches_window_reference(spark, monkeypatch):
     """The sketch-cut retention (retain_top_n) must reproduce the global
     row_number-window retention EXACTLY through a full alpha>0 fit: same
     M_est pairs, same per-iteration U-fit diagnostics. Binary-only gammas
-    give massively tied q_est (the hardest tie case for the cut)."""
+    give massively tied q_est (the hardest tie case for the cut). Pinned to
+    the distributed route, where retain_top_n runs."""
     import numpy as np
 
-    import automatedreclin_spark.models.blocked_mec as bm
-
+    monkeypatch.setattr(bm, "_FIT_LOCAL", 0)
     rng = np.random.default_rng(12)
     n = 120
     names = [f"n{i:03d}" for i in range(n)]
@@ -247,6 +271,7 @@ def test_alpha_drop_scale_path_matches_window_reference(spark, monkeypatch):
 
     def run():
         res = blocked_mec(A, B, ["name", "city"], alpha=0.5)
+        assert res.route == "distributed"
         m = sorted(map(tuple, res.M_est.select("a", "b").collect()))
         return m, res.u_fit_diagnostics
 
@@ -270,15 +295,9 @@ def test_alpha_drop_scale_path_matches_window_reference(spark, monkeypatch):
     assert list(d_fast["reason"]) == list(d_ref["reason"])
 
 
-def test_alpha_u_materialization_is_plan_only(spark, monkeypatch):
-    """The DISK_ONLY narrow-U materialization in the alpha-drop path is a
-    physical-plan choice only: forcing it on (threshold 0) must reproduce
-    the lazy path bit-for-bit — same M_est pairs and ratios, same side
-    params, same per-iteration diagnostics."""
-    import numpy as np
-
-    import automatedreclin_spark.models.blocked_mec as bm
-
+def _amount_case(spark):
+    """90×90 records in 4 blocks: a binary name gamma and a
+    continuous-parametric amount distance, fit with alpha = 0.4."""
     rng = np.random.default_rng(3)
     n = 90
     names = [f"n{i:03d}" for i in range(n)]
@@ -293,12 +312,24 @@ def test_alpha_u_materialization_is_plan_only(spark, monkeypatch):
         "amount": np.where(np.arange(n) % 3 == 0, vals, np.round(vals * 1.7 + 0.4, 3)),
         "block": [i % 4 for i in range(n)],
     }))
+    return A, B, dict(variables=["name", "amount"],
+                      methods={"amount": "continuous_parametric"},
+                      comparators={"amount": abs_distance()},
+                      alpha=0.4)
+
+
+def test_alpha_u_materialization_is_plan_only(spark, monkeypatch):
+    """The DISK_ONLY narrow-U materialization in the alpha-drop path is a
+    physical-plan choice only: forcing it on (threshold 0) must reproduce
+    the lazy path bit-for-bit — same M_est pairs and ratios, same side
+    params, same per-iteration diagnostics. Pinned to the distributed
+    route, the only one that materializes U."""
+    monkeypatch.setattr(bm, "_FIT_LOCAL", 0)
+    A, B, fit_args = _amount_case(spark)
 
     def run():
-        res = blocked_mec(A, B, ["name", "amount"],
-                          methods={"amount": "continuous_parametric"},
-                          comparators={"amount": abs_distance()},
-                          alpha=0.4)
+        res = blocked_mec(A, B, **fit_args)
+        assert res.route == "distributed"
         m = sorted(map(tuple, res.M_est.select("a", "b", "ratio").collect()))
         return m, res.u_fit_diagnostics, res.b_params, res.cpar_params
 
@@ -315,7 +346,7 @@ def test_alpha_u_materialization_is_plan_only(spark, monkeypatch):
     pd.testing.assert_frame_equal(pd.DataFrame(cp_mat), pd.DataFrame(cp_lazy))
 
 
-def test_duplicates_in_A_relaxes_b_reuse(spark):
+def test_duplicates_in_A_relaxes_b_reuse(spark, route):
     """`duplicates_in_A=True` (arg parity with mec(), internals.R:513-533):
     A records are used at most once but B records may repeat, so a block
     with duplicated A records can match both to the same B record. The
@@ -332,6 +363,7 @@ def test_duplicates_in_A_relaxes_b_reuse(spark):
     }))
 
     res_dup = blocked_mec(A, B, ["name", "surname"], duplicates_in_A=True)
+    assert res_dup.route == route
     m = res_dup.M_est.orderBy("a").toPandas()
     # nu = n_a per block with duplicates allowed: 2 + 1
     assert res_dup.nu == 3
@@ -340,6 +372,128 @@ def test_duplicates_in_A_relaxes_b_reuse(spark):
     assert list(m[m["a"].isin([1, 2])]["b"]) == [1, 1]
 
     res_one2one = blocked_mec(A, B, ["name", "surname"])
+    assert res_one2one.route == route
     m1 = res_one2one.M_est.toPandas()
     assert res_one2one.nu == 2
     assert m1["a"].is_unique and m1["b"].is_unique
+
+
+def test_nonfinite_gamma_raises(spark, route):
+    """The C5 guard on the blocked path: a comparator that yields NaN stops
+    the fit with the reference's error, on either route, and leaves no
+    cached data behind."""
+    persistent = spark.sparkContext._jsc.getPersistentRDDs
+    A = spark.createDataFrame(pd.DataFrame({
+        "a": [1, 2, 3], "amount": [1.0, float("nan"), 3.0], "block": [1, 1, 2]}))
+    B = spark.createDataFrame(pd.DataFrame({
+        "b": [1, 2, 3], "amount": [1.0, 2.0, 3.5], "block": [1, 1, 2]}))
+    before = persistent().size()
+    with pytest.raises(ValueError, match="missing or non-finite"):
+        blocked_mec(A, B, ["amount"], methods={"amount": "continuous_parametric"},
+                    comparators={"amount": abs_distance()},
+                    pairs=A.select("block", "a").join(B.select("block", "b"), "block"))
+    assert persistent().size() == before
+
+
+def _fit_outputs(res, M_est=None):
+    m = (res.M_est if M_est is None else M_est).toPandas()
+    return m.sort_values(["a", "b"], ignore_index=True)
+
+
+def _assert_routes_agree(drv, dist, m_drv, m_dist):
+    assert (drv.route, dist.route) == ("driver", "distributed")
+    assert (drv.iter, drv.convergence_reason) == (dist.iter, dist.convergence_reason)
+    assert (drv.n_M_est, drv.nu) == (dist.n_M_est, dist.nu)
+    pd.testing.assert_frame_equal(drv.u_fit_diagnostics, dist.u_fit_diagnostics)
+    for table in ("b_params", "cpar_params"):
+        t_drv, t_dist = getattr(drv, table), getattr(dist, table)
+        assert (t_drv is None) == (t_dist is None)
+        if t_drv is None:
+            continue
+        assert list(t_drv["variable"]) == list(t_dist["variable"])
+        for col in t_drv.columns.drop("variable"):
+            # A Gamma fit to positives that are all equal has an unbounded
+            # shape: its Newton solve turns the last bits of Σγ⁺ and
+            # Σlog γ⁺, which the routes add in different orders, into
+            # ~1e-4 of the estimate (cpar case: alpha_M ≈ 1.2e11).
+            loose = ((t_dist[f"alpha_{col[-1]}"] > 1e6)
+                     if col.startswith(("alpha_", "beta_"))
+                     else pd.Series(False, index=t_dist.index))
+            for mask, rtol in ((~loose, 1e-9), (loose, 1e-3)):
+                np.testing.assert_allclose(t_drv[col][mask], t_dist[col][mask],
+                                           rtol=rtol, atol=0, err_msg=col)
+    pd.testing.assert_frame_equal(m_drv[["a", "b", "block"]],
+                                  m_dist[["a", "b", "block"]])
+    np.testing.assert_allclose(m_drv["ratio"], m_dist["ratio"], rtol=1e-9, atol=0)
+
+
+@pytest.mark.parametrize("case", ["cpar", "alpha"])
+def test_routes_agree(spark, monkeypatch, case):
+    """The driver and the distributed route fit the same model: same match
+    keys, iterations, convergence reason and U-fit diagnostics; ratios and
+    side parameters within rtol 1e-9 (the routes sum in different orders)."""
+    A, B, fit_args = {"cpar": _cpar_case, "alpha": _amount_case}[case](spark)
+    drv = blocked_mec(A, B, **fit_args)
+    monkeypatch.setattr(bm, "_FIT_LOCAL", 0)
+    dist = blocked_mec(A, B, **fit_args)
+    if case == "alpha":
+        assert "alpha_reliability_drop" in set(dist.u_fit_diagnostics["reason"])
+    _assert_routes_agree(drv, dist, _fit_outputs(drv), _fit_outputs(dist))
+    dist.unpersist()
+
+
+def test_routes_agree_on_pipeline_corpus(spark, monkeypatch, tmp_path):
+    """The pipeline's own fit (pairs mode over connected-component blocks)
+    on both routes: the distributed fit reruns from the committed stages
+    30 and earlier of the driver run."""
+    import shutil
+
+    from automatedreclin_spark.fixtures import synth_files
+    from automatedreclin_spark.pipeline import link_repo_files
+
+    A, B, _ = synth_files(spark, n_a=250, n_b=500, seed=5)
+    ck = str(tmp_path)
+    drv = link_repo_files(spark, A, B, checkpoint_dir=ck)
+    m_drv = _fit_outputs(drv.fit, drv.matches)
+    for stage in ("40_linkage", "50_clusters", "55_entities"):
+        shutil.rmtree(f"{ck}/{stage}")
+    monkeypatch.setattr(bm, "_FIT_LOCAL", 0)
+    dist = link_repo_files(spark, A, B, checkpoint_dir=ck)
+    _assert_routes_agree(drv.fit, dist.fit, m_drv,
+                         _fit_outputs(dist.fit, dist.matches))
+
+
+def test_driver_route_ignores_partitioning(spark):
+    """The driver route sorts the collected Ω before any sum or tie break,
+    so differently partitioned copies of one candidate set give
+    bit-identical M_est, ratios included."""
+    A, B, fit_args = _cpar_case(spark)
+    pairs = (A.select("block", "a").join(B.select("block", "b"), "block")
+             .toPandas())
+    outs = []
+    for seed, parts in ((0, 1), (1, 7)):
+        copy = spark.createDataFrame(
+            pairs.sample(frac=1.0, random_state=seed)).repartition(parts)
+        res = blocked_mec(A, B, **fit_args, pairs=copy)
+        assert res.route == "driver"
+        outs.append(res.M_est.toPandas())
+    pd.testing.assert_frame_equal(outs[0], outs[1], check_exact=True)
+
+
+class TestDistributedRoute:
+    """The scenario tests above, rerun with ``_FIT_LOCAL`` = 0 so that every
+    fit takes the distributed route."""
+
+    @pytest.fixture
+    def route(self, monkeypatch):
+        monkeypatch.setattr(bm, "_FIT_LOCAL", 0)
+        return "distributed"
+
+    test_singleton_blocks_all_match = staticmethod(test_singleton_blocks_all_match)
+    test_singleton_nonmatch = staticmethod(test_singleton_nonmatch)
+    test_threshold_blocks = staticmethod(test_threshold_blocks)
+    test_cpar_blocked = staticmethod(test_cpar_blocked)
+    test_alpha_u_drop_diagnostics = staticmethod(test_alpha_u_drop_diagnostics)
+    test_pairs_mode_restricts_omega = staticmethod(test_pairs_mode_restricts_omega)
+    test_duplicates_in_A_relaxes_b_reuse = staticmethod(test_duplicates_in_A_relaxes_b_reuse)
+    test_nonfinite_gamma_raises = staticmethod(test_nonfinite_gamma_raises)

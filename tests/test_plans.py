@@ -249,3 +249,37 @@ def test_registry_fit_queries_leave_no_cache_behind(spark, name):
     before = persistent().size()
     assert QUERIES[name](spark, SF).count() > 0
     assert persistent().size() == before
+
+
+def test_blocked_mec_launches_few_jobs(spark):
+    """A fit over 10k candidate pairs runs on the driver: the block-summary
+    aggregation that yields ν and |Ω|, then one collect of Ω, comparators
+    included. Under adaptive execution those are 4 jobs each (their
+    shuffle and broadcast stages), collecting M_est included; the
+    distributed route runs ~8 jobs per iteration."""
+    import numpy as np
+    import pandas as pd
+
+    from automatedreclin_spark.functions.comparators import jarowinkler_complement
+    from automatedreclin_spark.models.blocked_mec import blocked_mec
+
+    n = 2_000
+    names = [f"name{i:05d}" for i in range(n)]
+    A = spark.createDataFrame(pd.DataFrame({"a": range(n), "name": names}))
+    B = spark.createDataFrame(pd.DataFrame({
+        "b": range(n), "name": [s if i % 3 else s[:-1] + "x" for i, s in enumerate(names)]}))
+    # blocks of 10 records on each side, 5 candidates per A record
+    rng = np.random.default_rng(3)
+    a = np.repeat(np.arange(n), 5)
+    b = (a // 10) * 10 + np.concatenate(
+        [rng.choice(10, 5, replace=False) for _ in range(n)])
+    pairs = spark.createDataFrame(
+        pd.DataFrame({"block": a // 10, "a": a, "b": b}).drop_duplicates(["a", "b"]))
+    before = _job_ids(spark)
+    res = blocked_mec(A, B, ["name"], comparators={"name": jarowinkler_complement()},
+                      methods={"name": "continuous_parametric"}, pairs=pairs)
+    assert res.M_est.collect()
+    launched = _job_ids(spark) - before
+    res.unpersist()
+    assert res.route == "driver" and res.iter >= 2
+    assert len(launched) <= 8, len(launched)
