@@ -9,6 +9,7 @@ implemented as:
     <base>/<stage>/data/          parquet snapshot (atomic via _SUCCESS)
     <base>/<stage>/manifest.json  row count, per-partition row counts
                                   (lineage counters), user metadata, schema
+                                  (read back with it: no inference job)
     <base>/<stage>/_COMMITTED     commit marker written LAST
 
 Every counter comes from the write itself: ``rows`` and any stage-specific
@@ -35,6 +36,7 @@ from typing import Any, Callable, Sequence
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 _PART_FILE = re.compile(r"part-(\d+)")
 
@@ -91,7 +93,12 @@ class CheckpointManager:
         sdir = self._stage_dir(name)
         data_dir = sdir / "data"
         if self.resume and self.is_committed(name):
-            return self.spark.read.parquet(str(data_dir))
+            schema = (self.manifest(name) or {}).get("schema")
+            # Manifests written before the schema was stored as JSON hold
+            # its simpleString; their snapshots are read by inference.
+            reader = (self.spark.read.schema(StructType.fromJson(schema))
+                      if isinstance(schema, dict) else self.spark.read)
+            return reader.parquet(str(data_dir))
 
         # Validate declared inputs BEFORE running the builder: a typo'd
         # upstream name should fail in milliseconds, not after hours of
@@ -116,7 +123,7 @@ class CheckpointManager:
         meta = dict(meta or {})
         for o in observations:
             meta.update(o.get)
-        out = self.spark.read.parquet(str(data_dir))
+        out = self.spark.read.schema(df.schema).parquet(str(data_dir))
         per_part = _rows_per_partition(data_dir)
         # Explicit rows_in lineage: each named upstream stage's committed
         # rows_out, read from its manifest (committed strictly before us).
@@ -141,7 +148,7 @@ class CheckpointManager:
             "rows_in": rows_in,
             "inputs": inputs_rows,
             "partitions": per_part,
-            "schema": out.schema.simpleString(),
+            "schema": out.schema.jsonValue(),
             "elapsed_sec": round(time.time() - t0, 3),
             "meta": meta,
         }

@@ -7,13 +7,23 @@ scale path: blocking bounds the pair space, the classifier is fit INVERTED
 probability), and the structural bounds come from the block summary
 (ν = Σ min(n_Ah, n_Bh); n_U_min = N − ν).
 
-One fit loop, two routes for the operations over Ω. The block-summary
-aggregation that yields ν also yields N = |Ω|, before any comparator runs:
-- **driver** (N < ``_FIT_LOCAL``): the narrow Ω (block, a, b, gammas) is
-  collected once — the comparators run inside that collect — and init,
-  every iteration and the outputs run in numpy (``_LocalOmega``). A fit
-  is one Ω collect plus the block-summary aggregation, whatever its
-  iteration count; ``M_est`` and ``scored`` are local frames.
+One fit loop, two routes for the operations over Ω, chosen by |Ω|:
+- **driver** (|Ω| < ``_FIT_LOCAL``): init, every iteration and the outputs
+  run in numpy over Ω on the driver (``_LocalOmega``); ``M_est`` and
+  ``scored`` are local frames. Ω is built there in four steps:
+    1. one bounded collect of the (block, a, b) keys, at most
+       ``_FIT_LOCAL`` rows: fewer decides the route, and block sizes, ν
+       and |Ω| then come from pandas (pairs mode);
+    2. one collect, both sides at once, of the comparators' *prepared*
+       values (``Comparator.prep``, evaluated once per record by Spark) for
+       the records Ω references;
+    3. the gammas from each comparator's numpy form
+       (``Comparator.local``), in bounded chunks of pairs;
+    4. the fit.
+  A comparator with no local form, prepared values whose types differ
+  between the sides, or prepared values over ``_PREP_BUDGET`` bytes keep
+  the Spark build instead: Ω, comparators included, collected from the
+  pair join. ``BlockedMecResult.omega_build`` names the build taken.
 - **distributed** (``_SparkOmega``): Ω is persisted once, then per iteration
     1 fused agg over Ω → match- and nonmatch-side params (driver Newton
       with the fallback chain)
@@ -36,9 +46,21 @@ from typing import Any, Callable
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame
+import pyarrow as pa
+import pyarrow.compute as pc
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.types import DoubleType, StructField, StructType
+from pyspark.sql.types import (
+    ArrayType,
+    AtomicType,
+    BinaryType,
+    DataType,
+    DoubleType,
+    LongType,
+    StringType,
+    StructField,
+    StructType,
+)
 from pyspark.storagelevel import StorageLevel
 
 from automatedreclin_spark.functions.numerics import gamma_shape_newton
@@ -65,6 +87,17 @@ _INF = float("inf")
 #: clustering._FINISH_LOCAL's edge bound). From it up, Ω stays distributed;
 #: 0 keeps every fit distributed.
 _FIT_LOCAL = 2_000_000
+
+#: Driver bytes (Arrow payload and offsets) the prepared values of the
+#: records Ω references may take; above it the driver route collects Ω from
+#: the Spark pair join instead. Each record is first sent only if it is
+#: within its even share of the budget, so the driver never holds more.
+_PREP_BUDGET = 256 << 20
+
+#: Bounds on one chunk of pairs handed to the comparators' numpy forms: the
+#: rows, and the prepared bytes of their two records.
+_CHUNK_ROWS = 1 << 16
+_CHUNK_BYTES = 64 << 20
 
 #: alpha U-drop path: materialize the narrow U projection (keys + score +
 #: gammas, DISK_ONLY) once per iteration when |U| is at least this, so the
@@ -96,9 +129,12 @@ class BlockedMecResult:
     cpar_params: pd.DataFrame | None
     block_estimates: DataFrame | None
     u_fit_diagnostics: pd.DataFrame
-    #: where the Ω operations ran: "driver" (numpy over one Ω collect) or
+    #: where the Ω operations ran: "driver" (numpy over Ω on the driver) or
     #: "distributed" (Spark jobs over the persisted Ω)
     route: str
+    #: how Ω's gammas were computed: "records" (numpy over per-record
+    #: prepared values, driver route only) or "spark" (the Spark pair join)
+    omega_build: str
     blocking_eval: dict[str, float] | None = None
     eval_metrics: dict[str, float] | None = None
     confusion: list[list[int]] | None = None
@@ -107,9 +143,12 @@ class BlockedMecResult:
     #: iteration, their substage split (side_fits = M/U parameter estimation
     #: incl. the alpha retention passes; q_sum = scoring and Σq̂;
     #: select = greedy + truncation + new-M count/convergence),
-    #: and the non-iterative stages (init_agg = the guard agg that
-    #: materializes the Ω cache, or on the driver route the Ω collect;
-    #: init_select = the ascending init greedy of ν pairs).
+    #: and the non-iterative stages (pair_setup = the pair plans and, where
+    #: Spark computes it, the block summary; init_agg = building Ω: on the
+    #: driver route the keys collect, the prepared-record collects and the
+    #: numpy comparators (or the Spark Ω collect), on the distributed route
+    #: the guard agg that materializes the Ω cache; init_select = the
+    #: ascending init greedy of ν pairs; final_summary = the outputs).
     iter_seconds: list[float] = field(default_factory=list)
     iter_substage_seconds: list[dict[str, float]] = field(default_factory=list)
     stage_seconds: dict[str, float] = field(default_factory=dict)
@@ -457,22 +496,160 @@ def _bernoulli_product_local(G: dict[str, np.ndarray], gammas: list[str],
     return out
 
 
+def _collect_keys(pair_df: DataFrame) -> pa.Table | None:
+    """Ω's (block, a, b) keys when it has fewer than ``_FIT_LOCAL`` rows, in
+    one bounded collect; None when Ω stays distributed."""
+    if _FIT_LOCAL <= 0:
+        return None
+    keys = pair_df.limit(_FIT_LOCAL).toArrow()
+    return keys if keys.num_rows < _FIT_LOCAL else None
+
+
+def _summary_local(keys: pd.DataFrame, duplicates_in_A: bool
+                   ) -> tuple[pd.DataFrame, int]:
+    """The pairs-mode block summary and ν from the collected keys: the
+    distinct ids per block (NULL ignored, as ``count_distinct`` does)."""
+    by_block = keys.groupby("block", dropna=False, sort=False)
+    summary = pd.DataFrame({
+        "n_a": by_block["a"].nunique(), "n_b": by_block["b"].nunique(),
+        "pair_count": by_block.size(),
+    }).reset_index()
+    cap = summary["n_a"] if duplicates_in_A else summary[["n_a", "n_b"]].min(axis=1)
+    summary["nonmatches_min"] = summary["pair_count"] - cap
+    return summary, int(cap.sum())
+
+
+def _local_type_ok(t: DataType) -> bool:
+    """Prepared types the numpy forms see exactly through Arrow: atomic
+    values and string lists, strings only in the default collation (Spark
+    compares a collated string by its collation)."""
+    if isinstance(t, ArrayType):
+        return t.elementType == StringType()
+    if isinstance(t, StringType):
+        return t == StringType()
+    return isinstance(t, AtomicType)
+
+
+def _prepared_bytes(col: Column, t: DataType) -> Column:
+    """Arrow bytes of one prepared value: payload plus a 4-byte offset per
+    string and per list; 16 for any fixed-width value."""
+    if isinstance(t, (StringType, BinaryType)):
+        size = F.octet_length(col) + 4
+    elif isinstance(t, ArrayType):
+        size = F.octet_length(F.array_join(col, "")) + 4 * F.size(col) + 4
+    else:
+        size = F.lit(16)
+    return F.coalesce(size.cast("long"), F.lit(0).cast("long"))
+
+
+def _chunks(weights: np.ndarray):
+    """Consecutive row ranges of at most ``_CHUNK_ROWS`` rows and
+    ``_CHUNK_BYTES`` summed weight (one row at least)."""
+    ends = np.cumsum(weights)
+    start, n = 0, len(weights)
+    while start < n:
+        base = ends[start - 1] if start else 0
+        stop = int(np.searchsorted(ends, base + _CHUNK_BYTES, side="right"))
+        stop = min(max(stop, start + 1), start + _CHUNK_ROWS, n)
+        yield start, stop
+        start = stop
+
+
+def _omega_from_records(keys: pd.DataFrame, A: DataFrame, B: DataFrame,
+                        cv, a_col: str, b_col: str) -> pd.DataFrame | None:
+    """Ω (the keys plus one gamma column per variable) from the prepared
+    values of the records the keys reference, or None when this build does
+    not apply: a comparator has no local form, a prepared type differs
+    between the sides or has no exact Arrow form, an id repeats or is not
+    found, or the prepared values exceed ``_PREP_BUDGET``."""
+    comps = [cv.comparators[v] for v in cv.variables]
+    if any(c.local is None for c in comps):
+        return None
+    cols = [f"_p{i}" for i in range(len(comps))]
+    id_types = [A.schema[a_col].dataType, B.schema[b_col].dataType]
+    # Both sides in one frame, so that each collect is one job: a row's
+    # id sits in its side's column, "_a" or "_b", and the other is NULL.
+    sides = []
+    for side, (R, id_col) in enumerate(((A, a_col), (B, b_col))):
+        id_cols = [F.lit(None).cast(t) for t in id_types]
+        id_cols[side] = F.col(id_col)
+        sides.append(R.select(
+            *[c.alias(k) for c, k in zip(id_cols, ("_a", "_b"))],
+            *[c.prep(F.col(v)).alias(p) for v, c, p in zip(cv.variables, comps, cols)]))
+    types = [[df.schema[p].dataType for p in cols] for df in sides]
+    if types[0] != types[1] or not all(map(_local_type_ok, types[0])):
+        return None
+    sides = [df.withColumn("_bytes", sum(_prepared_bytes(F.col(p), t)
+                                         for p, t in zip(cols, types[0])))
+             for df in sides]
+
+    def collect(ids: list, limit: int | None) -> pa.Table:
+        """The records with these ids per side, each with its prepared
+        bytes; with ``limit``, values only for records within it."""
+        parts = []
+        for df, k, side_ids in zip(sides, ("_a", "_b"), ids):
+            id_df = A.sparkSession.createDataFrame(
+                pd.DataFrame({k: side_ids}), StructType([df.schema[k]]))
+            parts.append(df.join(F.broadcast(id_df), k, "left_semi"))
+        shown = cols if limit is None else [
+            F.when(F.col("_bytes") <= limit, F.col(p)).alias(p) for p in cols]
+        return parts[0].unionByName(parts[1]).select(
+            "_a", "_b", *shown, "_bytes").toArrow()
+
+    ids = [keys[k].drop_duplicates() for k in ("a", "b")]
+    # A record over its even share of the budget sends only its size, and
+    # its values once the total is known to fit.
+    share = _PREP_BUDGET // max(1, len(ids[0]) + len(ids[1]))
+    table = collect(ids, share)
+    nbytes = table["_bytes"].to_numpy()
+    if nbytes.sum() > _PREP_BUDGET:
+        return None
+    over = nbytes > share
+    if over.any():
+        held = table.filter(pa.array(over))
+        extra = collect([held[k].drop_null().to_pandas() for k in ("_a", "_b")], None)
+        table = pa.concat_tables([table.filter(pa.array(~over)),
+                                  extra.cast(table.schema)])
+
+    rows, values, weights = [], [], []
+    for k in ("a", "b"):
+        side = table.filter(pc.is_valid(table[f"_{k}"]))
+        index = pd.Index(side[f"_{k}"].to_numpy(zero_copy_only=False))
+        if not index.is_unique:
+            return None
+        rows.append(index.get_indexer(keys[k]))
+        values.append([side[p].combine_chunks() for p in cols])
+        weights.append(side["_bytes"].to_numpy())
+    ia, ib = rows
+    if (ia < 0).any() or (ib < 0).any():
+        return None
+
+    gammas = {g: np.empty(len(keys)) for g in cv.gamma_cols}
+    for start, stop in _chunks(weights[0][ia] + weights[1][ib]):
+        take_a, take_b = pa.array(ia[start:stop]), pa.array(ib[start:stop])
+        for c, g, xa, xb in zip(comps, cv.gamma_cols, *values):
+            gammas[g][start:stop] = c.local(xa.take(take_a), xb.take(take_b))
+    return keys.assign(**gammas)
+
+
 class _LocalOmega:
-    """The driver route: the narrow Ω collected once, sorted by (a, b,
-    block) so that every sum and tie order is independent of the order
-    partitions arrive in; every statistic, score and selection is numpy
-    over its columns. A match set is a boolean row mask."""
+    """The driver route: Ω on the driver, sorted by (a, b, block) so that
+    every sum and tie order is independent of the order partitions arrive
+    in; every statistic, score and selection is numpy over its columns. A
+    match set is a boolean row mask. ``pdf`` holds the columns of
+    ``schema``, the Spark Ω's."""
 
     route = "driver"
 
-    def __init__(self, omega: DataFrame, variables: list[str],
-                 gamma_cols: list[str], b_gammas: list[str],
-                 cpar_gammas: list[str], duplicates_in_A: bool):
+    def __init__(self, pdf: pd.DataFrame, schema: StructType, spark,
+                 variables: list[str], gamma_cols: list[str],
+                 b_gammas: list[str], cpar_gammas: list[str],
+                 duplicates_in_A: bool):
         self.b_gammas, self.cpar_gammas = b_gammas, cpar_gammas
         self.duplicates_in_A = duplicates_in_A
-        self.spark, self.schema = omega.sparkSession, omega.schema
-        self.pdf = omega.toPandas().sort_values(["a", "b", "block"],
-                                                ignore_index=True)
+        self.spark, self.schema = spark, schema
+        self.pdf = pdf[schema.names].sort_values(["a", "b", "block"],
+                                                 ignore_index=True)
         G = {g: self.pdf[g].to_numpy(np.float64) for g in gamma_cols}
         raise_if_nonfinite(
             {f"_nf_{g}": int((~np.isfinite(G[g])).sum()) for g in gamma_cols},
@@ -645,7 +822,7 @@ def blocked_mec(
         pair_df = block_pairs(A, B, block_col=block_col, a_col=a_col, b_col=b_col,
                               dedup=False)
         summary_df = summary.summary
-        n_pairs = summary.candidate_pair_count
+        fits_driver = summary.candidate_pair_count < _FIT_LOCAL
         if duplicates_in_A:
             # Blocks present only in A have n_b = 0 (block_summary full outer
             # join) → pair_count = 0 while _cap = n_a > 0; clamp so the
@@ -661,18 +838,27 @@ def blocked_mec(
             nu = summary.nu
     else:
         pair_df = pairs.select(F.col(block_col).alias("block"), "a", "b")
-        summary_df = pair_df.groupBy("block").agg(
-            F.count_distinct("a").alias("n_a"),
-            F.count_distinct("b").alias("n_b"),
-            F.count(F.lit(1)).alias("pair_count"),
-        ).withColumn(
-            "nonmatches_min", F.col("pair_count") - _cap
-        ).persist(StorageLevel.MEMORY_AND_DISK)
-        # |Ω| rides along with ν: the route is chosen before any comparator
-        # runs, at no extra job.
-        totals = summary_df.agg(F.sum(_cap).alias("nu"),
-                                F.sum("pair_count").alias("n")).collect()[0]
-        nu, n_pairs = int(totals["nu"] or 0), int(totals["n"] or 0)
+        fits_driver = True   # unless the bounded keys collect fills up
+    keys_s = time.time()
+    keys = _collect_keys(pair_df) if fits_driver else None
+    keys_s = time.time() - keys_s
+    if pairs is not None:
+        # On the driver route the block summary comes from the keys.
+        if keys is not None:
+            summary_pdf, nu = _summary_local(keys.to_pandas(), duplicates_in_A)
+            counts = [StructField(c, LongType(), False)
+                      for c in ("n_a", "n_b", "pair_count", "nonmatches_min")]
+            summary_df = A.sparkSession.createDataFrame(
+                summary_pdf, StructType([pair_df.schema["block"], *counts]))
+        else:
+            summary_df = pair_df.groupBy("block").agg(
+                F.count_distinct("a").alias("n_a"),
+                F.count_distinct("b").alias("n_b"),
+                F.count(F.lit(1)).alias("pair_count"),
+            ).withColumn(
+                "nonmatches_min", F.col("pair_count") - _cap
+            ).persist(StorageLevel.MEMORY_AND_DISK)
+            nu = int(summary_df.agg(F.sum(_cap)).collect()[0][0] or 0)
     # check_finite=False: each route runs the C5 guard over the Ω it
     # materializes, so the comparators execute exactly once per pair.
     cv = comparison_vectors(
@@ -698,20 +884,29 @@ def blocked_mec(
         {"alpha": list(start_cpar["alpha_M"]), "beta": list(start_cpar["beta_M"])}
         if start_cpar else None
     )
-    stage_seconds["pair_setup"] = round(time.time() - _stage_t0, 2)
+    stage_seconds["pair_setup"] = round(time.time() - _stage_t0 - keys_s, 2)
 
     _stage_t0 = time.time()
-    omega_ops = _LocalOmega if n_pairs < _FIT_LOCAL else _SparkOmega
+    fit_args = (variables, cv.gamma_cols, b_gammas, cpar_gammas, duplicates_in_A)
     try:
-        om = omega_ops(cv.omega, variables, cv.gamma_cols, b_gammas,
-                       cpar_gammas, duplicates_in_A)
+        if keys is None:
+            om, omega_build = _SparkOmega(cv.omega, *fit_args), "spark"
+        else:
+            # The pair join drops pairs with a NULL id; so does this build.
+            keys = keys.filter(pc.and_(pc.is_valid(keys["a"]),
+                                       pc.is_valid(keys["b"]))).to_pandas()
+            pdf = _omega_from_records(keys, A, B, cv, a_col, b_col)
+            omega_build = "records"
+            if pdf is None:
+                pdf, omega_build = cv.omega.toPandas(), "spark"
+            om = _LocalOmega(pdf, cv.omega.schema, A.sparkSession, *fit_args)
     except ValueError:  # the C5 guard: leave no cache behind
         summary_df.unpersist()
         raise
     N = om.n
     cv._n = N
     n_U_min = N - nu
-    stage_seconds["init_agg"] = round(time.time() - _stage_t0, 2)
+    stage_seconds["init_agg"] = round(time.time() - _stage_t0 + keys_s, 2)
 
     _stage_t0 = time.time()
     # Init: disagreement norm (C6) → ascending greedy pick of ν pairs (T2).
@@ -737,7 +932,8 @@ def blocked_mec(
             convergence_reason="structural_no_nonmatch_complement",
             alpha=alpha, n_U_fit=0, b_params=None, cpar_params=None,
             block_estimates=None,
-            u_fit_diagnostics=pd.DataFrame(), route=om.route, scored=scored,
+            u_fit_diagnostics=pd.DataFrame(), route=om.route,
+            omega_build=omega_build, scored=scored,
             stage_seconds=stage_seconds, cached=[summary_df, *om.cached(M)],
         )
 
@@ -929,6 +1125,7 @@ def blocked_mec(
         block_estimates=block_estimates,
         u_fit_diagnostics=pd.DataFrame(diagnostics),
         route=om.route,
+        omega_build=omega_build,
         blocking_eval=blocking_eval,
         eval_metrics=eval_metrics,
         confusion=confusion,

@@ -3,8 +3,11 @@
 Input: two record sets of the ``files`` table (repo, path, commit, lang,
 content) with stable ids. Stages, each checkpointed (see checkpoint.py):
 
-  10_records     record prep: content_sha = sha256(content) (the per-row
-                 invariant), token arrays — narrow, no shuffle
+  10_records     record prep: the record columns plus content_sha =
+                 sha256(content) (the per-row invariant) — no shuffle. No
+                 tokens are stored: blocking splits path and content itself,
+                 and the fit splits each record's content once (the
+                 comparator's prepared form) when it builds Ω
   20_candidates  multi-probe minhash blocking (path + content probes) →
                  candidate pairs, deduped on (a, b) — the ONLY quadratic-risk
                  shuffle, bounded by bucket counts + per-block caps
@@ -13,7 +16,8 @@ content) with stable ids. Stages, each checkpointed (see checkpoint.py):
                  transitively share a block; everything else never meets) —
                  this is what makes the per-block greedy EXACT at any scale
   40_linkage     blocked inverted MEC fit on the component blocks
-                 (binary sha-equality + continuous path/content distances)
+                 (binary sha-equality + continuous path/content distances);
+                 the manifest's meta names the fit's route and Ω build
   50_clusters    transitive closure of accepted matches → entity_id,
                  carrying content_sha for the invariant check
 
@@ -186,6 +190,7 @@ def link_repo_files(
         )
     matches = ck.stage(
         "40_linkage", lambda: fit.M_est,
+        meta={"route": fit.route, "omega_build": fit.omega_build} if fit else None,
         inputs=["10_records_A", "10_records_B", "20_candidates", "30_components"],
     )
     if fit is not None:

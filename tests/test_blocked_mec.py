@@ -10,6 +10,8 @@ from pyspark.sql import functions as F
 from automatedreclin_spark.functions.comparators import (
     abs_distance,
     jarowinkler_complement,
+    levenshtein_norm,
+    token_jaccard,
 )
 import automatedreclin_spark.models.blocked_mec as bm
 from automatedreclin_spark.models.blocked_mec import blocked_mec
@@ -17,10 +19,11 @@ from automatedreclin_spark.models.blocked_mec import blocked_mec
 
 @pytest.fixture
 def route():
-    """The route the scenario tests run on at module level: the driver (the
-    default bound; every scenario here is far below it).
-    ``TestDistributedRoute`` reruns them on the distributed route."""
-    return "driver"
+    """The route and Ω build the scenario tests run on at module level: the
+    driver, with Ω built from the records' prepared values (the default
+    bounds; every scenario here is far below them). ``TestDistributedRoute``
+    reruns them on the distributed route."""
+    return "driver", "records"
 
 
 def _contract(res):
@@ -53,7 +56,7 @@ def test_singleton_blocks_all_match(spark, route):
     }))
     true = spark.createDataFrame(pd.DataFrame({"a": range(1, 6), "b": range(1, 6)}))
     res = blocked_mec(A, B, ["name", "surname"], true_matches=true)
-    assert res.route == route
+    assert (res.route, res.omega_build) == route
     assert res.n_M_est == 5
     assert res.n_U_est == 0
     assert res.candidate_pair_count == 5
@@ -78,7 +81,7 @@ def test_singleton_nonmatch(spark, route):
         "block": [1, 2],
     }))
     res = blocked_mec(A, B, ["name", "surname"])
-    assert res.route == route
+    assert (res.route, res.omega_build) == route
     assert res.n_M_est == 2
     assert res.n_U_est == 0
     m = res.M_est.orderBy("a").toPandas()
@@ -104,7 +107,7 @@ def test_threshold_blocks(spark, route):
     }))
     true = spark.createDataFrame(pd.DataFrame({"a": range(1, 7), "b": range(1, 7)}))
     res = blocked_mec(A, B, ["name", "surname"], true_matches=true)
-    assert res.route == route
+    assert (res.route, res.omega_build) == route
     assert res.candidate_pair_count == 6
     assert res.n_M_est == 2
     assert res.n_U_est == 4
@@ -154,7 +157,7 @@ def test_cpar_blocked(spark, route):
             pd.DataFrame({"a": range(1, n + 1), "b": range(1, n + 1)})
         ),
     )
-    assert res.route == route
+    assert (res.route, res.omega_build) == route
     assert res.cpar_params is not None and res.b_params is not None
     assert list(res.cpar_params["variable"]) == ["gamma_name", "gamma_surname"]
     assert list(res.b_params["variable"]) == ["gamma_city"]
@@ -194,7 +197,7 @@ def test_alpha_u_drop_diagnostics(spark, route):
         "city": [f"c{i % 3}" for i in range(n)], "block": [i % 4 for i in range(n)],
     }))
     res = blocked_mec(A, B, ["name", "city"], alpha=0.3)
-    assert res.route == route
+    assert (res.route, res.omega_build) == route
     d = res.u_fit_diagnostics
     assert list(d["reason"])[0] == "first_u_fit_full"
     later = set(d["reason"][1:])
@@ -238,7 +241,7 @@ def test_pairs_mode_restricts_omega(spark, route):
         "b": [1, 2, 2, 3, 3, 4],
     }))
     res = blocked_mec(A, B, ["name"], pairs=cand)
-    assert res.route == route
+    assert (res.route, res.omega_build) == route
     assert res.candidate_pair_count == 6          # NOT 16
     assert res.nu == 4                            # min(4 distinct a, 4 distinct b)
     m = res.M_est.orderBy("a").toPandas()
@@ -363,7 +366,7 @@ def test_duplicates_in_A_relaxes_b_reuse(spark, route):
     }))
 
     res_dup = blocked_mec(A, B, ["name", "surname"], duplicates_in_A=True)
-    assert res_dup.route == route
+    assert (res_dup.route, res_dup.omega_build) == route
     m = res_dup.M_est.orderBy("a").toPandas()
     # nu = n_a per block with duplicates allowed: 2 + 1
     assert res_dup.nu == 3
@@ -372,7 +375,7 @@ def test_duplicates_in_A_relaxes_b_reuse(spark, route):
     assert list(m[m["a"].isin([1, 2])]["b"]) == [1, 1]
 
     res_one2one = blocked_mec(A, B, ["name", "surname"])
-    assert res_one2one.route == route
+    assert (res_one2one.route, res_one2one.omega_build) == route
     m1 = res_one2one.M_est.toPandas()
     assert res_one2one.nu == 2
     assert m1["a"].is_unique and m1["b"].is_unique
@@ -393,6 +396,68 @@ def test_nonfinite_gamma_raises(spark, route):
                     comparators={"amount": abs_distance()},
                     pairs=A.select("block", "a").join(B.select("block", "b"), "block"))
     assert persistent().size() == before
+
+
+def test_null_token_content_raises(spark, route):
+    """token_jaccard scores a NULL content as NULL, not as agreement, so
+    the C5 guard stops the fit, whichever way Ω is built."""
+    persistent = spark.sparkContext._jsc.getPersistentRDDs
+    A = spark.createDataFrame(pd.DataFrame({
+        "a": [1, 2, 3], "content": ["x y", None, "z"], "block": [1, 1, 2]}))
+    B = spark.createDataFrame(pd.DataFrame({
+        "b": [1, 2, 3], "content": ["x y", "y", "z w"], "block": [1, 1, 2]}))
+    before = persistent().size()
+    with pytest.raises(ValueError, match=r"missing or non-finite.*content \(2 invalid"):
+        blocked_mec(A, B, ["content"], methods={"content": "continuous_parametric"},
+                    comparators={"content": token_jaccard()},
+                    pairs=A.select("block", "a").join(B.select("block", "b"), "block"))
+    assert persistent().size() == before
+
+
+def _long_record_case(spark):
+    """12×12 records in 3 blocks; one record per side has a 3,000-character
+    name, far above any other record's prepared size."""
+    names = ["alpha", "bravo", "charlie", "delta", "echo", "fox",
+             "golf", "hotel", "india", "juliet", "kilo", "x" * 3000]
+    b_names = [s if i % 3 else s[:-1] + "q" for i, s in enumerate(names)]
+    blocks = [i // 4 for i in range(12)]
+    A = spark.createDataFrame(pd.DataFrame({
+        "a": range(12), "name": names, "city": [f"c{i % 2}" for i in range(12)],
+        "block": blocks}))
+    B = spark.createDataFrame(pd.DataFrame({
+        "b": range(12), "name": b_names, "city": [f"c{i % 2}" for i in range(12)],
+        "block": blocks}))
+    return A, B, dict(variables=["name", "city"],
+                      comparators={"name": jarowinkler_complement()},
+                      methods={"name": "continuous_parametric"})
+
+
+def test_omega_builds_agree_and_budget_bounds_records(spark, monkeypatch):
+    """The driver route builds the same Ω from the records' prepared values
+    as the Spark pair join: bit-identical M_est. The budget bounds the
+    prepared bytes of all referenced records together (24 records, 6,346
+    bytes): a record over its even share of the budget is fetched in a
+    second pass once the total is known to fit, and a total over the
+    budget falls back to the Spark build."""
+    A, B, fit_args = _long_record_case(spark)
+    outs = {}
+    for budget, build in ((bm._PREP_BUDGET, "records"), (7_000, "records"),
+                          (6_000, "spark")):
+        monkeypatch.setattr(bm, "_PREP_BUDGET", budget)
+        res = blocked_mec(A, B, **fit_args)
+        assert (res.route, res.omega_build) == ("driver", build), budget
+        outs[budget] = res.M_est.toPandas()
+        _contract(res)
+    for m in outs.values():
+        pd.testing.assert_frame_equal(m, outs[bm._PREP_BUDGET], check_exact=True)
+
+
+def test_comparator_without_local_form_uses_spark_build(spark):
+    A, B, fit_args = _long_record_case(spark)
+    fit_args["comparators"] = {"name": levenshtein_norm()}
+    res = blocked_mec(A, B, **fit_args)
+    assert (res.route, res.omega_build) == ("driver", "spark")
+    _contract(res)
 
 
 def _fit_outputs(res, M_est=None):
@@ -448,17 +513,25 @@ def test_routes_agree_on_pipeline_corpus(spark, monkeypatch, tmp_path):
     30 and earlier of the driver run."""
     import shutil
 
+    from automatedreclin_spark.checkpoint import CheckpointManager
     from automatedreclin_spark.fixtures import synth_files
     from automatedreclin_spark.pipeline import link_repo_files
 
     A, B, _ = synth_files(spark, n_a=250, n_b=500, seed=5)
     ck = str(tmp_path)
+    builds = {}
     drv = link_repo_files(spark, A, B, checkpoint_dir=ck)
+    builds["driver"] = CheckpointManager(spark, ck).manifest("40_linkage")["meta"]
     m_drv = _fit_outputs(drv.fit, drv.matches)
     for stage in ("40_linkage", "50_clusters", "55_entities"):
         shutil.rmtree(f"{ck}/{stage}")
     monkeypatch.setattr(bm, "_FIT_LOCAL", 0)
     dist = link_repo_files(spark, A, B, checkpoint_dir=ck)
+    builds["distributed"] = CheckpointManager(spark, ck).manifest("40_linkage")["meta"]
+    assert builds == {
+        "driver": {"route": "driver", "omega_build": "records"},
+        "distributed": {"route": "distributed", "omega_build": "spark"},
+    }
     _assert_routes_agree(drv.fit, dist.fit, m_drv,
                          _fit_outputs(dist.fit, dist.matches))
 
@@ -487,7 +560,7 @@ class TestDistributedRoute:
     @pytest.fixture
     def route(self, monkeypatch):
         monkeypatch.setattr(bm, "_FIT_LOCAL", 0)
-        return "distributed"
+        return "distributed", "spark"
 
     test_singleton_blocks_all_match = staticmethod(test_singleton_blocks_all_match)
     test_singleton_nonmatch = staticmethod(test_singleton_nonmatch)
@@ -497,3 +570,20 @@ class TestDistributedRoute:
     test_pairs_mode_restricts_omega = staticmethod(test_pairs_mode_restricts_omega)
     test_duplicates_in_A_relaxes_b_reuse = staticmethod(test_duplicates_in_A_relaxes_b_reuse)
     test_nonfinite_gamma_raises = staticmethod(test_nonfinite_gamma_raises)
+    test_null_token_content_raises = staticmethod(test_null_token_content_raises)
+
+
+class TestSparkOmegaBuild:
+    """Scenario tests rerun on the driver route with a prepared-value
+    budget of 0 bytes, so that Ω comes from the Spark pair join."""
+
+    @pytest.fixture
+    def route(self, monkeypatch):
+        monkeypatch.setattr(bm, "_PREP_BUDGET", 0)
+        return "driver", "spark"
+
+    test_threshold_blocks = staticmethod(test_threshold_blocks)
+    test_cpar_blocked = staticmethod(test_cpar_blocked)
+    test_pairs_mode_restricts_omega = staticmethod(test_pairs_mode_restricts_omega)
+    test_nonfinite_gamma_raises = staticmethod(test_nonfinite_gamma_raises)
+    test_null_token_content_raises = staticmethod(test_null_token_content_raises)

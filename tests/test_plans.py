@@ -252,11 +252,13 @@ def test_registry_fit_queries_leave_no_cache_behind(spark, name):
 
 
 def test_blocked_mec_launches_few_jobs(spark):
-    """A fit over 10k candidate pairs runs on the driver: the block-summary
-    aggregation that yields ν and |Ω|, then one collect of Ω, comparators
-    included. Under adaptive execution those are 4 jobs each (their
-    shuffle and broadcast stages), collecting M_est included; the
-    distributed route runs ~8 jobs per iteration."""
+    """A fit over 10k candidate pairs runs on the driver: one bounded
+    collect of the (block, a, b) keys, then one collect of both sides'
+    prepared record values (two broadcast id relations and the collect):
+    4 jobs, where the block-summary aggregation and the Spark Ω collect
+    took 8. The comparators run in numpy, and collecting M_est, a local
+    frame, runs no further job. The distributed route runs ~8 jobs per
+    iteration."""
     import numpy as np
     import pandas as pd
 
@@ -281,5 +283,61 @@ def test_blocked_mec_launches_few_jobs(spark):
     assert res.M_est.collect()
     launched = _job_ids(spark) - before
     res.unpersist()
-    assert res.route == "driver" and res.iter >= 2
-    assert len(launched) <= 8, len(launched)
+    assert (res.route, res.omega_build) == ("driver", "records") and res.iter >= 2
+    assert len(launched) <= 4, len(launched)
+
+
+def test_committed_stage_read_launches_no_job(spark, tmp_path):
+    """A committed stage is read back with the schema its manifest stores,
+    and a stage just written with the written frame's schema: neither runs
+    a parquet schema-inference job. A manifest without a stored schema
+    (an older snapshot) is still read, by inference."""
+    import json
+
+    from automatedreclin_spark.checkpoint import CheckpointManager
+
+    ck = CheckpointManager(spark, str(tmp_path))
+    df = spark.range(100).select(F.col("id").alias("a"),
+                                 F.array(F.col("id").cast("string")).alias("t"))
+    before = _job_ids(spark)
+    written = ck.stage("s", lambda: df)
+    assert len(_job_ids(spark) - before) == 1       # the write itself
+    inferred = spark.read.parquet(str(tmp_path / "s" / "data"))
+    assert written.schema == inferred.schema
+    before = _job_ids(spark)
+    resumed = CheckpointManager(spark, str(tmp_path)).stage("s", lambda: df)
+    assert _job_ids(spark) == before
+    assert resumed.schema == inferred.schema
+    manifest = tmp_path / "s" / "manifest.json"
+    m = json.loads(manifest.read_text())
+    m["schema"] = inferred.schema.simpleString()
+    manifest.write_text(json.dumps(m))
+    old = CheckpointManager(spark, str(tmp_path)).stage("s", lambda: df)
+    assert old.schema == inferred.schema and old.count() == 100
+
+
+def test_link_repo_files_recovery_launches_few_jobs(spark, tmp_path):
+    """A recovery that lost the fit and everything after it reads the four
+    committed stages back without a job, builds the fit's Ω on the driver
+    (the keys collect plus one collect of the prepared record values) and
+    rebuilds stages 40-55: 13 jobs, where inferring each snapshot's schema,
+    the block-summary aggregation and the Spark Ω collect made 25. The run
+    leaves no persisted RDD behind."""
+    import shutil
+
+    from automatedreclin_spark.fixtures import synth_files
+    from automatedreclin_spark.pipeline import link_repo_files
+
+    persistent = spark.sparkContext._jsc.getPersistentRDDs
+    A, B, _ = synth_files(spark, n_a=120, n_b=240, seed=3)
+    ck = str(tmp_path)
+    link_repo_files(spark, A, B, ck)
+    for stage in ("40_linkage", "50_clusters", "55_entities"):
+        shutil.rmtree(f"{ck}/{stage}")
+    cached = persistent().size()
+    before = _job_ids(spark)
+    run = link_repo_files(spark, A, B, ck)
+    launched = _job_ids(spark) - before
+    assert (run.fit.route, run.fit.omega_build) == ("driver", "records")
+    assert len(launched) <= 13, len(launched)
+    assert persistent().size() == cached

@@ -102,3 +102,98 @@ def test_greedy_duplicates_in_A_b_side_free(inst, n_M):
     assert all(ratios[i] >= ratios[i + 1] - 1e-12 for i in range(len(ratios) - 1))
     sel_one = greedy_select_local(a, b, ratio, n_M)
     assert len(sel_dup) >= len(sel_one)
+
+
+# --- driver forms of the comparators: bit-identical to their Spark forms ---
+
+#: whitespace runs, repeated tokens, non-BMP characters, and a long run of
+#: one letter so that strings pass Jaro's 64-character batch cutoff
+_words = st.sampled_from(["a", "b", "ab", "ba", "\U0001F600", "\U0001D11E",
+                          "é", "x" * 40, " ", "  ", "\t", "\n", ""])
+_texts = st.none() | st.lists(_words, max_size=8).map("".join)
+
+
+def _spark_and_local(spark, comparators, xs, ys, dtype):
+    """For each comparator, the gammas of its Spark form over (x, y) and of
+    its ``local`` form over the Spark-prepared values, as float64 arrays
+    with NULL as NaN. One Spark job for all of them."""
+    import pyarrow as pa
+    from pyspark.sql import functions as F
+
+    df = spark.createDataFrame(list(zip(xs, ys)), f"x {dtype}, y {dtype}")
+    t = df.select(*[
+        col.alias(f"{name}{i}") for i, c in enumerate(comparators)
+        for name, col in (("g", c(F.col("x"), F.col("y")).cast("double")),
+                          ("px", c.prep(F.col("x"))), ("py", c.prep(F.col("y"))))
+    ]).toArrow()
+    return [(t[f"g{i}"].cast(pa.float64()).to_numpy(zero_copy_only=False),
+             c.local(t[f"px{i}"], t[f"py{i}"]))
+            for i, c in enumerate(comparators)]
+
+
+def _assert_bits_equal(want, got):
+    assert np.array_equal(np.isnan(want), np.isnan(got))
+    ok = ~np.isnan(want)
+    assert np.array_equal(want[ok].view(np.int64), got[ok].view(np.int64)), (want, got)
+
+
+@given(st.lists(st.tuples(_texts, _texts), min_size=1, max_size=40))
+@settings(max_examples=20, deadline=None)
+def test_string_comparators_local_bit_identical(spark, rows):
+    from automatedreclin_spark.functions.comparators import (
+        cmp_identical,
+        jarowinkler_complement,
+        token_jaccard,
+    )
+
+    xs, ys = zip(*rows)
+    comparators = [cmp_identical(), jarowinkler_complement(), token_jaccard()]
+    for want, got in _spark_and_local(spark, comparators, xs, ys, "string"):
+        _assert_bits_equal(want, got)
+
+
+#: special values drawn often enough that rows pair them with each other
+#: (Spark's equality holds for NaN = NaN, IEEE's does not)
+_numbers = (st.none()
+            | st.sampled_from([float("nan"), float("inf"), -float("inf"), 0.0, -0.0])
+            | st.floats(allow_nan=True, allow_infinity=True)
+            | st.integers(-(2 ** 62), 2 ** 62).map(float))
+
+
+@given(st.lists(st.tuples(_numbers, _numbers), min_size=1, max_size=40))
+@settings(max_examples=20, deadline=None)
+def test_numeric_comparators_local_bit_identical(spark, rows):
+    from automatedreclin_spark.functions.comparators import abs_distance, cmp_identical
+
+    xs, ys = zip(*rows)
+    for want, got in _spark_and_local(spark, [abs_distance(), cmp_identical()],
+                                      xs, ys, "double"):
+        _assert_bits_equal(want, got)
+
+
+def test_token_jaccard_null_is_null(spark):
+    """NULL on either side is NULL in the Spark form, not a perfect score
+    (size(NULL) is -1 with ANSI off)."""
+    from automatedreclin_spark.functions.comparators import token_jaccard
+
+    [(want, got)] = _spark_and_local(spark, [token_jaccard()], ["a b", None, None, "a"],
+                                     [None, "a b", None, "a"], "string")
+    assert np.isnan(want[:3]).all() and np.isnan(got[:3]).all()
+    assert want[3] == got[3] == 0.0
+
+
+@given(st.lists(st.tuples(_texts, _texts), min_size=1, max_size=60),
+       st.lists(st.integers(1, 59), max_size=5))
+@settings(max_examples=100, deadline=None)
+def test_jaro_local_chunking_exact(rows, cuts):
+    """The Jaro kernel scores each row on its own: the local form over any
+    split of the rows gives the doubles of one unsplit call."""
+    from automatedreclin_spark.functions.comparators import jarowinkler_complement
+
+    xs, ys = map(list, zip(*rows))
+    jw = jarowinkler_complement()
+    whole = jw.local(xs, ys)
+    bounds = [0, *sorted(c for c in set(cuts) if c < len(xs)), len(xs)]
+    parts = np.concatenate([jw.local(xs[s:e], ys[s:e])
+                            for s, e in zip(bounds, bounds[1:])])
+    _assert_bits_equal(whole, parts)
