@@ -6,17 +6,25 @@ In production this maps 1:1 onto Iceberg table commits (atomic snapshot +
 metadata); this sandbox has no Iceberg runtime jars, so the same contract is
 implemented as:
 
-    <base>/<stage>/data/          parquet snapshot (atomic via _SUCCESS)
+    <base>/<stage>/data/          parquet snapshot (Spark- or pyarrow-written)
     <base>/<stage>/manifest.json  row count, per-partition row counts
                                   (lineage counters), user metadata, schema
                                   (read back with it: no inference job)
     <base>/<stage>/_COMMITTED     commit marker written LAST
 
+A stage's builder returns either a Spark DataFrame, written by a Spark job,
+or a pandas frame plus the stage's Spark schema, which a stage computed on
+the driver writes with pyarrow as one ``part-00000-<uuid>.parquet`` file:
+no Spark job. Both writes replace the whole data directory, so a part file
+left by an earlier, uncommitted write is never read, and both store the
+same parquet schema (names, types, nullability) for the same Spark schema.
+``table`` reads a committed snapshot back on the driver with pyarrow.
+
 Every counter comes from the write itself: ``rows`` and any stage-specific
-metric are observed while the snapshot is written, and the per-partition
-counts are read from the written files' parquet footers (the file name
-carries the writing task's partition id), so committing a stage scans
-nothing twice.
+metric are observed while the snapshot is written (a pandas frame's length
+is its row count), and the per-partition counts are read from the written
+files' parquet footers (the file name carries the writing task's partition
+id), so committing a stage scans nothing twice.
 
 A stage is only considered committed when the marker exists, so a job killed
 mid-write re-runs that stage from its inputs (idempotent: same stage name →
@@ -29,16 +37,39 @@ from __future__ import annotations
 
 import json
 import re
+import shutil
 import time
+import uuid
 from pathlib import Path
-from typing import Any, Callable, Sequence
+from typing import Any, Callable, Sequence, Union
 
+import pandas as pd
+import pyarrow as pa
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.sql.types import StructType
 
 _PART_FILE = re.compile(r"part-(\d+)")
+
+#: What a stage builder returns: a Spark plan, or a frame computed on the
+#: driver with the Spark schema its snapshot takes.
+StageOutput = Union[DataFrame, tuple[pd.DataFrame, StructType]]
+
+
+def _write_local(pdf: pd.DataFrame, schema: StructType, data_dir: Path) -> None:
+    """``pdf`` as one parquet file with the parquet schema Spark writes for
+    ``schema`` (a non-nullable field is a required column), replacing
+    whatever ``data_dir`` held."""
+    table = pa.Table.from_pandas(pdf[schema.names], schema=to_arrow_schema(schema),
+                                 preserve_index=False)
+    # Spark's own footer key: an inferring read gets the schema back as is.
+    table = table.replace_schema_metadata(
+        {"org.apache.spark.sql.parquet.row.metadata": schema.json()})
+    shutil.rmtree(data_dir, ignore_errors=True)
+    data_dir.mkdir(parents=True)
+    pq.write_table(table, data_dir / f"part-00000-{uuid.uuid4()}-c000.snappy.parquet")
 
 
 def _rows_per_partition(data_dir: Path) -> dict[int, int]:
@@ -70,10 +101,22 @@ class CheckpointManager:
             return json.loads(p.read_text())
         return None
 
+    def table(self, name: str, columns: list[str] | None = None,
+              filters=None) -> pa.Table:
+        """A committed stage's snapshot read on the driver with pyarrow (no
+        Spark job), typed by the schema its manifest stores; ``columns`` and
+        ``filters`` (``pyarrow.parquet.read_table``'s) are applied while the
+        files are scanned."""
+        schema = (self.manifest(name) or {}).get("schema")
+        return pq.read_table(
+            self._stage_dir(name) / "data", columns=columns, filters=filters,
+            schema=(to_arrow_schema(StructType.fromJson(schema))
+                    if isinstance(schema, dict) else None))
+
     def stage(
         self,
         name: str,
-        builder: Callable[[], DataFrame],
+        builder: Callable[[], StageOutput],
         meta: dict[str, Any] | None = None,
         inputs: list[str] | None = None,
         observations: Sequence[Observation] = (),
@@ -89,7 +132,9 @@ class CheckpointManager:
 
         ``observations`` are attached by the builder somewhere in its plan;
         their metrics, collected by the snapshot write, are added to the
-        manifest's ``meta``, where a resumed run reads them back."""
+        manifest's ``meta``, where a resumed run reads them back. ``meta``
+        itself is read once the builder has run, so a builder that computes
+        on the driver adds its metrics to that dict instead."""
         sdir = self._stage_dir(name)
         data_dir = sdir / "data"
         if self.resume and self.is_committed(name):
@@ -112,18 +157,27 @@ class CheckpointManager:
                 )
 
         t0 = time.time()
-        df = builder()
-        # df.observe: rows_out is measured DURING the snapshot write itself
-        # (no second scan of the builder's plan) — the lineage counter the
-        # Iceberg commit would carry as snapshot summary metadata.
-        obs = Observation(f"ck_{name}")
-        df = df.observe(obs, F.count(F.lit(1)).alias("rows_out"))
-        df.write.mode("overwrite").parquet(str(data_dir))
-        rows_out = int(obs.get["rows_out"])
+        built = builder()
+        # A marker left by an earlier commit (resume=False) must not outlive
+        # the data it vouched for.
+        (sdir / "_COMMITTED").unlink(missing_ok=True)
+        if isinstance(built, DataFrame):
+            # df.observe: rows_out is measured DURING the snapshot write
+            # itself (no second scan of the builder's plan) — the lineage
+            # counter the Iceberg commit would carry as snapshot summary
+            # metadata.
+            obs = Observation(f"ck_{name}")
+            df = built.observe(obs, F.count(F.lit(1)).alias("rows_out"))
+            df.write.mode("overwrite").parquet(str(data_dir))
+            rows_out, schema = int(obs.get["rows_out"]), df.schema
+        else:
+            pdf, schema = built
+            _write_local(pdf, schema, data_dir)
+            rows_out = len(pdf)
         meta = dict(meta or {})
         for o in observations:
             meta.update(o.get)
-        out = self.spark.read.schema(df.schema).parquet(str(data_dir))
+        out = self.spark.read.schema(schema).parquet(str(data_dir))
         per_part = _rows_per_partition(data_dir)
         # Explicit rows_in lineage: each named upstream stage's committed
         # rows_out, read from its manifest (committed strictly before us).

@@ -12,8 +12,9 @@ One fit loop, two routes for the operations over Ω, chosen by |Ω|:
   run in numpy over Ω on the driver (``_LocalOmega``); ``M_est`` and
   ``scored`` are local frames. Ω is built there in four steps:
     1. one bounded collect of the (block, a, b) keys, at most
-       ``_FIT_LOCAL`` rows: fewer decides the route, and block sizes, ν
-       and |Ω| then come from pandas (pairs mode);
+       ``_FIT_LOCAL`` rows, or none when the caller hands in the keys as a
+       pandas frame: fewer rows decide the route, and block sizes, ν and
+       |Ω| then come from pandas (pairs mode);
     2. one collect, both sides at once, of the comparators' *prepared*
        values (``Comparator.prep``, evaluated once per record by Spark) for
        the records Ω references;
@@ -23,7 +24,10 @@ One fit loop, two routes for the operations over Ω, chosen by |Ω|:
   A comparator with no local form, prepared values whose types differ
   between the sides, or prepared values over ``_PREP_BUDGET`` bytes keep
   the Spark build instead: Ω, comparators included, collected from the
-  pair join. ``BlockedMecResult.omega_build`` names the build taken.
+  pair join. ``BlockedMecResult.omega_build`` names the build taken. The
+  pair-join plan is built only for that build and for the distributed
+  route; the records build needs only the comparators and Ω's schema (the
+  keys' plus one double per gamma).
 - **distributed** (``_SparkOmega``): Ω is persisted once, then per iteration
     1 fused agg over Ω → match- and nonmatch-side params (driver Newton
       with the fallback chain)
@@ -50,6 +54,7 @@ import pyarrow as pa
 import pyarrow.compute as pc
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import from_arrow_schema
 from pyspark.sql.types import (
     ArrayType,
     AtomicType,
@@ -71,6 +76,7 @@ from automatedreclin_spark.operators.comparison import (
     finite_gamma_aggs,
     gamma_name,
     raise_if_nonfinite,
+    resolve_comparators,
 )
 from automatedreclin_spark.operators.pairs import block_pairs
 from automatedreclin_spark.operators.selection import (
@@ -139,6 +145,8 @@ class BlockedMecResult:
     eval_metrics: dict[str, float] | None = None
     confusion: list[list[int]] | None = None
     scored: DataFrame | None = None
+    #: the driver route's M_est rows as a pandas frame (None when distributed)
+    M_est_local: pd.DataFrame | None = None
     #: wall-clock attribution, mirroring MecResult: total seconds per
     #: iteration, their substage split (side_fits = M/U parameter estimation
     #: incl. the alpha retention passes; q_sum = scoring and Σq̂;
@@ -439,13 +447,13 @@ class _SparkOmega:
     def release(self, M: DataFrame) -> None:
         M.unpersist()
 
-    def outputs(self, M: DataFrame) -> tuple[DataFrame, DataFrame]:
+    def outputs(self, M: DataFrame) -> tuple[DataFrame, DataFrame, None]:
         M_est = (
             self.scored.join(M, ["a", "b"], "left_semi")
             .select("a", "b", "block", "ratio")
             .orderBy("block", "a", "b")
         )
-        return M_est, self.scored
+        return M_est, self.scored, None
 
     def cached(self, M: DataFrame) -> list[DataFrame]:
         return [self.omega, M]
@@ -556,13 +564,14 @@ def _chunks(weights: np.ndarray):
 
 
 def _omega_from_records(keys: pd.DataFrame, A: DataFrame, B: DataFrame,
-                        cv, a_col: str, b_col: str) -> pd.DataFrame | None:
+                        comparators: dict, gamma_cols: list[str],
+                        a_col: str, b_col: str) -> pd.DataFrame | None:
     """Ω (the keys plus one gamma column per variable) from the prepared
     values of the records the keys reference, or None when this build does
     not apply: a comparator has no local form, a prepared type differs
     between the sides or has no exact Arrow form, an id repeats or is not
     found, or the prepared values exceed ``_PREP_BUDGET``."""
-    comps = [cv.comparators[v] for v in cv.variables]
+    variables, comps = list(comparators), list(comparators.values())
     if any(c.local is None for c in comps):
         return None
     cols = [f"_p{i}" for i in range(len(comps))]
@@ -575,7 +584,7 @@ def _omega_from_records(keys: pd.DataFrame, A: DataFrame, B: DataFrame,
         id_cols[side] = F.col(id_col)
         sides.append(R.select(
             *[c.alias(k) for c, k in zip(id_cols, ("_a", "_b"))],
-            *[c.prep(F.col(v)).alias(p) for v, c, p in zip(cv.variables, comps, cols)]))
+            *[c.prep(F.col(v)).alias(p) for v, c, p in zip(variables, comps, cols)]))
     types = [[df.schema[p].dataType for p in cols] for df in sides]
     if types[0] != types[1] or not all(map(_local_type_ok, types[0])):
         return None
@@ -624,10 +633,10 @@ def _omega_from_records(keys: pd.DataFrame, A: DataFrame, B: DataFrame,
     if (ia < 0).any() or (ib < 0).any():
         return None
 
-    gammas = {g: np.empty(len(keys)) for g in cv.gamma_cols}
+    gammas = {g: np.empty(len(keys)) for g in gamma_cols}
     for start, stop in _chunks(weights[0][ia] + weights[1][ib]):
         take_a, take_b = pa.array(ia[start:stop]), pa.array(ib[start:stop])
-        for c, g, xa, xb in zip(comps, cv.gamma_cols, *values):
+        for c, g, xa, xb in zip(comps, gamma_cols, *values):
             gammas[g][start:stop] = c.local(xa.take(take_a), xb.take(take_b))
     return keys.assign(**gammas)
 
@@ -739,8 +748,9 @@ class _LocalOmega:
     def release(self, M: np.ndarray) -> None:
         pass
 
-    def outputs(self, M: np.ndarray) -> tuple[DataFrame, DataFrame]:
-        """Local frames with the distributed route's schemas."""
+    def outputs(self, M: np.ndarray) -> tuple[DataFrame, DataFrame, pd.DataFrame]:
+        """Local frames with the distributed route's schemas, and M_est's
+        rows as pandas."""
         extra = ["init_disagreement", "ratio", "q_est"]
         scored_pdf = self.pdf.assign(**{c: self.G[c] for c in extra})
         scored = self.spark.createDataFrame(scored_pdf, StructType(
@@ -750,7 +760,7 @@ class _LocalOmega:
             ["block", "a", "b"], ignore_index=True)
         M_est = self.spark.createDataFrame(m_pdf, StructType(
             [self.schema[c] for c in keys] + [StructField("ratio", DoubleType())]))
-        return M_est, scored
+        return M_est, scored, m_pdf
 
     def cached(self, M: np.ndarray) -> list[DataFrame]:
         return []
@@ -773,7 +783,7 @@ def blocked_mec(
     a_col: str = "a",
     b_col: str = "b",
     seed: int = 1,
-    pairs: DataFrame | None = None,
+    pairs: DataFrame | pd.DataFrame | None = None,
     verbose: bool = False,
 ) -> BlockedMecResult:
     """Inverted blocked MEC.
@@ -786,6 +796,9 @@ def blocked_mec(
       where full products inside a giant component would be quadratic.
       Records must still belong to at most one block. Block sizes (n_a, n_b)
       and ν = Σ min(n_a, n_b) come from the pairs' distinct ids per block.
+      A pandas frame of keys already on the driver is taken as the keys
+      collect's result: no job runs for it, and its Spark frame is built
+      only if a Spark Ω is.
 
     Allowed methods: binary / continuous_parametric only (reference restricts
     the blocked path, unsupervised_learning.R:1002-1006).
@@ -812,6 +825,8 @@ def blocked_mec(
     stage_seconds: dict[str, float] = {}
     _stage_t0 = time.time()
     _cap = (F.col("n_a") if duplicates_in_A else F.least("n_a", "n_b"))
+    spark = A.sparkSession
+    pairs_pdf = None
     if pairs is None:
         # Candidate pairs: within-block products (disjoint keys → no dedup),
         # deterministic (block, a, b) ordering happens only at output.
@@ -836,11 +851,24 @@ def blocked_mec(
             )).collect()[0][0] or 0)
         else:
             nu = summary.nu
+    elif isinstance(pairs, pd.DataFrame):
+        # Keys already on the driver: their Spark frame is built only if a
+        # Spark Ω needs it.
+        pairs_pdf = pairs.rename(columns={block_col: "block"})[["block", "a", "b"]]
+        pair_df = None
+        fits_driver = len(pairs_pdf) < _FIT_LOCAL
     else:
         pair_df = pairs.select(F.col(block_col).alias("block"), "a", "b")
         fits_driver = True   # unless the bounded keys collect fills up
     keys_s = time.time()
-    keys = _collect_keys(pair_df) if fits_driver else None
+    if pairs_pdf is None:
+        keys = _collect_keys(pair_df) if fits_driver else None
+        keys_schema = pair_df.schema
+    else:
+        keys = pa.Table.from_pandas(pairs_pdf, preserve_index=False)
+        keys_schema = from_arrow_schema(keys.schema)
+        if not fits_driver:
+            keys, pair_df = None, spark.createDataFrame(pairs_pdf, keys_schema)
     keys_s = time.time() - keys_s
     if pairs is not None:
         # On the driver route the block summary comes from the keys.
@@ -848,8 +876,8 @@ def blocked_mec(
             summary_pdf, nu = _summary_local(keys.to_pandas(), duplicates_in_A)
             counts = [StructField(c, LongType(), False)
                       for c in ("n_a", "n_b", "pair_count", "nonmatches_min")]
-            summary_df = A.sparkSession.createDataFrame(
-                summary_pdf, StructType([pair_df.schema["block"], *counts]))
+            summary_df = spark.createDataFrame(
+                summary_pdf, StructType([keys_schema["block"], *counts]))
         else:
             summary_df = pair_df.groupBy("block").agg(
                 F.count_distinct("a").alias("n_a"),
@@ -859,12 +887,23 @@ def blocked_mec(
                 "nonmatches_min", F.col("pair_count") - _cap
             ).persist(StorageLevel.MEMORY_AND_DISK)
             nu = int(summary_df.agg(F.sum(_cap)).collect()[0][0] or 0)
-    # check_finite=False: each route runs the C5 guard over the Ω it
-    # materializes, so the comparators execute exactly once per pair.
-    cv = comparison_vectors(
-        A, B, variables, comparators=comparators, pairs=pair_df,
-        a_col=a_col, b_col=b_col, check_finite=False,
-    )
+    comparators = resolve_comparators(A, B, variables, comparators)
+    gamma_cols = [gamma_name(v) for v in variables]
+
+    def pair_frame() -> DataFrame:
+        nonlocal pair_df
+        if pair_df is None:
+            pair_df = spark.createDataFrame(pairs_pdf, keys_schema)
+        return pair_df
+
+    def spark_omega() -> DataFrame:
+        """Ω from the Spark pair join. check_finite=False: each route runs
+        the C5 guard over the Ω it materializes, so the comparators execute
+        exactly once per pair."""
+        return comparison_vectors(
+            A, B, variables, comparators=comparators, pairs=pair_frame(),
+            a_col=a_col, b_col=b_col, check_finite=False,
+        ).omega
 
     b_vars = [v for v in variables if methods[v] == "binary"]
     cpar_vars = [v for v in variables if methods[v] == "continuous_parametric"]
@@ -887,24 +926,28 @@ def blocked_mec(
     stage_seconds["pair_setup"] = round(time.time() - _stage_t0 - keys_s, 2)
 
     _stage_t0 = time.time()
-    fit_args = (variables, cv.gamma_cols, b_gammas, cpar_gammas, duplicates_in_A)
+    fit_args = (variables, gamma_cols, b_gammas, cpar_gammas, duplicates_in_A)
     try:
         if keys is None:
-            om, omega_build = _SparkOmega(cv.omega, *fit_args), "spark"
+            om, omega_build = _SparkOmega(spark_omega(), *fit_args), "spark"
         else:
             # The pair join drops pairs with a NULL id; so does this build.
             keys = keys.filter(pc.and_(pc.is_valid(keys["a"]),
                                        pc.is_valid(keys["b"]))).to_pandas()
-            pdf = _omega_from_records(keys, A, B, cv, a_col, b_col)
+            pdf = _omega_from_records(keys, A, B, comparators, gamma_cols,
+                                      a_col, b_col)
             omega_build = "records"
             if pdf is None:
-                pdf, omega_build = cv.omega.toPandas(), "spark"
-            om = _LocalOmega(pdf, cv.omega.schema, A.sparkSession, *fit_args)
+                pdf, omega_build = spark_omega().toPandas(), "spark"
+            # Ω's schema, the Spark build's: the keys plus one double per gamma.
+            schema = StructType(
+                [f for f in keys_schema.fields if f.name in ("a", "b", "block")]
+                + [StructField(g, DoubleType()) for g in gamma_cols])
+            om = _LocalOmega(pdf, schema, spark, *fit_args)
     except ValueError:  # the C5 guard: leave no cache behind
         summary_df.unpersist()
         raise
     N = om.n
-    cv._n = N
     n_U_min = N - nu
     stage_seconds["init_agg"] = round(time.time() - _stage_t0 + keys_s, 2)
 
@@ -925,9 +968,9 @@ def blocked_mec(
                 "reaching the structural one-to-one bound."
             )
         om.zero_scores()
-        M_est, scored = om.outputs(M)
+        M_est, scored, M_est_local = om.outputs(M)
         return BlockedMecResult(
-            M_est=M_est, n_M_est=n_M_count, n_U_est=0,
+            M_est=M_est, M_est_local=M_est_local, n_M_est=n_M_count, n_U_est=0,
             candidate_pair_count=N, nu=nu, n_U_min=n_U_min, iter=0,
             convergence_reason="structural_no_nonmatch_complement",
             alpha=alpha, n_U_fit=0, b_params=None, cpar_params=None,
@@ -1068,7 +1111,7 @@ def blocked_mec(
         break
 
     _stage_t0 = time.time()
-    M_est, scored = om.outputs(M)
+    M_est, scored, M_est_local = om.outputs(M)
     n_U_selected = N - n_M_count
 
     block_estimates = (
@@ -1093,7 +1136,8 @@ def blocked_mec(
 
     blocking_eval = eval_metrics = confusion = None
     if true_matches is not None:
-        preserved = true_matches.join(pair_df.select("a", "b"), ["a", "b"], "left_semi").count()
+        preserved = true_matches.join(pair_frame().select("a", "b"), ["a", "b"],
+                                      "left_semi").count()
         n_true = true_matches.count()
         blocking_eval = {
             "true_matches_preserved": preserved,
@@ -1104,13 +1148,14 @@ def blocked_mec(
         # Evaluation uses the FULL pair space n_A×n_B (the blocked candidate
         # set only restricts prediction, not the universe; reference
         # unsupervised_learning.R:1151-1175 → TN counts unblocked pairs).
-        counts = evaluation(M_est, true_matches, cv.n_A * cv.n_B)
+        counts = evaluation(M_est, true_matches, A.count() * B.count())
         eval_metrics = get_metrics(counts.TP, counts.FP, counts.FN, counts.TN)
         confusion = get_confusion(counts.TP, counts.FP, counts.FN, counts.TN)
     stage_seconds["final_summary"] = round(time.time() - _stage_t0, 2)
 
     return BlockedMecResult(
         M_est=M_est,
+        M_est_local=M_est_local,
         n_M_est=n_M_count,
         n_U_est=n_U_selected,
         candidate_pair_count=N,

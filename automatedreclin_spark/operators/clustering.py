@@ -1,7 +1,11 @@
 """Transitive clustering: connected components on a pair/edge DataFrame.
 
 The north rule's final stage: accepted match pairs → entity clusters by
-transitive closure. A graph whose canonical edge set fits the driver
+transitive closure. The pipeline labels a candidate graph that fits the
+driver directly with ``_components_local`` and ``cluster_matches_local``:
+no Spark job, and the pipeline writes their frames as pandas-written
+snapshots (pyarrow). Within Spark, a graph
+whose canonical edge set fits the driver
 (fewer than ``_FINISH_LOCAL`` = 2M edges, ~32 MB of int64 pairs) is
 collected once and labeled exactly in vectorized numpy: 3 Spark jobs per
 call on a 10k-edge graph, whatever its diameter. Labeling a graph at the
@@ -221,3 +225,14 @@ def cluster_matches(
         ((F.col("id") - F.col("id") % 2) / 2).cast("long").alias("id"),
         F.col("component").alias("entity_id"),
     )
+
+
+def cluster_matches_local(a: np.ndarray, b: np.ndarray) -> pd.DataFrame:
+    """``cluster_matches`` on the driver for int64 match pairs that fit
+    there: the same node encoding and the same (side, id, entity_id) values,
+    with Spark's remainder (the sign of the dividend), labeled by
+    ``_components_local``."""
+    nodes, comp = _components_local(a * 2, b * 2 + 1)
+    side = np.fmod(nodes, 2)
+    return pd.DataFrame({"side": side.astype(np.int32), "id": (nodes - side) // 2,
+                         "entity_id": comp})

@@ -63,6 +63,25 @@ def gamma_name(variable: str) -> str:
     return f"gamma_{variable}"
 
 
+def resolve_comparators(
+    A: DataFrame,
+    B: DataFrame,
+    variables: list[str],
+    comparators: dict[str, Comparator] | None = None,
+) -> dict[str, Comparator]:
+    """Each variable's comparator, ``cmp_identical`` where none is given,
+    once both record sets are known to carry every variable."""
+    if any(v not in A.columns for v in variables):
+        raise ValueError("Not all variables are present in A.")
+    if any(v not in B.columns for v in variables):
+        raise ValueError("Not all variables are present in B.")
+    if not variables:
+        raise ValueError("`variables` should contain at least one variable.")
+    comparators = comparators or {}
+    return {v: comparators[v] if v in comparators else cmp_identical()
+            for v in variables}
+
+
 def comparison_vectors(
     A: DataFrame,
     B: DataFrame,
@@ -96,19 +115,7 @@ def comparison_vectors(
         of semi-joining every (a, b) key of Ω against the seed join — exact
         for EVERY comparator because it never goes through the (lossy) gamma.
     """
-    missing_a = [v for v in variables if v not in A.columns]
-    missing_b = [v for v in variables if v not in B.columns]
-    if missing_a:
-        raise ValueError("Not all variables are present in A.")
-    if missing_b:
-        raise ValueError("Not all variables are present in B.")
-    if not variables:
-        raise ValueError("`variables` should contain at least one variable.")
-
-    comparators = dict(comparators or {})
-    for v in variables:
-        comparators.setdefault(v, cmp_identical())
-    comparators = {v: comparators[v] for v in variables}
+    comparators = resolve_comparators(A, B, variables, comparators)
 
     if pairs is None:
         # Parallelize the cross product by its INPUT, not its output: the

@@ -18,8 +18,22 @@ content) with stable ids. Stages, each checkpointed (see checkpoint.py):
   40_linkage     blocked inverted MEC fit on the component blocks
                  (binary sha-equality + continuous path/content distances);
                  the manifest's meta names the fit's route and Ω build
-  50_clusters    transitive closure of accepted matches → entity_id,
-                 carrying content_sha for the invariant check
+  50_clusters    transitive closure of accepted matches → entity_id
+  55_entities    the clustered ids with their repo, path and content_sha,
+                 for the invariant check
+
+Stages 30-55 run on the driver while the committed candidate set is under
+the 2M-pair bound connected components finish locally at (a manifest count,
+no job): the 20_candidates and 30_components snapshots are read once with
+pyarrow, components are labeled in numpy, the labeled (block, a, b) keys go
+to the fit as a pandas frame (no keys collect), matches are clustered in
+numpy, and the entities are a pandas merge over the clustered ids' columns
+of the record snapshots (those too under the bound). Each snapshot is
+written with pyarrow, with the schema the Spark plan gives it; the fit's
+collect of prepared record values is then the only Spark work after
+blocking. Above the bound each stage runs its Spark plan. The manifests of
+stages 30, 50 and 55 name the route taken (``meta.route``, "driver" or
+"spark"); 40's names the fit's.
 
 Kill the job at any stage boundary and rerun: committed stages are skipped
 (resume-from-snapshot), and the final output is byte-identical — tested in
@@ -30,9 +44,13 @@ from __future__ import annotations
 
 from dataclasses import dataclass
 
+import numpy as np
 import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import IntegerType, LongType, StringType, StructField, StructType
 from pyspark.storagelevel import StorageLevel
 
 from automatedreclin_spark.checkpoint import CheckpointManager
@@ -44,7 +62,13 @@ from automatedreclin_spark.functions.comparators import (
 )
 from automatedreclin_spark.models.blocked_mec import BlockedMecResult, blocked_mec
 from automatedreclin_spark.operators.blocking import cap_blocks, files_candidate_blocks
-from automatedreclin_spark.operators.clustering import cluster_matches, connected_components
+from automatedreclin_spark.operators import clustering
+from automatedreclin_spark.operators.clustering import (
+    _components_local,
+    cluster_matches,
+    cluster_matches_local,
+    connected_components,
+)
 from automatedreclin_spark.operators.pairs import block_pairs
 from automatedreclin_spark.operators.util import release_checkpoint
 from automatedreclin_spark.evaluation import evaluation, pairwise_f1
@@ -61,6 +85,45 @@ class LinkageRun:
     dropped_blocks: int         # probe blocks cap_blocks dropped ...
     dropped_pairs: int          # ... and the candidate pairs they held
     eval_metrics: dict | None = None
+
+
+#: The snapshot schemas of stages 30, 50 and 55 written from the driver:
+#: those the Spark plans give (``55_entities.side`` is a non-null literal).
+_COMPONENTS = StructType([StructField("id", LongType()),
+                          StructField("component", LongType())])
+_CLUSTERS = StructType([StructField("side", IntegerType()),
+                        StructField("id", LongType()),
+                        StructField("entity_id", LongType())])
+_ENTITIES = StructType([StructField("entity_id", LongType()),
+                        StructField("side", IntegerType(), False),
+                        StructField("id", LongType()),
+                        *(StructField(c, StringType())
+                          for c in ("repo", "path", "content_sha"))])
+
+
+def _edges(table: pa.Table) -> tuple[np.ndarray, np.ndarray]:
+    """The (a, b) id pairs of a committed pair snapshot as int64 arrays,
+    pairs with a NULL id dropped (Spark's least/greatest turn them into
+    self-loops, which connected components drop)."""
+    table = table.filter(pc.and_(pc.is_valid(table["a"]), pc.is_valid(table["b"])))
+    return table["a"].to_numpy(), table["b"].to_numpy()
+
+
+def _label_pairs(pairs: pa.Table, components: pa.Table) -> pd.DataFrame:
+    """The candidate pairs labeled with the component of their A record,
+    as (block, a, b): the driver form of the Spark route's join, which also
+    keeps a pair whose B id is NULL (the fit drops it, after counting it in
+    its block summary)."""
+    ids = components["id"].to_numpy()
+    is_a = np.fmod(ids, 2) == 0
+    pos = pc.index_in(pairs["a"], value_set=pa.array(ids[is_a] // 2))
+    keep = pc.is_valid(pos)
+    return pa.table({
+        "block": pa.array(components["component"].to_numpy()[is_a]).take(
+            pos.filter(keep)),
+        "a": pairs["a"].filter(keep),
+        "b": pairs["b"].filter(keep),
+    }).to_pandas(types_mapper=pd.ArrowDtype)
 
 
 def prepare_records(df: DataFrame, id_col: str) -> DataFrame:
@@ -141,10 +204,30 @@ def link_repo_files(
     release_held()
     cand = ck.manifest("20_candidates")
     n_pairs = cand["rows"]
+    # The driver route: stages 30-55 run on the driver when the committed
+    # candidate set (its manifest count, no job) is under the 2M-pair bound
+    # connected components finish locally at. The driver then holds only
+    # frames sized by that bound: the candidate pairs and the labeled keys
+    # (fewer than 2M int64 rows each), the component and cluster labels (at
+    # most two nodes per pair), the fit's Ω (under its own _FIT_LOCAL, also
+    # 2M), the matches (a subset of the pairs), and the entities, built
+    # there only while each records snapshot is under the bound too. Above
+    # the bound, every stage keeps its Spark plan.
+    local = n_pairs < clustering._FINISH_LOCAL
+    route = "driver" if local else "spark"
+    cand_table = ck.table("20_candidates") if local and not (
+        resume and ck.is_committed("30_components")
+        and ck.is_committed("40_linkage")) else None
 
     comp_obs = Observation("components")
+    comp_meta = {"route": route}
 
-    def build_components() -> DataFrame:
+    def build_components():
+        if local:
+            a, b = _edges(cand_table)
+            ids, component = _components_local(a * 2, b * 2 + 1)
+            comp_meta["n_components"] = int((ids == component).sum())
+            return pd.DataFrame({"id": ids, "component": component}), _COMPONENTS
         # A-node = a*2, B-node = b*2+1 (namespaced); component id becomes the
         # disjoint selection-block id. A component's id is its smallest node
         # id, so each component has exactly one row with id == component.
@@ -154,24 +237,28 @@ def link_repo_files(
             F.count(F.when(F.col("id") == F.col("component"), 1)).alias("n_components"),
         )
 
-    comp = ck.stage("30_components", build_components,
-                    inputs=["20_candidates"], observations=[comp_obs])
+    comp = ck.stage("30_components", build_components, meta=comp_meta,
+                    inputs=["20_candidates"],
+                    observations=[] if local else [comp_obs])
     release_held()
     n_components = ck.manifest("30_components")["meta"]["n_components"]
-
-    a_blocks = comp.filter(F.col("id") % 2 == 0).select(
-        (F.col("id") / 2).cast("long").alias("a"), F.col("component").alias("block")
-    )
-    # Label every candidate pair with its component: the component is the
-    # DISJOINT selection block, but Ω stays the candidate pairs themselves —
-    # a giant component (e.g. one per lang when probe buckets chain) must NOT
-    # expand into its full cross product.
-    labeled_pairs = pairs.join(a_blocks, "a").select("block", "a", "b")
 
     # Stage 40: blocked inverted MEC. The fit keeps its state in memory and
     # is checkpointed as a whole: a committed stage skips it on resume.
     fit = None
     if not (resume and ck.is_committed("40_linkage")):
+        if local:
+            fit_pairs = _label_pairs(cand_table, ck.table("30_components"))
+        else:
+            a_blocks = comp.filter(F.col("id") % 2 == 0).select(
+                (F.col("id") / 2).cast("long").alias("a"),
+                F.col("component").alias("block"))
+            # Label every candidate pair with its component: the component
+            # is the DISJOINT selection block, but Ω stays the candidate
+            # pairs themselves — a giant component (e.g. one per lang when
+            # probe buckets chain) must NOT expand into its full cross
+            # product.
+            fit_pairs = pairs.join(a_blocks, "a").select("block", "a", "b")
         fit = blocked_mec(
             A, B,
             variables=["content_sha", "path", "content"],
@@ -185,11 +272,17 @@ def link_repo_files(
                 "path": "continuous_parametric",
                 "content": "continuous_parametric",
             },
-            pairs=labeled_pairs,
+            pairs=fit_pairs,
             seed=seed,
         )
+
+    def build_linkage():
+        if local and fit.M_est_local is not None:
+            return fit.M_est_local, fit.M_est.schema
+        return fit.M_est
+
     matches = ck.stage(
-        "40_linkage", lambda: fit.M_est,
+        "40_linkage", build_linkage,
         meta={"route": fit.route, "omega_build": fit.omega_build} if fit else None,
         inputs=["10_records_A", "10_records_B", "20_candidates", "30_components"],
     )
@@ -198,11 +291,33 @@ def link_repo_files(
         # it before the write would rerun the comparators.
         fit.unpersist()
 
-    clusters = ck.stage("50_clusters", lambda: hold(cluster_matches(matches)),
+    def build_clusters():
+        if local:
+            return cluster_matches_local(*_edges(ck.table("40_linkage"))), _CLUSTERS
+        return hold(cluster_matches(matches))
+
+    clusters = ck.stage("50_clusters", build_clusters, meta={"route": route},
                         inputs=["40_linkage"])
     release_held()
 
-    def build_entities() -> DataFrame:
+    # The records are read only for the clustered ids, and only while each
+    # side's snapshot is under the bound.
+    local_entities = local and max(
+        ck.manifest(f"10_records_{s}")["rows"] for s in "AB") < clustering._FINISH_LOCAL
+
+    def build_entities():
+        if local_entities:
+            cl = ck.table("50_clusters").to_pandas()
+            sides = []
+            for side, (name, id_col) in enumerate((("10_records_A", "a"),
+                                                   ("10_records_B", "b"))):
+                members = cl.loc[cl["side"] == side, ["id", "entity_id"]]
+                recs = ck.table(name, columns=[id_col, "repo", "path", "content_sha"],
+                                filters=[(id_col, "in", members["id"].unique())])
+                sides.append(members.merge(
+                    recs.to_pandas().rename(columns={id_col: "id"}), on="id"
+                ).assign(side=side))
+            return pd.concat(sides, ignore_index=True), _ENTITIES
         a_side = clusters.filter(F.col("side") == 0).select(
             F.col("id").alias("a"), "entity_id"
         ).join(A, "a").select(
@@ -218,6 +333,7 @@ def link_repo_files(
         return a_side.unionByName(b_side)
 
     entities = ck.stage("55_entities", build_entities,
+                        meta={"route": "driver" if local_entities else "spark"},
                         inputs=["50_clusters", "10_records_A", "10_records_B"])
 
     eval_metrics = None

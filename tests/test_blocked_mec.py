@@ -460,6 +460,36 @@ def test_comparator_without_local_form_uses_spark_build(spark):
     _contract(res)
 
 
+@pytest.mark.parametrize("fit_route", ["driver", "distributed"])
+def test_pandas_keys_fit_like_spark_keys(spark, monkeypatch, fit_route):
+    """Keys handed in as a pandas frame give the fit of the same keys as a
+    Spark frame: same route, M_est schema and rows. On the driver route the
+    records build constructs no pair-join plan, and ``M_est_local`` holds
+    M_est's rows."""
+    A, B, fit_args = _cpar_case(spark)
+    pairs = (A.select("block", "a").join(B.select("block", "b"), "block")
+             .toPandas().sort_values(["a", "b"], ignore_index=True))
+    if fit_route == "distributed":
+        monkeypatch.setattr(bm, "_FIT_LOCAL", 0)
+    spark_keys = blocked_mec(A, B, **fit_args, pairs=spark.createDataFrame(pairs))
+    if fit_route == "driver":
+        monkeypatch.setattr(bm, "comparison_vectors", lambda *a, **k: pytest.fail(
+            "the records build needs no pair-join plan"))
+    pandas_keys = blocked_mec(A, B, **fit_args, pairs=pairs)
+    assert spark_keys.route == pandas_keys.route == fit_route
+    assert spark_keys.M_est.schema == pandas_keys.M_est.schema
+    m_spark, m_pandas = _fit_outputs(spark_keys), _fit_outputs(pandas_keys)
+    pd.testing.assert_frame_equal(m_spark, m_pandas, check_exact=True)
+    if fit_route == "driver":
+        local = pandas_keys.M_est_local.sort_values(["a", "b"], ignore_index=True)
+        pd.testing.assert_frame_equal(local, m_pandas, check_exact=True)
+    else:
+        assert pandas_keys.M_est_local is None
+    for res in (spark_keys, pandas_keys):
+        _contract(res)
+        res.unpersist()
+
+
 def _fit_outputs(res, M_est=None):
     m = (res.M_est if M_est is None else M_est).toPandas()
     return m.sort_values(["a", "b"], ignore_index=True)

@@ -224,3 +224,88 @@ def test_component_count_is_committed_and_reused(spark, corpus, first_run):
     A, B, labels = corpus
     run2 = link_repo_files(spark, A, B, checkpoint_dir=ckdir, labels=labels)
     assert run2.n_components == run1.n_components
+
+
+_LOCAL_STAGES = ("30_components", "40_linkage", "50_clusters", "55_entities")
+
+
+def _snapshot(ckdir, stage):
+    """A committed stage as (sorted rows with ratios at 17 significant
+    digits, the parquet schema of every part file, the manifest schema)."""
+    import json
+    from pathlib import Path
+
+    import pyarrow.parquet as pq
+
+    data = Path(ckdir) / stage / "data"
+    pdf = pq.read_table(data).to_pandas()
+    rows = pdf.sort_values(list(pdf.columns), ignore_index=True).to_csv(
+        index=False, float_format="%.17g")
+    schemas = {str(pq.read_schema(f).remove_metadata())
+               for f in data.glob("part-*.parquet")}
+    manifest = json.loads((Path(ckdir) / stage / "manifest.json").read_text())
+    return rows, schemas, manifest["schema"]
+
+
+def test_stage_routes_write_identical_snapshots(spark, corpus, first_run,
+                                                monkeypatch, tmp_path):
+    """Stages 30-55 on the driver (pyarrow writes) and on Spark (forced by a
+    zero bound, which also runs the distributed component rounds) commit
+    the same rows, the same parquet schema (names, types, nullability) and
+    the same manifest schema, and each manifest names its route."""
+    from automatedreclin_spark.checkpoint import CheckpointManager
+    from automatedreclin_spark.operators import clustering as cl
+
+    _, ck_driver = first_run
+    A, B, _ = corpus
+    monkeypatch.setattr(cl, "_FINISH_LOCAL", 0)
+    link_repo_files(spark, A, B, checkpoint_dir=str(tmp_path))
+    for stage in _LOCAL_STAGES:
+        assert _snapshot(ck_driver, stage) == _snapshot(tmp_path, stage), stage
+    assert "side: int32 not null" in next(iter(_snapshot(tmp_path, "55_entities")[1]))
+    routes = {ck: {s: CheckpointManager(spark, str(ck)).manifest(s)["meta"]["route"]
+                   for s in ("30_components", "50_clusters", "55_entities")}
+              for ck in (ck_driver, tmp_path)}
+    assert set(routes[ck_driver].values()) == {"driver"}
+    assert set(routes[tmp_path].values()) == {"spark"}
+
+
+@pytest.mark.parametrize("torn", _LOCAL_STAGES)
+def test_torn_driver_written_stage_is_rebuilt(spark, corpus, first_run,
+                                              tmp_path, torn):
+    """A crash while a driver-written stage commits leaves its data (and
+    possibly its manifest) but no _COMMITTED marker, and nothing after it.
+    The rerun rebuilds that stage: a part file left in its data directory
+    by an earlier write is never read, and the matches and entities are
+    bit-identical to the fresh run's."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+
+    from automatedreclin_spark.checkpoint import CheckpointManager
+
+    _, ckdir = first_run
+    A, B, _ = corpus
+    ck = tmp_path / "ck"
+    shutil.copytree(ckdir, ck)
+    before = {s: _snapshot(ck, s) for s in _LOCAL_STAGES}
+    later = _LOCAL_STAGES[_LOCAL_STAGES.index(torn) + 1:]
+    for stage in later:
+        shutil.rmtree(ck / stage)
+    (ck / torn / "_COMMITTED").unlink()
+    # A stale file of the same schema whose ids would change every output.
+    data = ck / torn / "data"
+    stale = pq.read_table(next(data.glob("part-*.parquet")))
+    id_col = "id" if "id" in stale.column_names else "a"
+    stale = stale.set_column(stale.column_names.index(id_col), id_col,
+                             pc.add(stale[id_col], 10_000))
+    pq.write_table(stale, data / "part-00007-stale-c000.snappy.parquet")
+    assert stale.schema.field(id_col).type == pa.int64()
+
+    run = link_repo_files(spark, A, B, checkpoint_dir=str(ck))
+    assert (run.fit is None) == (torn != "30_components" and torn != "40_linkage")
+    rebuilt = CheckpointManager(spark, str(ck)).counters().toPandas()["stage"]
+    assert list(rebuilt[-1 - len(later):]) == [torn, *later]
+    assert not (data / "part-00007-stale-c000.snappy.parquet").exists()
+    for stage in _LOCAL_STAGES:
+        assert _snapshot(ck, stage) == before[stage], stage

@@ -316,13 +316,11 @@ def test_committed_stage_read_launches_no_job(spark, tmp_path):
     assert old.schema == inferred.schema and old.count() == 100
 
 
-def test_link_repo_files_recovery_launches_few_jobs(spark, tmp_path):
-    """A recovery that lost the fit and everything after it reads the four
-    committed stages back without a job, builds the fit's Ω on the driver
-    (the keys collect plus one collect of the prepared record values) and
-    rebuilds stages 40-55: 13 jobs, where inferring each snapshot's schema,
-    the block-summary aggregation and the Spark Ω collect made 25. The run
-    leaves no persisted RDD behind."""
+@pytest.fixture(scope="module")
+def linkage_jobs(spark, tmp_path_factory):
+    """Jobs launched by a fresh link_repo_files run on the driver route, and
+    by a recovery that lost the fit and everything after it, with the
+    persisted RDD count before and after the recovery."""
     import shutil
 
     from automatedreclin_spark.fixtures import synth_files
@@ -330,14 +328,35 @@ def test_link_repo_files_recovery_launches_few_jobs(spark, tmp_path):
 
     persistent = spark.sparkContext._jsc.getPersistentRDDs
     A, B, _ = synth_files(spark, n_a=120, n_b=240, seed=3)
-    ck = str(tmp_path)
+    ck = str(tmp_path_factory.mktemp("jobs_ck"))
+    before = _job_ids(spark)
     link_repo_files(spark, A, B, ck)
+    fresh = _job_ids(spark) - before
     for stage in ("40_linkage", "50_clusters", "55_entities"):
         shutil.rmtree(f"{ck}/{stage}")
     cached = persistent().size()
     before = _job_ids(spark)
     run = link_repo_files(spark, A, B, ck)
-    launched = _job_ids(spark) - before
+    recovery = _job_ids(spark) - before
+    return run, len(fresh), len(recovery), cached, persistent().size()
+
+
+def test_link_repo_files_recovery_launches_few_jobs(linkage_jobs):
+    """A recovery that lost the fit and everything after it reads the four
+    committed stages back without a job and runs stages 40-55 on the
+    driver: the fit's keys come from the committed pair snapshots, so its
+    only jobs are the collect of the prepared record values (two broadcast
+    id relations and the collect), and every snapshot is written with
+    pyarrow: 3 jobs, where the Spark-written stages, the keys collect and
+    the entities join made 13. The run leaves no persisted RDD behind."""
+    run, _, recovery, cached, after = linkage_jobs
     assert (run.fit.route, run.fit.omega_build) == ("driver", "records")
-    assert len(launched) <= 13, len(launched)
-    assert persistent().size() == cached
+    assert recovery <= 3, recovery
+    assert after == cached
+
+
+def test_link_repo_files_fresh_run_launches_few_jobs(linkage_jobs):
+    """A whole fresh run on the driver route: the two record snapshots and
+    blocking's jobs, then the fit's 3; stages 30-55 write no Spark job."""
+    _, fresh, _, _, _ = linkage_jobs
+    assert fresh <= 22, fresh
