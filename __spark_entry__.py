@@ -1,10 +1,11 @@
 """Driver contract for the spark-graft builder (PySpark target).
 
 entry(spark)  — flagship blocked binary MEC linkage at sf0.001
-queries()     — operator registry (SURVEY.md §2 + training-data ops)
-oracle_sql()  — DuckDB equivalents; ALL 27 queries have one (iterative fits
-                and the approximate IVF top-k via invariant-table oracles
-                whose anchors DuckDB recomputes independently)
+queries()     — operator registry: the 14 linkage and scoring queries of
+                SURVEY.md §2
+oracle_sql()  — DuckDB equivalents; every query has one (the iterative fits
+                via invariant-table oracles whose anchors DuckDB recomputes
+                independently)
 
 The registry callables run against WHATEVER SparkSession the driver passes;
 `_ensure_shipped` ships this package to executor Python workers via

@@ -5,8 +5,7 @@ the R package ``automatedRecLin`` (reference at /root/reference) on Apache
 Spark DataFrames: blocking, pairwise comparison vectors, maximum-entropy match
 classification (binary / continuous-parametric / continuous-nonparametric
 families), greedy one-to-one selection, transitive clustering, and the
-training-data-pipeline operators (dedup, similarity search, text stats) that a
-large-scale corpus needs.
+checkpointed end-to-end linkage job (``pipeline.link_repo_files``).
 
 Design notes (see SURVEY.md):
 - All hot-path computation is Catalyst column expressions or Arrow-vectorized

@@ -1,21 +1,17 @@
 """Driver-contract queries and their DuckDB oracle SQL.
 
-Each entry here is one operator from SURVEY.md §2 (or a training-data-pipeline
-op), expressed twice:
+Each entry here is one linkage or scoring operator from SURVEY.md §2,
+expressed twice:
 
 - ``QUERIES[name](spark, sf_dir) -> DataFrame`` — the Spark implementation
   using this package's operators;
-- ``ORACLES[name]`` — equivalent ANSI SQL for DuckDB over the pre-registered
-  views (region nation customer supplier part orders lineitem events
-  documents embeddings).
+- ``ORACLES[name]`` — equivalent ANSI SQL for DuckDB over a ``customer``
+  view of ``{sf_dir}/customer.parquet``.
 
-Parity anchors used throughout (verified in tests/test_entry.py):
+Parity anchors used throughout (verified in tests/test_oracles.py):
 - ``jaro_similarity`` (DuckDB) == our Jaro kernel == the reference's
   ``jarowinkler_complement`` base (stringdist jw, p=0)
 - ``levenshtein`` native on both sides
-- shared 60-bit token hash: Spark ``conv(substr(md5(x),1,15),16,10)::long``
-  == DuckDB ``('0x' || substr(md5(x),1,15))::BIGINT``
-- ``sha256`` hex equal on both sides
 
 Linkage queries run over record sets A/B derived deterministically from the
 ``customer`` table with SQL-expressible corruption (so the oracle can derive
@@ -42,14 +38,10 @@ from automatedreclin_spark.operators.comparison import comparison_vectors
 from automatedreclin_spark.operators.pairs import block_pairs, exact_match_pairs
 
 
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
-
-
 # -------------------------------------------------------- derived A/B views --
 
 def _record_sets(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame]:
-    cust = _t(spark, sf_dir, "customer")
+    cust = spark.read.parquet(f"{sf_dir}/customer.parquet")
     A = (
         cust.filter(F.col("c_custkey") % 3 != 0)
         .select(
@@ -351,671 +343,7 @@ UNION ALL SELECT 'n_candidate_pairs', (SELECT COUNT(*) FROM cand)::DOUBLE
 """
 
 
-# ------------------------------------------------- training-data-pipeline ----
-
-def q_dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact dedup: sha256(content) groups with canonical representative —
-    the per-row invariant hash of BASELINE.json (input_hint). Emits every
-    group so the value-hash check covers all 500 digests."""
-    docs = _t(spark, sf_dir, "documents")
-    return (
-        docs.groupBy(F.sha2(F.col("text"), 256).alias("content_sha"))
-        .agg(F.count(F.lit(1)).alias("n_copies"), F.min("doc_id").alias("canonical_id"))
-    )
-
-
-ORACLE_DEDUP_EXACT = """
-SELECT sha256(text) AS content_sha, COUNT(*) AS n_copies, MIN(doc_id) AS canonical_id
-FROM documents GROUP BY 1
-"""
-
-
-def q_text_token_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Token counting + quality signals per document (pure Catalyst)."""
-    docs = _t(spark, sf_dir, "documents")
-    toks = F.split(F.col("text"), " ")
-    return docs.select(
-        "doc_id",
-        F.size(toks).alias("n_tokens"),
-        F.size(F.array_distinct(toks)).alias("n_distinct_tokens"),
-        F.round(
-            F.size(F.array_distinct(toks)).cast("double") / F.size(toks), 6
-        ).alias("lexical_diversity"),
-        F.col("n_chars").alias("n_chars"),
-    )
-
-
-ORACLE_TOKEN_STATS = """
-SELECT doc_id,
-       len(string_split(text, ' ')) AS n_tokens,
-       len(list_distinct(string_split(text, ' '))) AS n_distinct_tokens,
-       ROUND(CAST(len(list_distinct(string_split(text, ' '))) AS DOUBLE)
-             / len(string_split(text, ' ')), 6) AS lexical_diversity,
-       n_chars
-FROM documents
-"""
-
-
-
-
-#: per-(lang, i, j) quadratic work ceiling for the exact ngram-Jaccard
-#: self-join: with B ≥ n_max/√T, the largest language's per-key expansion is
-#: ≤ T pairs, so no single task can become the straggler however skewed the
-#: language distribution is.
-_NGRAM_TARGET_PAIRS_PER_KEY = 4_000_000
-
-
-def _ngram_bucket_count(n_langs: int, n_max: int, parallelism: int) -> int:
-    """Triangle-bucket count B for the exact ngram-Jaccard self-join, sized
-    from the data instead of fixed (r5):
-
-    - parallelism floor: |lang| × B(B+1)/2 join keys ≥ 3 × cluster
-      parallelism, so the quadratic stage always has ≥3 task waves to
-      balance across (a fixed B=8 under-splits once the cluster is larger
-      than the key count);
-    - work ceiling: (n_max/B)² ≤ _NGRAM_TARGET_PAIRS_PER_KEY, so the
-      biggest language's per-key expansion is bounded regardless of skew.
-
-    Replication is B+1 rows per doc, so B is capped at 64 — past that the
-    exact baseline is the wrong tool and the MinHash-LSH path (ops/dedup)
-    is the answer."""
-    import math
-
-    n_langs = max(1, n_langs)
-    b_par = 1
-    while b_par * (b_par + 1) * n_langs < 6 * parallelism and b_par < 64:
-        b_par += 1
-    b_work = (math.ceil(n_max / math.sqrt(_NGRAM_TARGET_PAIRS_PER_KEY))
-              if n_max else 1)
-    return max(1, min(64, max(b_par, b_work)))
-
-
-def q_ngram_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Near-duplicate pairs by word-set Jaccard ≥ 0.5 within the same lang
-    (exact pairwise — the LSH variant is the scale path).
-
-    The self-join is TRIANGLE-BUCKETED: a plain ``join(right, "lang")`` hash-
-    partitions on the handful of distinct lang values, so ~5 of 32 tasks do
-    the entire quadratic expansion (measured 3.5→17 s straggler swings at
-    sf0.1). Each doc gets a bucket u = hash(id) % B; the LEFT side emits join
-    keys (u, j) for j ≥ u, the RIGHT side (i, v) for i ≤ v, and the equi-join
-    on (lang, i, j) meets every unordered doc pair exactly once — same-bucket
-    pairs deduped by id_a < id_b, cross-bucket pairs canonicalized with
-    least/greatest (Jaccard is symmetric). Parallelism becomes
-    |lang| × B(B+1)/2 keys instead of |lang|.
-
-    B is AUTO-SIZED from the per-lang doc counts (one tiny agg job) — see
-    ``_ngram_bucket_count``."""
-    from automatedreclin_spark.operators.util import ensure_parallelism
-
-    raw = ensure_parallelism(_t(spark, sf_dir, "documents"))
-    stats = raw.groupBy("lang").agg(F.count(F.lit(1)).alias("c")).collect()
-    B = _ngram_bucket_count(
-        n_langs=len(stats),
-        n_max=max((r["c"] for r in stats), default=0),
-        parallelism=spark.sparkContext.defaultParallelism,
-    )
-    docs = raw.select(
-        "doc_id", "lang", F.array_distinct(F.split(F.col("text"), " ")).alias("toks"),
-        F.pmod(F.xxhash64("doc_id"), F.lit(B)).alias("bkt"),
-    )
-    js = F.sequence(F.col("bkt"), F.lit(B - 1))
-    left = docs.select(
-        "lang", F.col("bkt").alias("i"), F.explode(js).alias("j"),
-        F.col("doc_id").alias("id_a"), F.col("toks").alias("toks_a"),
-    )
-    is_ = F.sequence(F.lit(0), F.col("bkt"))
-    right = docs.select(
-        "lang", F.explode(is_).alias("i"), F.col("bkt").alias("j"),
-        F.col("doc_id").alias("id_b"), F.col("toks").alias("toks_b"),
-    )
-    pairs = left.join(right, ["lang", "i", "j"]).filter(
-        (F.col("i") != F.col("j")) | (F.col("id_a") < F.col("id_b"))
-    )
-    jac = F.size(F.array_intersect("toks_a", "toks_b")).cast("double") / F.size(
-        F.array_union("toks_a", "toks_b")
-    )
-    return (
-        pairs.withColumn("jaccard", F.round(jac, 6))
-        .filter(F.col("jaccard") >= 0.5)
-        .select(
-            F.least("id_a", "id_b").alias("id_a"),
-            F.greatest("id_a", "id_b").alias("id_b"),
-            "jaccard",
-        )
-    )
-
-
-ORACLE_NGRAM_JACCARD = """
-WITH d AS (SELECT doc_id, lang, list_distinct(string_split(text, ' ')) AS toks
-           FROM documents)
-SELECT x.doc_id AS id_a, y.doc_id AS id_b,
-       ROUND(CAST(len(list_intersect(x.toks, y.toks)) AS DOUBLE)
-             / len(list_distinct(list_concat(x.toks, y.toks))), 6) AS jaccard
-FROM d x JOIN d y ON x.lang = y.lang AND x.doc_id < y.doc_id
-WHERE CAST(len(list_intersect(x.toks, y.toks)) AS DOUBLE)
-      / len(list_distinct(list_concat(x.toks, y.toks))) >= 0.5
-"""
-
-
-_MINHASH_PERMS = [(1_000_003, 12_345), (999_983, 54_321), (1_000_033, 77_777), (999_979, 13_579)]
-_MERSENNE = (1 << 61) - 1
-
-
-def q_minhash_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """MinHash signatures (4 permutations) over word tokens, built on the
-    shared md5-derived 60-bit token hash so the oracle reproduces them
-    bit-for-bit. LSH banding/bucketing builds on these (ops/dedup.py)."""
-    docs = _t(spark, sf_dir, "documents")
-    tok_hash = F.conv(
-        F.substring(F.md5(F.col("tok")), 1, 15), 16, 10
-    ).cast("decimal(38,0)")
-    exploded = docs.select(
-        "doc_id", F.explode(F.array_distinct(F.split(F.col("text"), " "))).alias("tok")
-    ).withColumn("h", tok_hash)
-    aggs = [
-        F.min(((F.lit(a) * F.col("h") + F.lit(b)) % F.lit(_MERSENNE)).cast("long")).alias(f"mh_{i}")
-        for i, (a, b) in enumerate(_MINHASH_PERMS)
-    ]
-    return exploded.groupBy("doc_id").agg(*aggs)
-
-
-ORACLE_MINHASH = f"""
-WITH toks AS (
-  SELECT doc_id, unnest(list_distinct(string_split(text, ' '))) AS tok
-  FROM documents
-), hashed AS (
-  SELECT doc_id,
-         CAST(('0x' || substr(md5(tok), 1, 15)) AS BIGINT)::HUGEINT AS h
-  FROM toks
-)
-SELECT doc_id,
-  {", ".join(
-    f"CAST(MIN(({a}::HUGEINT * h + {b}) % {_MERSENNE}) AS BIGINT) AS mh_{i}"
-    for i, (a, b) in enumerate(_MINHASH_PERMS)
-  )}
-FROM hashed GROUP BY doc_id
-"""
-
-
-def q_ann_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Brute-force cosine top-3 neighbors for query vectors (vec_id < 10)
-    among the rest — the exactness baseline for ANN (ops/similarity.py)."""
-    from pyspark.sql.window import Window
-
-    emb = _t(spark, sf_dir, "embeddings").select(
-        "vec_id", F.transform(F.col("embedding"), lambda x: x.cast("double")).alias("v")
-    )
-    q = emb.filter(F.col("vec_id") < 10).select(
-        F.col("vec_id").alias("query_id"), F.col("v").alias("qv")
-    )
-    c = emb.filter(F.col("vec_id") >= 10).select(
-        F.col("vec_id").alias("neighbor_id"), F.col("v").alias("cv")
-    )
-    dot = F.aggregate(
-        F.zip_with("qv", "cv", lambda x, y: x * y), F.lit(0.0), lambda acc, x: acc + x
-    )
-    nq = F.sqrt(F.aggregate("qv", F.lit(0.0), lambda acc, x: acc + x * x))
-    nc = F.sqrt(F.aggregate("cv", F.lit(0.0), lambda acc, x: acc + x * x))
-    # Explicit broadcast of the (tiny) query side: the corpus streams through
-    # a BroadcastNestedLoopJoin with no shuffle — the only plan that scales
-    # this brute-force baseline to a large corpus.
-    scored = F.broadcast(q).crossJoin(c).select(
-        "query_id", "neighbor_id", F.round(dot / (nq * nc), 6).alias("cosine")
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= 3)
-        .select("query_id", "neighbor_id", "cosine", "rank")
-    )
-
-
-ORACLE_ANN_COSINE = """
-WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
-q AS (SELECT vec_id AS query_id, v AS qv FROM e WHERE vec_id < 10),
-c AS (SELECT vec_id AS neighbor_id, v AS cv FROM e WHERE vec_id >= 10),
-scored AS (
-  SELECT query_id, neighbor_id,
-         ROUND(list_dot_product(qv, cv) /
-               (sqrt(list_dot_product(qv, qv)) * sqrt(list_dot_product(cv, cv))), 6) AS cosine
-  FROM q CROSS JOIN c
-)
-SELECT query_id, neighbor_id, cosine, rank FROM (
-  SELECT query_id, neighbor_id, cosine,
-         ROW_NUMBER() OVER (PARTITION BY query_id
-                            ORDER BY cosine DESC, neighbor_id ASC) AS rank
-  FROM scored
-) WHERE rank <= 3
-"""
-
-
-QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
-    "cv_binary": q_cv_binary,
-    "cv_levenshtein": q_cv_levenshtein,
-    "cv_jaro": q_cv_jaro,
-    "exact_match_seeds": q_exact_match_seeds,
-    "block_summary": q_block_summary,
-    "evaluation_metrics": q_evaluation_metrics,
-    "mec_binary_customer": q_mec_binary_customer,
-    "dedup_exact": q_dedup_exact,
-    "text_token_stats": q_text_token_stats,
-    "ngram_jaccard_pairs": q_ngram_jaccard_pairs,
-    "minhash_signatures": q_minhash_signatures,
-    "ann_cosine_topk": q_ann_cosine_topk,
-}
-
-ORACLES: dict[str, str] = {
-    "cv_binary": ORACLE_CV_BINARY,
-    "cv_levenshtein": ORACLE_CV_LEVENSHTEIN,
-    "cv_jaro": ORACLE_CV_JARO,
-    "exact_match_seeds": ORACLE_EXACT_SEEDS,
-    "block_summary": ORACLE_BLOCK_SUMMARY,
-    "evaluation_metrics": ORACLE_EVALUATION,
-    # mec_binary_customer: invariant-table oracle added below.
-    "dedup_exact": ORACLE_DEDUP_EXACT,
-    "text_token_stats": ORACLE_TOKEN_STATS,
-    "ngram_jaccard_pairs": ORACLE_NGRAM_JACCARD,
-    "minhash_signatures": ORACLE_MINHASH,
-    "ann_cosine_topk": ORACLE_ANN_COSINE,
-}
-
-
-# --------------------------------------------------- ops: quality / dedup ----
-
-def q_text_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Quality-feature extraction (ops/textstats.py) — corpus-filter signals,
-    all whole-stage-codegen expressions."""
-    from automatedreclin_spark.ops.textstats import quality_features
-
-    docs = _t(spark, sf_dir, "documents")
-    q = quality_features(docs, "doc_id", "text")
-    return q.select(
-        "id", "n_tokens", "n_distinct_tokens",
-        F.round("lexical_diversity", 6).alias("lexical_diversity"),
-        F.round("punct_ratio", 6).alias("punct_ratio"),
-        F.round("digit_ratio", 6).alias("digit_ratio"),
-        F.round("mean_word_len", 6).alias("mean_word_len"),
-    )
-
-
-ORACLE_TEXT_QUALITY = """
-WITH d AS (
-  SELECT doc_id AS id, text, length(text) AS n_chars,
-         CASE WHEN length(trim(text)) = 0 THEN 0
-              ELSE len(string_split(trim(text), ' ')) END AS n_tokens,
-         CASE WHEN length(trim(text)) = 0 THEN 0
-              ELSE len(list_distinct(string_split(trim(text), ' '))) END AS n_distinct_tokens,
-         length(regexp_replace(text, '[^[:punct:]]', '', 'g')) AS punct,
-         length(regexp_replace(text, '[^0-9]', '', 'g')) AS digits
-  FROM documents
-)
-SELECT id, n_tokens, n_distinct_tokens,
-       ROUND(CASE WHEN n_tokens > 0 THEN CAST(n_distinct_tokens AS DOUBLE) / n_tokens ELSE 0 END, 6) AS lexical_diversity,
-       ROUND(CASE WHEN n_chars > 0 THEN CAST(punct AS DOUBLE) / n_chars ELSE 0 END, 6) AS punct_ratio,
-       ROUND(CASE WHEN n_chars > 0 THEN CAST(digits AS DOUBLE) / n_chars ELSE 0 END, 6) AS digit_ratio,
-       ROUND(CASE WHEN n_tokens > 0 THEN CAST(n_chars - n_tokens + 1 AS DOUBLE) / n_tokens ELSE 0 END, 6) AS mean_word_len
-FROM d
-"""
-
-
-def q_minhash_lsh_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """MinHash+LSH near-dup pipeline (ops/dedup.py): 16-hash signatures over
-    word tokens, 4 bands, bucket join, exact-Jaccard verification ≥ 0.5."""
-    from automatedreclin_spark.ops.dedup import minhash_dedup
-
-    docs = _t(spark, sf_dir, "documents")
-    out = minhash_dedup(docs, "doc_id", "text", n_hashes=16, bands=4, threshold=0.5)
-    return out.select("id_a", "id_b", F.round("jaccard", 6).alias("jaccard"))
-
-
-def _minhash_lsh_oracle() -> str:
-    from automatedreclin_spark.ops.dedup import MINHASH_PERMS_16
-    from automatedreclin_spark.operators.blocking import MERSENNE_61
-
-    mh_cols = ",\n    ".join(
-        f"CAST(MIN(({a}::HUGEINT * h + {b}) % {MERSENNE_61}) AS BIGINT) AS mh_{i}"
-        for i, (a, b) in enumerate(MINHASH_PERMS_16)
-    )
-    band_keys = []
-    for band in range(4):
-        cols = [f"mh_{band * 4 + r}" for r in range(4)]
-        band_keys.append("(" + " AND ".join(f"x.{c} = y.{c}" for c in cols) + ")")
-    band_join = " OR ".join(band_keys)
-    return f"""
-WITH toks AS (
-  SELECT doc_id, unnest(list_distinct(string_split(lower(text), ' '))) AS tok
-  FROM documents
-), hashed AS (
-  SELECT doc_id, CAST(('0x' || substr(md5(tok), 1, 15)) AS BIGINT)::HUGEINT AS h
-  FROM toks
-), sigs AS (
-  SELECT doc_id, {mh_cols} FROM hashed GROUP BY doc_id
-), cand AS (
-  SELECT DISTINCT x.doc_id AS id_a, y.doc_id AS id_b
-  FROM sigs x JOIN sigs y ON x.doc_id < y.doc_id AND ({band_join})
-), tsets AS (
-  SELECT doc_id, list_distinct(string_split(lower(text), ' ')) AS t FROM documents
-)
-SELECT id_a, id_b,
-       ROUND(CAST(len(list_intersect(ta.t, tb.t)) AS DOUBLE)
-             / len(list_distinct(list_concat(ta.t, tb.t))), 6) AS jaccard
-FROM cand JOIN tsets ta ON cand.id_a = ta.doc_id
-          JOIN tsets tb ON cand.id_b = tb.doc_id
-WHERE CAST(len(list_intersect(ta.t, tb.t)) AS DOUBLE)
-      / len(list_distinct(list_concat(ta.t, tb.t))) >= 0.5
-"""
-
-
-def q_simhash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """SimHash Hamming-ball near-dup (ops/dedup.py). md5-bit majority vote in
-    a pandas UDF; the pigeonhole band join is a complete Hamming-8 cover, so
-    the oracle is the brute-force hamming filter over SQL-rebuilt signatures
-    (hash-checked)."""
-    from automatedreclin_spark.ops.dedup import simhash_dedup
-
-    docs = _t(spark, sf_dir, "documents")
-    return simhash_dedup(docs, "doc_id", "text", max_hamming=8)
-
-
-def q_doc_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Winnowing fingerprints (ops/textstats.py) reduced to per-doc scalars
-    (count / min / max of the fingerprint set — order-insensitive), hash-
-    checked against a DuckDB rebuild of the same md5 k-gram arithmetic."""
-    from automatedreclin_spark.ops.textstats import fingerprint
-
-    docs = _t(spark, sf_dir, "documents")
-    fp = fingerprint(docs, "doc_id", "text", k=5, window=4)
-    return fp.select(
-        "id",
-        "n_fingerprints",
-        F.array_min("fingerprints").alias("fp_min"),
-        F.array_max("fingerprints").alias("fp_max"),
-    )
-
-
-def q_language_id(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Heuristic language ID (ops/textstats.py) — deterministic marker
-    counting, mirrored exactly in the DuckDB oracle (hash-checked); accuracy
-    vs the lang column additionally asserted in tests."""
-    from automatedreclin_spark.ops.textstats import language_id
-
-    docs = _t(spark, sf_dir, "documents")
-    return language_id(docs, "doc_id", "text")
-
-
-def q_ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """IVF approximate top-k (ops/similarity.py). The result is inherently
-    approximate (driver-sampled Lloyd centroids), so — like the iterative MEC
-    fits — the query emits its CONTRACT as an invariant table:
-
-    - structural zeros computed from the IVF result against an in-query
-      brute-force rerun: exactly k rows per query, contiguous ranks, no IVF
-      cosine above the brute cosine at the same rank (IVF ⊆ exact candidate
-      space), overall recall@k ≥ 0.5 (observed ~0.73 at both test SFs);
-    - data-dependent anchors DuckDB recomputes independently: n_queries and,
-      per query, the brute-force k-th cosine (rounded) and the brute top-k
-      neighbor-id sum — pinning the exactness yardstick itself.
-    """
-    from automatedreclin_spark.ops.similarity import brute_force_topk, ivf_topk
-
-    emb = _t(spark, sf_dir, "embeddings")
-    queries = emb.filter(F.col("vec_id") < 10)
-    corpus = emb.filter(F.col("vec_id") >= 10)
-    k = 3
-    ivf = ivf_topk(queries, corpus, k=k, n_centroids=8, n_probe=4).toPandas()
-    brute = brute_force_topk(queries, corpus, k=k).toPandas()
-    n_queries = queries.count()
-
-    rows_minus = float(len(ivf) - k * n_queries)
-    rank_viol = float(
-        (ivf.groupby("query_id")["rank"].sum() != k * (k + 1) // 2).sum())
-    merged = ivf.merge(brute, on=["query_id", "rank"], suffixes=("_ivf", "_bf"))
-    margin_viol = float((merged["cosine_ivf"] > merged["cosine_bf"] + 1e-9).sum())
-    hits = ivf.merge(brute, on=["query_id", "neighbor_id"])
-    recall = len(hits) / float(k * n_queries)
-    out = [
-        ("ivf_rows_minus_k_per_query", rows_minus),
-        ("rank_contiguity_violations", rank_viol),
-        ("margin_violations", margin_viol),
-        ("overall_recall_floor_ok", 1.0 if recall >= 0.5 else 0.0),
-        ("n_queries", float(n_queries)),
-    ]
-    kth = brute[brute["rank"] == k]
-    for r in kth.itertuples():
-        out.append((f"brute_k{k}_cos_q{r.query_id}", round(r.cosine, 5)))
-    nbr = brute.groupby("query_id")["neighbor_id"].sum()
-    for qid, s in nbr.items():
-        out.append((f"brute_top{k}_nbr_sum_q{qid}", float(s)))
-    return _invariant_df(spark, out)
-
-
-QUERIES.update({
-    "text_quality": q_text_quality,
-    "minhash_lsh_dedup": q_minhash_lsh_dedup,
-    "simhash_dedup": q_simhash_dedup,
-    "doc_fingerprints": q_doc_fingerprints,
-    "language_id": q_language_id,
-    "ann_ivf_topk": q_ann_ivf_topk,
-})
-
-# SimHash is md5-derived and fully deterministic, so it IS SQL-expressible:
-# rebuild the 64-bit signature in DuckDB (two-part hex → HUGEINT assembly,
-# per-bit ±1 majority vote over distinct tokens), then — because the
-# pigeonhole band join is a COMPLETE cover of the Hamming-8 ball — the pair
-# set equals the brute-force hamming(sig_a, sig_b) ≤ 8 filter.
-_SIMHASH_SIG_SQL = """
-sig_raw AS (
-  SELECT doc_id,
-         SUM(bit::HUGEINT << j) AS s
-  FROM (
-    SELECT doc_id, j,
-           CASE WHEN SUM(CASE WHEN (h >> j) & 1 = 1 THEN 1 ELSE -1 END) > 0
-                THEN 1 ELSE 0 END AS bit
-    FROM (
-      SELECT doc_id,
-             (('0x'||substr(md5(tok),1,8))::BIGINT::HUGEINT * 4294967296
-              + ('0x'||substr(md5(tok),9,8))::BIGINT) AS h
-      FROM (
-        SELECT doc_id,
-               unnest(list_distinct(regexp_split_to_array(trim(lower(text)), '\\s+'))) AS tok
-        FROM documents WHERE length(trim(text)) > 0
-      )
-    ) hashed CROSS JOIN (SELECT unnest(range(64)) AS j) js
-    GROUP BY doc_id, j
-  ) bits
-  GROUP BY doc_id
-),
-sigs AS (
-  SELECT d.doc_id,
-         CAST(CASE WHEN s >= 9223372036854775808::HUGEINT
-                   THEN s - 18446744073709551616::HUGEINT
-                   ELSE COALESCE(s, 0) END AS BIGINT) AS simhash
-  FROM documents d LEFT JOIN sig_raw USING (doc_id)
-)
-"""
-
-ORACLE_SIMHASH_DEDUP = f"""
-WITH {_SIMHASH_SIG_SQL}
-SELECT x.doc_id AS id_a, y.doc_id AS id_b,
-       bit_count(xor(x.simhash, y.simhash)) AS hamming
-FROM sigs x JOIN sigs y ON x.doc_id < y.doc_id
-WHERE bit_count(xor(x.simhash, y.simhash)) <= 8
-"""
-
-# Winnowing is pure md5 arithmetic over k-gram windows — reproducible in
-# DuckDB with list_transform/list_slice mirroring the staged Catalyst arrays.
-ORACLE_DOC_FINGERPRINTS = """
-WITH staged AS (
-  SELECT doc_id, regexp_split_to_array(lower(text), '\\s+') AS toks FROM documents
-), kg AS (
-  SELECT doc_id,
-    list_transform(range(0, greatest(len(toks)-5, 0)+1),
-      i -> ('0x'||substr(md5(array_to_string(list_slice(toks, i+1, i+5), ' ')),1,15))::BIGINT
-           % 2305843009213693951) AS kgh
-  FROM staged
-), mins AS (
-  SELECT doc_id,
-    list_distinct(list_transform(range(0, greatest(len(kgh)-4, 0)+1),
-      i -> list_min(list_slice(kgh, i+1, i+4)))) AS fps
-  FROM kg
-)
-SELECT doc_id AS id, len(fps) AS n_fingerprints,
-       list_min(fps) AS fp_min, list_max(fps) AS fp_max
-FROM mins
-"""
-
-
-def _language_id_oracle() -> str:
-    """The language-ID heuristic is deterministic marker counting — mirror it
-    in SQL, including Python's dict-order tie-break (en > de > fr > es) and
-    the CJK codepoint-share early exit."""
-    from automatedreclin_spark.ops.textstats import _LANG_MARKERS
-
-    marker_scores = ", ".join(
-        f"len(list_filter(toks, t -> list_contains({mk!r}, t)))::DOUBLE"
-        f" / greatest(len(toks), 1) AS s_{lang}"
-        for lang, mk in _LANG_MARKERS.items()
-    )
-    return f"""
-WITH base AS (
-  SELECT doc_id AS id, text,
-         length(regexp_replace(text, '[^一-鿿]', '', 'g')) AS cjk,
-         length(text) AS n,
-         CASE WHEN length(trim(text)) = 0 THEN []::VARCHAR[]
-              ELSE regexp_split_to_array(trim(lower(text)), '\\s+') END AS toks
-  FROM documents
-), scored AS (
-  SELECT id, cjk, n, {marker_scores} FROM base
-)
-SELECT id,
-  CASE WHEN n IS NULL OR n = 0 THEN 'und'
-       WHEN cjk::DOUBLE / greatest(n, 1) > 0.2 THEN 'zh'
-       WHEN greatest(s_en, s_de, s_fr, s_es) = 0 THEN 'und'
-       WHEN s_en >= s_de AND s_en >= s_fr AND s_en >= s_es THEN 'en'
-       WHEN s_de >= s_fr AND s_de >= s_es THEN 'de'
-       WHEN s_fr >= s_es THEN 'fr'
-       ELSE 'es' END AS lang_pred,
-  CASE WHEN n IS NULL OR n = 0 THEN 0.0
-       WHEN cjk::DOUBLE / greatest(n, 1) > 0.2 THEN ROUND(cjk::DOUBLE / n, 6)
-       ELSE ROUND(greatest(s_en, s_de, s_fr, s_es), 6) END AS lang_conf
-FROM scored
-"""
-
-
-# The ANN invariant anchors mirror Spark's cosine formula exactly:
-# dot/(sqrt(dot(q,q))*sqrt(dot(c,c))) over double-cast vectors (same fold
-# order → bit-identical), with the same (cosine DESC, neighbor_id ASC)
-# deterministic rank tie-break as brute_force_topk.
-ORACLE_ANN_IVF_INVARIANTS = """
-WITH q AS (
-  SELECT vec_id AS query_id, embedding::DOUBLE[] AS qv
-  FROM embeddings WHERE vec_id < 10
-), c AS (
-  SELECT vec_id AS neighbor_id, embedding::DOUBLE[] AS cv
-  FROM embeddings WHERE vec_id >= 10
-), scored AS (
-  SELECT query_id, neighbor_id,
-         list_dot_product(qv, cv)
-         / (sqrt(list_dot_product(qv, qv)) * sqrt(list_dot_product(cv, cv)))
-         AS cos
-  FROM q CROSS JOIN c
-), ranked AS (
-  SELECT query_id, neighbor_id, cos,
-         row_number() OVER (PARTITION BY query_id
-                            ORDER BY cos DESC, neighbor_id ASC) AS r
-  FROM scored
-), top AS (SELECT * FROM ranked WHERE r <= 3)
-SELECT 'ivf_rows_minus_k_per_query' AS metric, 0.0 AS value
-UNION ALL SELECT 'rank_contiguity_violations', 0.0
-UNION ALL SELECT 'margin_violations', 0.0
-UNION ALL SELECT 'overall_recall_floor_ok', 1.0
-UNION ALL SELECT 'n_queries', (SELECT COUNT(*) FROM q)::DOUBLE
-UNION ALL SELECT 'brute_k3_cos_q' || query_id, ROUND(cos, 5) FROM top WHERE r = 3
-UNION ALL SELECT 'brute_top3_nbr_sum_q' || query_id, SUM(neighbor_id)::DOUBLE
-          FROM top GROUP BY query_id
-"""
-
-
-ORACLES.update({
-    "text_quality": ORACLE_TEXT_QUALITY,
-    "minhash_lsh_dedup": _minhash_lsh_oracle(),
-    "simhash_dedup": ORACLE_SIMHASH_DEDUP,
-    "doc_fingerprints": ORACLE_DOC_FINGERPRINTS,
-    "language_id": _language_id_oracle(),
-    "ann_ivf_topk": ORACLE_ANN_IVF_INVARIANTS,
-})
-
-
-# ------------------------------------------------ clustering / model paths ---
-
-def q_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Transitive near-dup clusters: connected components
-    (operators/clustering.py large-star/small-star) over the LSH-verified
-    near-dup pair graph. Oracle = recursive-CTE min-label closure in DuckDB."""
-    from automatedreclin_spark.operators.clustering import connected_components
-    from automatedreclin_spark.ops.dedup import minhash_dedup
-
-    docs = _t(spark, sf_dir, "documents")
-    pairs = minhash_dedup(docs, "doc_id", "text", n_hashes=16, bands=4, threshold=0.5)
-    comp = connected_components(pairs.select(
-        F.col("id_a").alias("u"), F.col("id_b").alias("v")
-    ))
-    return comp.select(F.col("id").alias("doc_id"), F.col("component").alias("cluster_id"))
-
-
-def _dedup_clusters_oracle(rounds: int = 16) -> str:
-    """Connected components as unrolled min-label propagation (NOT a
-    transitive-closure recursive CTE): round k relabels every node with the
-    min label over itself and its neighbors, so each round is one hash join
-    + group-by over the edge list — O(rounds x |E|) total. The old
-    ``reach(id, r)`` closure materializes O(sum component_size^2) rows, which
-    is fine at sf0.01 (61k pairs / 500 docs) but unrunnable at sf0.1's
-    near-clique density (6M pairs / 5k docs => ~25M closure rows ground
-    through DuckDB's mostly single-threaded recursion).
-
-    Min-label propagation needs component-diameter rounds; LSH similarity
-    graphs are shallow (bucket cliques chained by shared members), so 16 is
-    generous. Convergence is ASSERTED, not assumed: if the last two rounds
-    differ on any node, a poison row (-1, -1) is emitted so the driver's
-    row-count/hash compare fails loudly instead of blessing a half-converged
-    labeling."""
-    pair_sql = _minhash_lsh_oracle()
-    stages = []
-    for k in range(1, rounds + 1):
-        # AS MATERIALIZED throughout: DuckDB 1.0 inlines plain CTEs at every
-        # reference, so without it each round re-evaluates the whole minhash
-        # pair rebuild (measured 15x slower end-to-end).
-        stages.append(
-            f"l{k} AS MATERIALIZED (SELECT e.u AS id, MIN(l.label) AS label "
-            f"FROM edges e JOIN l{k - 1} l ON l.id = e.v GROUP BY e.u)"
-        )
-    stage_sql = ",\n".join(stages)
-    return f"""
-WITH pairs AS MATERIALIZED ({pair_sql}),
-edges AS MATERIALIZED (
-  SELECT id_a AS u, id_b AS v FROM pairs
-  UNION ALL
-  SELECT id_b AS u, id_a AS v FROM pairs
-  UNION ALL
-  SELECT DISTINCT id_a AS u, id_a AS v FROM pairs
-  UNION ALL
-  SELECT DISTINCT id_b AS u, id_b AS v FROM pairs
-),
-l0 AS MATERIALIZED (SELECT DISTINCT u AS id, u AS label FROM edges),
-{stage_sql},
-conv AS (
-  SELECT count(*) AS n_unconverged
-  FROM l{rounds} a JOIN l{rounds - 1} b ON a.id = b.id
-  WHERE a.label <> b.label
-)
-SELECT id AS doc_id, label AS cluster_id FROM l{rounds}
-UNION ALL
-SELECT -1 AS doc_id, -1 AS cluster_id FROM conv WHERE n_unconverged > 0
-"""
-
+# ------------------------------------------------------ blocked / supervised --
 
 def q_blocked_mec_customer(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Blocked inverted MEC (models/blocked_mec.py) — the fit emits its
@@ -1136,8 +464,6 @@ UNION ALL SELECT 'n_holdout_pairs', (SELECT COUNT(*) FROM hp)::DOUBLE
 """
 
 
-
-
 def q_supervised_predict_ratio2(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Supervised train requested with prob_ratio="2" — the feasibility-
     downgrade path (supervised_learning.R:220-236): ratio "2" denominates by
@@ -1222,45 +548,6 @@ UNION ALL SELECT 'one_to_one_b_violations', 0.0
 UNION ALL SELECT 'n_hold_a', (SELECT COUNT(*) FROM A WHERE a % 7 = 0)::DOUBLE
 UNION ALL SELECT 'n_hold_b', (SELECT COUNT(*) FROM B WHERE b % 7 = 0)::DOUBLE
 """
-
-
-QUERIES.update({
-    "dedup_clusters": q_dedup_clusters,
-    "blocked_mec_customer": q_blocked_mec_customer,
-    "supervised_predict": q_supervised_predict,
-    "supervised_predict_ratio2": q_supervised_predict_ratio2,
-})
-ORACLES.update({
-    "dedup_clusters": _dedup_clusters_oracle(),
-    "mec_binary_customer": ORACLE_MEC_INVARIANTS,
-    "blocked_mec_customer": ORACLE_BLOCKED_MEC_INVARIANTS,
-    "supervised_predict": ORACLE_SUPERVISED_INVARIANTS,
-    "supervised_predict_ratio2": ORACLE_SUPERVISED_RATIO2,
-})
-
-
-def q_embedding_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Embedding-cosine near-dup pairs (exact baseline, oracle-checked; the
-    LSH variant is validated against this in tests)."""
-    from automatedreclin_spark.ops.dedup import embedding_cosine_dedup
-
-    emb = _t(spark, sf_dir, "embeddings")
-    return embedding_cosine_dedup(emb, "vec_id", "embedding",
-                                  threshold=0.35, exact=True)
-
-
-ORACLE_EMBEDDING_DEDUP = """
-WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings)
-SELECT x.vec_id AS id_a, y.vec_id AS id_b,
-       ROUND(list_dot_product(x.v, y.v)
-             / (sqrt(list_dot_product(x.v, x.v)) * sqrt(list_dot_product(y.v, y.v))), 6) AS cosine
-FROM e x JOIN e y ON x.vec_id < y.vec_id
-WHERE list_dot_product(x.v, y.v)
-      / (sqrt(list_dot_product(x.v, x.v)) * sqrt(list_dot_product(y.v, y.v))) >= 0.35
-"""
-
-QUERIES["embedding_dedup"] = q_embedding_dedup
-ORACLES["embedding_dedup"] = ORACLE_EMBEDDING_DEDUP
 
 
 # ------------------------------------------ fixed-param ratio scoring (A5/A6) --
@@ -1367,18 +654,16 @@ FROM scored
 """
 
 
-QUERIES["score_ratio_fixed_params"] = q_score_ratio_fixed_params
-ORACLES["score_ratio_fixed_params"] = _score_ratio_oracle()
 
 
-# ---------------------- r4: T6 alpha path / flr bisection / dups-in-A -------
+# ------------------------------- T6 alpha path / flr bisection / dups-in-A ---
 #
-# These three queries exist so CORRECTNESS and BENCH gate the library's
-# scale paths every round (VERDICT r3 #4): the alpha U-drop's sketch
-# retention (T6, internals.R:1831-1839), the flr/mmr DISTRIBUTED threshold
-# bisection (forced via exact_collect_max=0), and the duplicates_in_A
-# selection mode. Each emits its structural contract as an invariant table
-# plus data-dependent anchors DuckDB recomputes independently.
+# These three queries exist so the oracle check gates the library's scale
+# paths: the alpha U-drop's sketch retention (T6, internals.R:1831-1839),
+# the flr/mmr DISTRIBUTED threshold bisection (forced via
+# exact_collect_max=0), and the duplicates_in_A selection mode. Each emits
+# its structural contract as an invariant table plus data-dependent anchors
+# DuckDB recomputes independently.
 
 def q_blocked_mec_alpha(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Blocked inverted MEC with alpha=0.25 and a continuous name gamma —
@@ -1600,13 +885,37 @@ UNION ALL SELECT 'n_candidate_pairs', (SELECT SUM(na * nb) FROM bs)::DOUBLE
 """
 
 
-QUERIES.update({
+
+QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
+    "cv_binary": q_cv_binary,
+    "cv_levenshtein": q_cv_levenshtein,
+    "cv_jaro": q_cv_jaro,
+    "exact_match_seeds": q_exact_match_seeds,
+    "block_summary": q_block_summary,
+    "evaluation_metrics": q_evaluation_metrics,
+    "mec_binary_customer": q_mec_binary_customer,
+    "blocked_mec_customer": q_blocked_mec_customer,
+    "supervised_predict": q_supervised_predict,
+    "supervised_predict_ratio2": q_supervised_predict_ratio2,
+    "score_ratio_fixed_params": q_score_ratio_fixed_params,
     "blocked_mec_alpha": q_blocked_mec_alpha,
     "mec_flr_customer": q_mec_flr_customer,
     "blocked_mec_dups": q_blocked_mec_dups,
-})
-ORACLES.update({
+}
+
+ORACLES: dict[str, str] = {
+    "cv_binary": ORACLE_CV_BINARY,
+    "cv_levenshtein": ORACLE_CV_LEVENSHTEIN,
+    "cv_jaro": ORACLE_CV_JARO,
+    "exact_match_seeds": ORACLE_EXACT_SEEDS,
+    "block_summary": ORACLE_BLOCK_SUMMARY,
+    "evaluation_metrics": ORACLE_EVALUATION,
+    "mec_binary_customer": ORACLE_MEC_INVARIANTS,
+    "blocked_mec_customer": ORACLE_BLOCKED_MEC_INVARIANTS,
+    "supervised_predict": ORACLE_SUPERVISED_INVARIANTS,
+    "supervised_predict_ratio2": ORACLE_SUPERVISED_RATIO2,
+    "score_ratio_fixed_params": _score_ratio_oracle(),
     "blocked_mec_alpha": ORACLE_BLOCKED_MEC_ALPHA,
     "mec_flr_customer": ORACLE_MEC_FLR,
     "blocked_mec_dups": ORACLE_BLOCKED_MEC_DUPS,
-})
+}

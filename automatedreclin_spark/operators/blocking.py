@@ -24,7 +24,7 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
-#: Mersenne prime modulus shared with ops/dedup.py minhash.
+#: Mersenne prime modulus of the minhash permutations.
 MERSENNE_61 = (1 << 61) - 1
 
 _DEFAULT_PERMS = [

@@ -135,8 +135,7 @@ def _block_greedy_pdf(pdf: pd.DataFrame, duplicates_in_A: bool, ascending: bool,
 #: can keep a non-front-class residual for further rounds). O(cap)
 #: transfer holds everywhere else. With that the chunked path is the
 #: right default at scale, so the crossover stays at the measured 20M.
-BLOCK_SWEEP_CHUNK_MIN = int(
-    os.environ.get("SPARK_GRAFT_BLOCK_SWEEP_CHUNK_MIN", "20000000"))
+BLOCK_SWEEP_CHUNK_MIN = 20_000_000
 #: first chunk per block = max(_BLOCK_CHUNK_FLOOR, factor · m_h) pairs
 _BLOCK_CHUNK_FACTOR = 4
 _BLOCK_CHUNK_FLOOR = 1024

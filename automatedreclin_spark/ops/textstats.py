@@ -89,7 +89,8 @@ def language_id(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     in the hot path): marker hits via ``filter(tokens, array_contains)``,
     argmax via a chained CASE with fixed tie-break order (en > de > fr > es,
     mirroring Python dict-order max()). Returns (id, lang_pred, lang_conf).
-    The DuckDB oracle in entry_queries mirrors this expression exactly."""
+    The DuckDB oracle in tests/test_ops_text_multimodal.py mirrors this
+    expression exactly."""
     t = F.col(text_col)
     n = F.length(t)
     cjk = F.length(F.regexp_replace(t, "[^一-鿿]", ""))

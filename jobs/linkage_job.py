@@ -7,9 +7,8 @@
 
 On a cluster, point --files-a/--files-b at Iceberg/parquet tables of
 (repo, path, commit, lang, content) rows with id columns a/b (or pass
---derive-ids to hash them from (repo, path, commit)). The sandbox smoke test
-(tests/test_spark_submit.py) runs this exact script through spark-submit
-against the synthetic corpus.
+--derive-ids to hash them from (repo, path, commit)). tests/test_spark_submit.py
+runs this exact script through spark-submit against the synthetic corpus.
 """
 
 from __future__ import annotations
@@ -33,18 +32,13 @@ def main() -> None:
     ap.add_argument("--n-buckets", type=int, default=4096)
     args = ap.parse_args()
 
-    spark = (
-        SparkSession.builder.appName("reclin-linkage")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        # as in session.get_spark: coalesce shuffles inside cached plans
-        .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
-        .config("spark.sql.ansi.enabled", "false")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .getOrCreate()
-    )
-
     from automatedreclin_spark.pipeline import link_repo_files, verify_content_invariant
+    from automatedreclin_spark.session import ENGINE_CONF
+
+    # The master comes from spark-submit; the engine settings are the ones
+    # every library session uses.
+    spark = (SparkSession.builder.appName("reclin-linkage")
+             .config(map=ENGINE_CONF).getOrCreate())
 
     A = spark.read.parquet(args.files_a)
     B = spark.read.parquet(args.files_b)

@@ -9,12 +9,48 @@ from automatedreclin_spark.ops.multimodal import (
     video_frame_sample,
 )
 from automatedreclin_spark.ops.textstats import (
+    _LANG_MARKERS,
     bpe_ish_token_count_expr,
     fingerprint,
     language_id,
     quality_score,
     token_count_expr,
 )
+
+
+def _language_id_oracle() -> str:
+    """The language-ID heuristic is deterministic marker counting — mirror it
+    in SQL, including Python's dict-order tie-break (en > de > fr > es) and
+    the CJK codepoint-share early exit."""
+    marker_scores = ", ".join(
+        f"len(list_filter(toks, t -> list_contains({mk!r}, t)))::DOUBLE"
+        f" / greatest(len(toks), 1) AS s_{lang}"
+        for lang, mk in _LANG_MARKERS.items()
+    )
+    return f"""
+WITH base AS (
+  SELECT doc_id AS id, text,
+         length(regexp_replace(text, '[^一-鿿]', '', 'g')) AS cjk,
+         length(text) AS n,
+         CASE WHEN length(trim(text)) = 0 THEN []::VARCHAR[]
+              ELSE regexp_split_to_array(trim(lower(text)), '\\s+') END AS toks
+  FROM documents
+), scored AS (
+  SELECT id, cjk, n, {marker_scores} FROM base
+)
+SELECT id,
+  CASE WHEN n IS NULL OR n = 0 THEN 'und'
+       WHEN cjk::DOUBLE / greatest(n, 1) > 0.2 THEN 'zh'
+       WHEN greatest(s_en, s_de, s_fr, s_es) = 0 THEN 'und'
+       WHEN s_en >= s_de AND s_en >= s_fr AND s_en >= s_es THEN 'en'
+       WHEN s_de >= s_fr AND s_de >= s_es THEN 'de'
+       WHEN s_fr >= s_es THEN 'fr'
+       ELSE 'es' END AS lang_pred,
+  CASE WHEN n IS NULL OR n = 0 THEN 0.0
+       WHEN cjk::DOUBLE / greatest(n, 1) > 0.2 THEN ROUND(cjk::DOUBLE / n, 6)
+       ELSE ROUND(greatest(s_en, s_de, s_fr, s_es), 6) END AS lang_conf
+FROM scored
+"""
 
 
 def test_token_counts(spark):
@@ -120,8 +156,6 @@ def test_language_id_null_text_matches_oracle(spark):
     agree on the same rows (engines previously diverged: en/-1.0 vs es/NULL)."""
     import duckdb
     from pyspark.sql import types as T
-
-    from automatedreclin_spark.entry_queries import _language_id_oracle
 
     schema = T.StructType([
         T.StructField("doc_id", T.LongType()),
