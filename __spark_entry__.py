@@ -16,7 +16,6 @@ the driver's cwd or PYTHONPATH.
 from __future__ import annotations
 
 import sys
-import zipfile
 from collections.abc import Callable
 from pathlib import Path
 
@@ -27,6 +26,7 @@ if str(_REPO) not in sys.path:
     sys.path.insert(0, str(_REPO))
 
 from automatedreclin_spark.entry_queries import ORACLES, QUERIES  # noqa: E402
+from automatedreclin_spark.session import package_zip  # noqa: E402
 
 _SHIPPED: set[str] = set()
 
@@ -37,9 +37,7 @@ def _ensure_shipped(spark: SparkSession) -> None:
         return
     zip_path = Path("/tmp") / f"automatedreclin_spark_{app_id}.zip"
     if not zip_path.exists():
-        with zipfile.ZipFile(zip_path, "w", zipfile.ZIP_DEFLATED) as zf:
-            for py in sorted((_REPO / "automatedreclin_spark").rglob("*.py")):
-                zf.write(py, py.relative_to(_REPO))
+        package_zip(zip_path)
     spark.sparkContext.addPyFile(str(zip_path))
     _SHIPPED.add(app_id)
 

@@ -18,7 +18,8 @@ the driver writes with pyarrow as one ``part-00000-<uuid>.parquet`` file:
 no Spark job. Both writes replace the whole data directory, so a part file
 left by an earlier, uncommitted write is never read, and both store the
 same parquet schema (names, types, nullability) for the same Spark schema.
-``table`` reads a committed snapshot back on the driver with pyarrow.
+``table`` reads a committed snapshot back on the driver with pyarrow, and
+``batches`` streams it.
 
 Every counter comes from the write itself: ``rows`` and any stage-specific
 metric are observed while the snapshot is written (a pandas frame's length
@@ -41,10 +42,11 @@ import shutil
 import time
 import uuid
 from pathlib import Path
-from typing import Any, Callable, Sequence, Union
+from typing import Any, Callable, Iterator, Sequence, Union
 
 import pandas as pd
 import pyarrow as pa
+import pyarrow.dataset as ds
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
@@ -101,17 +103,25 @@ class CheckpointManager:
             return json.loads(p.read_text())
         return None
 
+    def _arrow_schema(self, name: str) -> pa.Schema | None:
+        schema = (self.manifest(name) or {}).get("schema")
+        return (to_arrow_schema(StructType.fromJson(schema))
+                if isinstance(schema, dict) else None)
+
     def table(self, name: str, columns: list[str] | None = None,
               filters=None) -> pa.Table:
         """A committed stage's snapshot read on the driver with pyarrow (no
         Spark job), typed by the schema its manifest stores; ``columns`` and
         ``filters`` (``pyarrow.parquet.read_table``'s) are applied while the
         files are scanned."""
-        schema = (self.manifest(name) or {}).get("schema")
-        return pq.read_table(
-            self._stage_dir(name) / "data", columns=columns, filters=filters,
-            schema=(to_arrow_schema(StructType.fromJson(schema))
-                    if isinstance(schema, dict) else None))
+        return pq.read_table(self._stage_dir(name) / "data", columns=columns,
+                             filters=filters, schema=self._arrow_schema(name))
+
+    def batches(self, name: str, columns: list[str]) -> Iterator[pa.RecordBatch]:
+        """:meth:`table`'s ``columns``, streamed one record batch at a time,
+        so that only one batch is held at once."""
+        return ds.dataset(str(self._stage_dir(name) / "data"), format="parquet",
+                          schema=self._arrow_schema(name)).to_batches(columns=columns)
 
     def stage(
         self,

@@ -222,15 +222,3 @@ class token_jaccard(Comparator):
         out[union == 0] = 0.0
         out[pc.or_(x.is_null(), y.is_null()).to_numpy(zero_copy_only=False)] = np.nan
         return out
-
-
-#: name → constructor, the user-facing registry (mirrors the named-list
-#: comparator surface of comparison_vectors.R:78-88).
-COMPARATOR_REGISTRY: dict[str, type[Comparator]] = {
-    "identical": cmp_identical,
-    "abs_distance": abs_distance,
-    "jarowinkler_complement": jarowinkler_complement,
-    "jaro_winkler": jaro_winkler,
-    "levenshtein_norm": levenshtein_norm,
-    "token_jaccard": token_jaccard,
-}

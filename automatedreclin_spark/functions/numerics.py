@@ -111,13 +111,3 @@ def gamma_shape_newton(
             return new_a
         a = new_a
     return a
-
-
-def gamma_logpdf_consts(alpha: float, beta: float) -> tuple[float, float, float]:
-    """Driver-side constants for the Gamma(α, rate β) log-density so the
-    per-row Spark expression needs no lgamma builtin:
-
-        log f(x) = C + (α−1)·log x − β·x,  C = α·log β − lgamma(α)
-
-    Returns (C, alpha_minus_1, beta)."""
-    return (alpha * math.log(beta) - math.lgamma(alpha), alpha - 1.0, beta)

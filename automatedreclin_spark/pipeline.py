@@ -5,12 +5,13 @@ content) with stable ids. Stages, each checkpointed (see checkpoint.py):
 
   10_records     record prep: the record columns plus content_sha =
                  sha256(content) (the per-row invariant) — no shuffle. No
-                 tokens are stored: blocking splits path and content itself,
-                 and the fit splits each record's content once (the
+                 tokens are stored: blocking splits path and content per
+                 record, and the fit splits each record's content once (the
                  comparator's prepared form) when it builds Ω
   20_candidates  multi-probe minhash blocking (path + content probes) →
-                 candidate pairs, deduped on (a, b) — the ONLY quadratic-risk
-                 shuffle, bounded by bucket counts + per-block caps
+                 candidate pairs, deduped on (a, b), bounded by bucket
+                 counts + per-block caps (dropped blocks are reported in the
+                 manifest) — the ONLY quadratic-risk stage
   30_components  connected components over the candidate-pair graph →
                  disjoint "selection blocks" (records that could ever match
                  transitively share a block; everything else never meets) —
@@ -22,18 +23,22 @@ content) with stable ids. Stages, each checkpointed (see checkpoint.py):
   55_entities    the clustered ids with their repo, path and content_sha,
                  for the invariant check
 
-Stages 30-55 run on the driver while the committed candidate set is under
-the 2M-pair bound connected components finish locally at (a manifest count,
-no job): the 20_candidates and 30_components snapshots are read once with
+Stages 20-55 run on the driver while what they hold is under the 2M bound
+connected components finish locally at, each bound checked on manifest
+counts (no job). Stage 20 needs both records snapshots under it: it streams
+them with pyarrow one batch at a time, computes the (id, block) assignments
+in numpy bit-identically to Spark's (operators/blocking.py), and caps and
+expands the blocks with pandas; kept blocks holding the bound in pairs fall
+back to its Spark plan. Stages 30-55 need the committed candidate set under
+it: the 20_candidates and 30_components snapshots are read once with
 pyarrow, components are labeled in numpy, the labeled (block, a, b) keys go
 to the fit as a pandas frame (no keys collect), matches are clustered in
 numpy, and the entities are a pandas merge over the clustered ids' columns
-of the record snapshots (those too under the bound). Each snapshot is
-written with pyarrow, with the schema the Spark plan gives it; the fit's
-collect of prepared record values is then the only Spark work after
-blocking. Above the bound each stage runs its Spark plan. The manifests of
-stages 30, 50 and 55 name the route taken (``meta.route``, "driver" or
-"spark"); 40's names the fit's.
+of the record snapshots. Each snapshot is written with pyarrow, with the
+schema the Spark plan gives it; the fit's collect of prepared record values
+is then the only Spark work after the records. Above the bound each stage
+runs its Spark plan. The manifests of stages 20, 30, 50 and 55 name the
+route taken (``meta.route``, "driver" or "spark"); 40's names the fit's.
 
 Kill the job at any stage boundary and rerun: committed stages are skipped
 (resume-from-snapshot), and the final output is byte-identical — tested in
@@ -57,11 +62,15 @@ from automatedreclin_spark.checkpoint import CheckpointManager
 from automatedreclin_spark.functions.comparators import (
     cmp_identical,
     jarowinkler_complement,
-    levenshtein_norm,
     token_jaccard,
 )
 from automatedreclin_spark.models.blocked_mec import BlockedMecResult, blocked_mec
-from automatedreclin_spark.operators.blocking import cap_blocks, files_candidate_blocks
+from automatedreclin_spark.operators.blocking import (
+    cap_blocks,
+    files_candidate_blocks,
+    files_candidate_blocks_local,
+    files_candidate_pairs_local,
+)
 from automatedreclin_spark.operators import clustering
 from automatedreclin_spark.operators.clustering import (
     _components_local,
@@ -169,16 +178,39 @@ def link_repo_files(
             release_checkpoint(df)
         held.clear()
 
-    dropped_obs = Observation("dropped_blocks")
+    # Stage 20 runs on the driver while both records snapshots (their
+    # manifest counts, no job) are under the bound stages 30-55 run there
+    # at; only the (id, block) arrays are kept from each record batch.
+    # Kept blocks holding the bound in pairs or more (before the (a, b)
+    # dedup), or a NULL id, fall back to the Spark plan.
+    records_local = max(ck.manifest(f"10_records_{s}")["rows"]
+                        for s in "AB") < clustering._FINISH_LOCAL
+    probes = {"n_buckets": n_buckets, "path_probes": path_probes,
+              "content_probes": content_probes}
+    cand_meta = {**probes, "max_pairs_per_block": max_pairs_per_block}
+    # Only the Spark plan attaches the drop report: an Observation no plan
+    # ran never gets a value.
+    cand_obs: list[Observation] = []
 
-    def build_candidates() -> DataFrame:
+    def build_candidates():
+        if records_local:
+            sides = [files_candidate_blocks_local(
+                ck.batches(name, [id_col, "path", "lang", "content"]), id_col, **probes)
+                for name, id_col in (("10_records_A", "a"), ("10_records_B", "b"))]
+            built = None if None in sides else files_candidate_pairs_local(
+                *sides, max_pairs_per_block, clustering._FINISH_LOCAL)
+            if built is not None:
+                pdf, cand_meta["dropped_blocks"], cand_meta["dropped_pairs"] = built
+                cand_meta["route"] = "driver"
+                return pdf, StructType([A.schema["a"], B.schema["b"]])
+        cand_meta["route"] = "spark"
+        dropped_obs = Observation("dropped_blocks")
+        cand_obs.append(dropped_obs)
         # The minhash block assignments feed both the block sizes and the
         # pair join; persisted, each side's token hashing runs once.
         blocks_a, blocks_b = (
-            hold(files_candidate_blocks(
-                R, id_col, n_buckets=n_buckets,
-                path_probes=path_probes, content_probes=content_probes,
-            ).persist(StorageLevel.MEMORY_AND_DISK))
+            hold(files_candidate_blocks(R, id_col, **probes)
+                 .persist(StorageLevel.MEMORY_AND_DISK))
             for R, id_col in ((A, "a"), (B, "b"))
         )
         # Probe-block sizes are capped BEFORE the join: a probe bucket whose
@@ -195,12 +227,9 @@ def link_repo_files(
         blocks_b = blocks_b.join(keep_keys, "block", "left_semi")
         return block_pairs(blocks_a, blocks_b, dedup=True).select("a", "b")
 
-    pairs = ck.stage("20_candidates", build_candidates,
-                     meta={"n_buckets": n_buckets, "path_probes": path_probes,
-                           "content_probes": content_probes,
-                           "max_pairs_per_block": max_pairs_per_block},
+    pairs = ck.stage("20_candidates", build_candidates, meta=cand_meta,
                      inputs=["10_records_A", "10_records_B"],
-                     observations=[dropped_obs])
+                     observations=cand_obs)
     release_held()
     cand = ck.manifest("20_candidates")
     n_pairs = cand["rows"]
@@ -302,8 +331,7 @@ def link_repo_files(
 
     # The records are read only for the clustered ids, and only while each
     # side's snapshot is under the bound.
-    local_entities = local and max(
-        ck.manifest(f"10_records_{s}")["rows"] for s in "AB") < clustering._FINISH_LOCAL
+    local_entities = local and records_local
 
     def build_entities():
         if local_entities:

@@ -11,6 +11,7 @@ whatever master it is submitted to.
 from __future__ import annotations
 
 import os
+import zipfile
 from pathlib import Path
 
 from pyspark.sql import SparkSession
@@ -115,3 +116,13 @@ def get_spark(
              .config(map=conf).getOrCreate())
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+def package_zip(out: Path) -> Path:
+    """Write this package's ``.py`` files to the zip ``out``, the
+    ``--py-files`` / ``addPyFile`` form executors import it from."""
+    package = Path(__file__).resolve().parent
+    with zipfile.ZipFile(out, "w", zipfile.ZIP_DEFLATED) as zf:
+        for py in sorted(package.rglob("*.py")):
+            zf.write(py, py.relative_to(package.parent))
+    return out

@@ -1,5 +1,5 @@
-"""Human-readable result summaries — the reference's ``print.*`` S3 methods
-(methods.R:4-211) as plain formatter functions over the result dataclasses.
+"""Human-readable result summary — the reference's ``print.mec_rec_lin`` S3
+method (methods.R:56-120) as a plain formatter over the result dataclass.
 Driver-side only; never triggers distributed work beyond what the result
 already materialized (M_est previews use a bounded limit)."""
 
@@ -33,51 +33,6 @@ def summarize_mec(res) -> str:
             f"    FLR: {res.eval_metrics['FLR']:.6f}   MMR: {res.eval_metrics['MMR']:.6f}",
             f"    confusion [[TP, FN], [FP, TN]]: {res.confusion}",
         ]
-    preview = res.M_est.limit(6).toPandas()
-    lines += ["  M_est (top 6):", preview.to_string(index=False)]
-    return "\n".join(lines)
-
-
-def summarize_blocked_mec(res) -> str:
-    """print.mec_blocking analogue (methods.R:122-211)."""
-    lines = [
-        "Blocked unsupervised MEC (inverted) for record linkage",
-        f"  candidate pairs: {res.candidate_pair_count}   nu: {res.nu}   n_U_min: {res.n_U_min}",
-        f"  estimated matches: {res.n_M_est}   nonmatches: {res.n_U_est}",
-        f"  iterations: {res.iter}  [{res.convergence_reason}]",
-        f"  alpha: {res.alpha}   n_U_fit: {res.n_U_fit}",
-    ]
-    if res.blocking_eval:
-        be = res.blocking_eval
-        lines.append(
-            f"  blocking: recall {be['blocking_recall']:.4f} "
-            f"({be['true_matches_preserved']}/{be['true_matches_total']} preserved, "
-            f"{be['candidate_pairs']} candidate pairs)"
-        )
-    if res.eval_metrics is not None:
-        lines.append(
-            f"  Evaluation metrics: FLR {res.eval_metrics['FLR']:.6f} "
-            f"MMR {res.eval_metrics['MMR']:.6f}"
-        )
-    for label, tbl in (("binary", res.b_params), ("continuous parametric", res.cpar_params)):
-        if tbl is not None:
-            lines += [f"  {label} parameters:", _fmt_params(tbl)]
-    return "\n".join(lines)
-
-
-def summarize_predictions(res) -> str:
-    """print.rec_lin_predictions analogue (methods.R:4-54)."""
-    lines = [
-        "Record linkage predictions",
-        f"  estimated matches (n_M): {res.n_M_est:.6f}",
-        f"  set construction: {res.set_construction}",
-        f"  FLR est: {res.flr_est:.6f}   MMR est: {res.mmr_est:.6f}",
-    ]
-    if res.eval_metrics is not None:
-        lines.append(
-            f"  Evaluation metrics: FLR {res.eval_metrics['FLR']:.6f} "
-            f"MMR {res.eval_metrics['MMR']:.6f}"
-        )
     preview = res.M_est.limit(6).toPandas()
     lines += ["  M_est (top 6):", preview.to_string(index=False)]
     return "\n".join(lines)

@@ -2,19 +2,20 @@
 
 from __future__ import annotations
 
-import zipfile
+import sys
 from pathlib import Path
 
 REPO = Path(__file__).resolve().parents[1]
+sys.path.insert(0, str(REPO))
+
+from automatedreclin_spark.session import package_zip  # noqa: E402
+
 DIST = REPO / "dist"
 
 
 def main() -> None:
     DIST.mkdir(exist_ok=True)
-    out = DIST / "automatedreclin_spark.zip"
-    with zipfile.ZipFile(out, "w", zipfile.ZIP_DEFLATED) as zf:
-        for py in sorted((REPO / "automatedreclin_spark").rglob("*.py")):
-            zf.write(py, py.relative_to(REPO))
+    out = package_zip(DIST / "automatedreclin_spark.zip")
     print(f"wrote {out} ({out.stat().st_size:,} bytes)")
 
 

@@ -165,25 +165,33 @@ def _persistent_rdd_ids(spark) -> set[int]:
 
 @pytest.fixture(scope="module")
 def capped_run(spark, corpus, tmp_path_factory):
-    """A fresh run with a per-block pair cap small enough to drop blocks,
-    with the JVM's persisted RDDs recorded around it."""
+    """Fresh runs with a per-block pair cap small enough to drop blocks, one
+    per route ("driver", and "spark" forced by a zero bound), with the
+    JVM's persisted RDDs recorded around each."""
+    from automatedreclin_spark.operators import clustering as cl
+
     A, B, _ = corpus
-    ckdir = str(tmp_path_factory.mktemp("capped_ck"))
-    before = _persistent_rdd_ids(spark)
-    run = link_repo_files(spark, A, B, checkpoint_dir=ckdir, max_pairs_per_block=20)
-    after = _persistent_rdd_ids(spark)
-    return run, ckdir, before, after
+    runs = {}
+    for route, bound in (("driver", cl._FINISH_LOCAL), ("spark", 0)):
+        ckdir = str(tmp_path_factory.mktemp(f"capped_ck_{route}"))
+        with pytest.MonkeyPatch.context() as mp:
+            mp.setattr(cl, "_FINISH_LOCAL", bound)
+            before = _persistent_rdd_ids(spark)
+            run = link_repo_files(spark, A, B, checkpoint_dir=ckdir,
+                                  max_pairs_per_block=20)
+            runs[route] = run, ckdir, before, _persistent_rdd_ids(spark)
+    return runs
 
 
 def test_dropped_blocks_are_reported(spark, corpus, capped_run):
-    """cap_blocks' drops reach the 20_candidates manifest and LinkageRun,
-    and agree with the block summary computed independently."""
+    """cap_blocks' drops reach the 20_candidates manifest and LinkageRun on
+    both routes, agree with the block summary computed independently, and
+    leave the same candidate pairs."""
     import json
     from pathlib import Path
 
     from automatedreclin_spark.operators.blocking import files_candidate_blocks
 
-    run, ckdir, _, _ = capped_run
     A, B, _ = corpus
     a_counts, b_counts = (
         files_candidate_blocks(R, id_col, n_buckets=4096).groupBy("block")
@@ -196,19 +204,25 @@ def test_dropped_blocks_are_reported(spark, corpus, capped_run):
     expected = over.agg(F.count(F.lit(1)).alias("blocks"),
                         F.sum("pair_count").alias("pairs")).collect()[0]
     assert expected["blocks"] > 0
-    assert run.dropped_blocks == expected["blocks"]
-    assert run.dropped_pairs == expected["pairs"]
-    meta = json.loads((Path(ckdir) / "20_candidates" / "manifest.json").read_text())["meta"]
-    assert meta["dropped_blocks"] == run.dropped_blocks
-    assert meta["dropped_pairs"] == run.dropped_pairs
+    for route, (run, ckdir, _, _) in capped_run.items():
+        assert run.dropped_blocks == expected["blocks"], route
+        assert run.dropped_pairs == expected["pairs"], route
+        meta = json.loads((Path(ckdir) / "20_candidates" / "manifest.json")
+                          .read_text())["meta"]
+        assert meta["dropped_blocks"] == run.dropped_blocks
+        assert meta["dropped_pairs"] == run.dropped_pairs
+        assert meta["route"] == route
+    driver, spark_route = (_snapshot(ckdir, "20_candidates")
+                           for _, ckdir, _, _ in capped_run.values())
+    assert driver == spark_route
 
 
 def test_run_leaves_no_cache_behind(spark, capped_run):
     """Every RDD persisted while link_repo_files runs (block assignments,
     Ω, the block summary, match sets, lineage cuts) is released by the
-    time it returns."""
-    _, _, before, after = capped_run
-    assert after - before == set()
+    time it returns, on either route."""
+    for route, (_, _, before, after) in capped_run.items():
+        assert after - before == set(), route
 
 
 def test_component_count_is_committed_and_reused(spark, corpus, first_run):
@@ -226,7 +240,8 @@ def test_component_count_is_committed_and_reused(spark, corpus, first_run):
     assert run2.n_components == run1.n_components
 
 
-_LOCAL_STAGES = ("30_components", "40_linkage", "50_clusters", "55_entities")
+_LOCAL_STAGES = ("20_candidates", "30_components", "40_linkage", "50_clusters",
+                 "55_entities")
 
 
 def _snapshot(ckdir, stage):
@@ -249,7 +264,7 @@ def _snapshot(ckdir, stage):
 
 def test_stage_routes_write_identical_snapshots(spark, corpus, first_run,
                                                 monkeypatch, tmp_path):
-    """Stages 30-55 on the driver (pyarrow writes) and on Spark (forced by a
+    """Stages 20-55 on the driver (pyarrow writes) and on Spark (forced by a
     zero bound, which also runs the distributed component rounds) commit
     the same rows, the same parquet schema (names, types, nullability) and
     the same manifest schema, and each manifest names its route."""
@@ -264,7 +279,8 @@ def test_stage_routes_write_identical_snapshots(spark, corpus, first_run,
         assert _snapshot(ck_driver, stage) == _snapshot(tmp_path, stage), stage
     assert "side: int32 not null" in next(iter(_snapshot(tmp_path, "55_entities")[1]))
     routes = {ck: {s: CheckpointManager(spark, str(ck)).manifest(s)["meta"]["route"]
-                   for s in ("30_components", "50_clusters", "55_entities")}
+                   for s in ("20_candidates", "30_components", "50_clusters",
+                             "55_entities")}
               for ck in (ck_driver, tmp_path)}
     assert set(routes[ck_driver].values()) == {"driver"}
     assert set(routes[tmp_path].values()) == {"spark"}
@@ -303,9 +319,41 @@ def test_torn_driver_written_stage_is_rebuilt(spark, corpus, first_run,
     assert stale.schema.field(id_col).type == pa.int64()
 
     run = link_repo_files(spark, A, B, checkpoint_dir=str(ck))
-    assert (run.fit is None) == (torn != "30_components" and torn != "40_linkage")
+    assert (run.fit is None) == (torn in ("50_clusters", "55_entities"))
     rebuilt = CheckpointManager(spark, str(ck)).counters().toPandas()["stage"]
     assert list(rebuilt[-1 - len(later):]) == [torn, *later]
     assert not (data / "part-00007-stale-c000.snappy.parquet").exists()
     for stage in _LOCAL_STAGES:
         assert _snapshot(ck, stage) == before[stage], stage
+
+
+def test_candidates_fall_back_to_spark_at_the_pair_bound(spark, corpus, first_run,
+                                                         monkeypatch, tmp_path):
+    """The driver's candidate stage falls back to the Spark plan when its
+    kept blocks hold the bound in pairs before the (a, b) dedup, even when
+    the deduplicated pairs are under it: the Spark plan commits the same
+    rows, and stages 30-55 still run on the driver."""
+    import numpy as np
+
+    from automatedreclin_spark.checkpoint import CheckpointManager
+    from automatedreclin_spark.operators import clustering as cl
+    from automatedreclin_spark.operators.blocking import files_candidate_blocks_local
+
+    _, ck_driver = first_run
+    A, B, _ = corpus
+    ck = CheckpointManager(spark, ck_driver)
+    counts = []
+    for name, id_col in (("10_records_A", "a"), ("10_records_B", "b")):
+        _, blocks = files_candidate_blocks_local(
+            ck.batches(name, [id_col, "path", "lang", "content"]), id_col, n_buckets=4096)
+        counts.append(dict(zip(*np.unique(blocks, return_counts=True))))
+    before_dedup = sum(n * counts[1].get(k, 0) for k, n in counts[0].items())
+    deduped = ck.manifest("20_candidates")["rows"]
+    assert 500 < deduped + 1 < before_dedup
+    monkeypatch.setattr(cl, "_FINISH_LOCAL", deduped + 1)
+    link_repo_files(spark, A, B, checkpoint_dir=str(tmp_path))
+    assert _snapshot(ck_driver, "20_candidates") == _snapshot(tmp_path, "20_candidates")
+    routes = {s: CheckpointManager(spark, str(tmp_path)).manifest(s)["meta"]["route"]
+              for s in ("20_candidates", "30_components", "55_entities")}
+    assert routes == {"20_candidates": "spark", "30_components": "driver",
+                      "55_entities": "driver"}

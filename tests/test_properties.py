@@ -1,7 +1,7 @@
 """Property-based robustness tests (hypothesis)."""
 
 import numpy as np
-from hypothesis import given, settings, strategies as st
+from hypothesis import example, given, settings, strategies as st
 
 from automatedreclin_spark.functions.strings import (
     _jaro_similarity_long,
@@ -197,3 +197,51 @@ def test_jaro_local_chunking_exact(rows, cuts):
     parts = np.concatenate([jw.local(xs[s:e], ys[s:e])
                             for s, e in zip(bounds, bounds[1:])])
     _assert_bits_equal(whole, parts)
+
+
+# --- the driver form of the candidate blocks: bit-identical to Spark's ---
+
+#: Java's whitespace and what it does not match (U+00A0, U+2003, U+001C),
+#: runs of the path separators, non-BMP characters and one long word
+_block_words = st.sampled_from([
+    "a", "b", "ab", "é", "\U0001F600", "\U0001D11E", "x" * 40,
+    " ", "  ", "\t", "\n", "\r\n", "\x0b", "\x0c", "\u00a0", "\u2003", "\x1c",
+    ".", "_", "-", "/", "._-/", "..", "", "a-b", "c.d", "e_f", "g/h",
+])
+_block_texts = st.none() | st.lists(_block_words, max_size=8).map("".join)
+#: lang lengths cross XXH64's 4-, 8- and 32-byte steps
+_langs = st.none() | st.sampled_from(["", "py", "go", "python", "rust", "é" * 3,
+                                      "javascript", "\U0001F600", "l" * 31, "m" * 45])
+
+
+@given(st.lists(st.tuples(_block_texts, _langs, _block_texts), min_size=1, max_size=30),
+       st.sampled_from([7, 1000, 4095, 4097, 999_983]),
+       st.integers(1, 3), st.integers(0, 5), st.integers(1, 30))
+# every path separator and Java-only whitespace, in every example run
+@example(rows=[("a-b", "py", " x\x0by "), ("c.d-e/f_g", None, "\u00a0x\t"),
+               ("h--i", "go", None), ("j/-k", "", "")],
+         n_buckets=999_983, path_probes=2, content_probes=1, batch_rows=3)
+@settings(max_examples=20, deadline=None)
+def test_candidate_blocks_local_bit_identical(spark, rows, n_buckets, path_probes,
+                                              content_probes, batch_rows):
+    """files_candidate_blocks_local gives each record the (id, block)
+    assignments files_candidate_blocks gives it, as a multiset, over any
+    split of the records into batches."""
+    import pyarrow as pa
+
+    from automatedreclin_spark.operators.blocking import (
+        files_candidate_blocks,
+        files_candidate_blocks_local,
+    )
+
+    data = [(i, *row) for i, row in enumerate(rows)]
+    probes = dict(n_buckets=n_buckets, path_probes=path_probes,
+                  content_probes=content_probes)
+    df = spark.createDataFrame(data, "id long, path string, lang string, content string")
+    want = sorted(map(tuple, files_candidate_blocks(df, "id", **probes).collect()))
+    table = pa.table(dict(zip(("id", "path", "lang", "content"), zip(*data))),
+                     schema=pa.schema([("id", pa.int64()), ("path", pa.string()),
+                                       ("lang", pa.string()), ("content", pa.string())]))
+    ids, blocks = files_candidate_blocks_local(
+        table.to_batches(max_chunksize=batch_rows), "id", **probes)
+    assert sorted(zip(ids.tolist(), blocks.tolist())) == want
