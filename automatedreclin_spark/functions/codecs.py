@@ -1,4 +1,4 @@
-"""Real, dependency-free media codecs for the multimodal operators.
+"""Real, dependency-free media codecs. Nothing in the package imports them.
 
 This container has no Pillow/torchaudio/PyAV, but two formats are fully
 decodable with the standard library alone, so those paths are REAL:
@@ -7,9 +7,6 @@ decodable with the standard library alone, so those paths are REAL:
   chunk parse + ``zlib`` inflate + scanline unfiltering (all five PNG filter
   types) — plus a minimal encoder used to build test fixtures.
 - WAV (PCM 8/16-bit via the stdlib ``wave`` module) — plus an encoder.
-
-Video stays behind the deterministic fake in ops/multimodal.py (no
-pure-stdlib codec exists for any mainstream video format).
 """
 
 from __future__ import annotations

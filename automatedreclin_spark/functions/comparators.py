@@ -16,7 +16,12 @@ A comparator may also have a driver form, used where Ω is built on the driver
 
 - ``prep(col)`` is the comparator's per-record form of a value, evaluated
   once per record by Spark (identity by default; the distinct tokens of one
-  split for ``token_jaccard``), so there is no second regex dialect;
+  split for ``token_jaccard``);
+- ``prep_local(arr)`` is the same form computed on the driver from a
+  pyarrow array of raw values, such as a committed snapshot's column: the
+  identity where ``prep`` is one, the split on Java's whitespace for the
+  default ``token_jaccard``, and None (no driver form; Spark runs ``prep``) for
+  any other pattern or comparator;
 - ``local(x, y)`` maps two pyarrow arrays of prepared values, aligned per
   pair, to the gammas as a float64 numpy array, bit-identical to the Spark
   form; NULL on either side gives NaN, which the non-finite guard counts as
@@ -34,6 +39,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 
 from automatedreclin_spark.functions import strings as _str
+from automatedreclin_spark.operators.blocking import _JAVA_WS
 
 
 class Comparator:
@@ -52,6 +58,11 @@ class Comparator:
     def prep(self, col: Column) -> Column:
         """The per-record form of a value that ``local`` consumes."""
         return col
+
+    def prep_local(self, arr: pa.Array) -> pa.Array | None:
+        """``prep`` over a pyarrow array of raw values, on the driver; None
+        when the comparator has no driver form of it."""
+        return None
 
 
 def _arrow(x) -> pa.Array:
@@ -90,6 +101,9 @@ class cmp_identical(Comparator):
             # Spark's equality holds for NaN = NaN; IEEE's does not.
             eq = pc.or_(eq, pc.and_(pc.is_nan(x), pc.is_nan(y)))
         return _float64(eq)
+
+    def prep_local(self, arr: pa.Array) -> pa.Array:
+        return arr
 
 
 class abs_distance(Comparator):
@@ -136,6 +150,9 @@ class jarowinkler_complement(Comparator):
         sim = _str.jaro_similarity_batch(_arrow(x).to_numpy(zero_copy_only=False),
                                          _arrow(y).to_numpy(zero_copy_only=False))
         return 1.0 - sim
+
+    def prep_local(self, arr: pa.Array) -> pa.Array:
+        return arr
 
 
 class jaro_winkler(Comparator):
@@ -196,6 +213,27 @@ class token_jaccard(Comparator):
 
     def prep(self, col: Column) -> Column:
         return F.array_distinct(F.split(col, self.pattern))
+
+    def prep_local(self, arr: pa.Array) -> pa.Array | None:
+        """The default pattern's ``prep``: each row's distinct tokens of a
+        split on Java's ``\\s`` (leading and trailing empty tokens kept, as
+        Spark's ``split`` keeps them; NULL stays NULL). The set, not the
+        order, is Spark's; ``local`` reads only the set."""
+        if self.pattern != r"\s+" or not (pa.types.is_string(arr.type)
+                                           or pa.types.is_large_string(arr.type)):
+            return None
+        tokens = pc.split_pattern_regex(arr, _JAVA_WS)
+        codes = pc.dictionary_encode(pc.list_flatten(tokens))
+        width = max(len(codes.dictionary), 1)
+        # One key per (row, token): the sorted distinct keys are each row's
+        # distinct tokens, row after row.
+        keys = np.unique(pc.list_parent_indices(tokens).to_numpy().astype(np.int64) * width
+                         + codes.indices.to_numpy())
+        offsets = np.zeros(len(arr) + 1, dtype=np.int32)
+        np.cumsum(np.bincount(keys // width, minlength=len(arr)), out=offsets[1:])
+        return pa.ListArray.from_arrays(
+            pa.array(offsets), codes.dictionary.take(pa.array(keys % width)),
+            mask=tokens.is_null())
 
     def local(self, x, y) -> np.ndarray:
         """Exact set sizes over prepared token lists (distinct within a

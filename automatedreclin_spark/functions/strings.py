@@ -163,45 +163,39 @@ def levenshtein(s1: str, s2: str) -> int:
 
 import numpy as np  # noqa: E402
 
-# Pad sentinels: valid Unicode codepoints stop at 0x10FFFF, so these can never
-# equal a real character — and they differ between sides, so padding never
-# matches padding.
-_PAD_A = np.uint32(0xFFFFFFFE)
-_PAD_B = np.uint32(0xFFFFFFFF)
+#: ``_LOW_BITS[k]`` = the k lowest bits set, for k = 0..64 (1 << 64 would
+#: overflow uint64).
+_LOW_BITS = np.array([(1 << k) - 1 for k in range(65)], dtype=np.uint64)
+#: Bound on the (row, character) mask table of one group of rows.
+_TABLE_CELLS = 1 << 22
 
 
-def _encode_padded(strs: list, lens: np.ndarray, width: int, pad: np.uint32) -> np.ndarray:
-    """(n, width) uint32 codepoint matrix, right-padded with ``pad``.
-
-    One ``''.join`` + one utf-32 encode + one frombuffer for the whole batch,
-    scattered into the matrix with fancy indexing — no per-string Python."""
-    n = len(strs)
-    out = np.full((n, width), pad, dtype=np.uint32)
-    total = int(lens.sum())
-    if total == 0:
-        return out
+def _padded(strs: list, lens: np.ndarray, width: int) -> tuple[np.ndarray, np.ndarray]:
+    """(n, width) int64 code-point matrix, right-padded with -1, from one
+    ``''.join`` and one utf-32 encode for the whole batch; and the code
+    points end to end."""
+    out = np.full((len(strs), width), -1, dtype=np.int64)
     flat = np.frombuffer("".join(strs).encode("utf-32-le"), dtype=np.uint32)
-    idx_row = np.repeat(np.arange(n), lens)
-    idx_col = np.arange(total) - np.repeat(np.cumsum(lens) - lens, lens)
-    out[idx_row, idx_col] = flat
-    return out
+    out[np.arange(width) < lens[:, None]] = flat
+    return out, flat
 
 
-def jaro_similarity_batch(xs, ys, long_cutoff: int = 64) -> np.ndarray:
+def jaro_similarity_batch(xs, ys) -> np.ndarray:
     """Jaro similarity for a whole Arrow batch at once, vectorized across the
-    batch with numpy (the per-row kernel above is exact but Python-loop bound;
-    this computes the identical IEEE-double result ~10× faster inside pandas
-    UDFs — the difference between the cv_jaro and cv_levenshtein rows of
-    BENCH).
+    batch with numpy: the bit-parallel matcher of :func:`jaro_similarity`
+    run on every row together, with the identical IEEE-double result.
 
-    The greedy matcher runs one numpy pass per s1 position (≤ max len1 in the
-    batch): ``eq = (B == A[:, i]) & window & ~used`` then first-set-column via
-    argmax — O(L · batch · L) elementwise ops, all C loops. Transpositions
-    come from cumsum-scatter of the matched characters on both sides.
+    The batch's distinct characters get dense codes. Each row's s2
+    positions of each character form a uint64 bitmask in a (row, code)
+    table, filled one s2 position at a time and read once per s1 position.
+    The greedy matcher then takes one pass per s1 position (≤ 64), a
+    handful of uint64 operations over the batch: ``avail = mask & window &
+    ~matched`` and its lowest set bit, ``avail & -avail``. The
+    transpositions compare both sides' matched characters in position
+    order.
 
-    None/NaN inputs yield NaN. Rows with either side longer than
-    ``long_cutoff`` fall back to the scalar kernel (keeps the batch matrices
-    small when a stray long string appears).
+    None/NaN inputs yield NaN. Rows with either side longer than 64
+    characters use the scalar kernel.
     """
     n = len(xs)
     out = np.zeros(n, dtype=np.float64)
@@ -215,7 +209,7 @@ def jaro_similarity_batch(xs, ys, long_cutoff: int = 64) -> np.ndarray:
     equal = ~null & ~empty & np.array(
         [a == b for a, b in zip(xs, ys)], dtype=bool
     )
-    long = ~null & ~empty & ~equal & ((len1 > long_cutoff) | (len2 > long_cutoff))
+    long = ~null & ~empty & ~equal & ((len1 > 64) | (len2 > 64))
     out[null] = np.nan
     out[equal] = 1.0
     for i in np.nonzero(long)[0]:
@@ -228,38 +222,51 @@ def jaro_similarity_batch(xs, ys, long_cutoff: int = 64) -> np.ndarray:
     rows = np.nonzero(act)[0]
     l1 = len1[rows]
     l2 = len2[rows]
-    L1 = int(l1.max())
-    L2 = int(l2.max())
-    A = _encode_padded([xs[i] for i in rows], l1, L1, _PAD_A)
-    B = _encode_padded([ys[i] for i in rows], l2, L2, _PAD_B)
+    L1, L2 = int(l1.max()), int(l2.max())
+    A, fa = _padded([xs[i] for i in rows], l1, L1)
+    B, fb = _padded([ys[i] for i in rows], l2, L2)
+
+    # Dense character codes 0..K-1 through a lookup over the code points
+    # present. The padding (-1, the lookup's last slot) gets code K: an s2
+    # pad sets only bits at or past its row's length, which the window
+    # clears, so a padded s1 position never matches.
+    seen = np.zeros(int(max(fa.max(), fb.max())) + 2, dtype=bool)
+    seen[fa] = seen[fb] = True
+    K = int(seen.sum())
+    code = np.cumsum(seen) - 1
+    code[-1] = K
+    A, B = code[A], code[B]
+
+    mask1 = np.zeros((L1, m), dtype=np.uint64)   # s2 bitmask per s1 position
+    width = K + 1
+    group = max(1, _TABLE_CELLS // width)
+    for s in range(0, m, group):
+        e = min(s + group, m)
+        base = np.arange(e - s, dtype=np.int64) * width
+        table = np.zeros((e - s) * width, dtype=np.uint64)
+        for j in range(L2):
+            table[base + B[s:e, j]] |= np.uint64(1 << j)
+        for i in range(L1):
+            mask1[i, s:e] = table[base + A[s:e, i]]
 
     mw = np.maximum(np.maximum(l1, l2) // 2 - 1, 0)
-    jpos = np.arange(L2, dtype=np.int64)
-    used2 = np.zeros((m, L2), dtype=bool)
-    matched = np.zeros(m, dtype=np.int64)
-    m1 = np.full((m, min(L1, L2)), _PAD_A, dtype=np.uint32)
-    ar = np.arange(m)
+    in_s2 = _LOW_BITS[l2]
+    matched1 = np.zeros(m, dtype=np.uint64)
+    matched2 = np.zeros(m, dtype=np.uint64)
+    one = np.uint64(1)
     for i in range(L1):
-        lo = np.maximum(i - mw, 0)
-        hi = np.minimum(i + mw + 1, l2)
-        eq = (B == A[:, i : i + 1]) & (jpos >= lo[:, None]) & (jpos < hi[:, None]) & ~used2
-        if not eq.any():
-            continue
-        j = eq.argmax(axis=1)
-        has = eq[ar, j]
-        hr = ar[has]
-        used2[hr, j[has]] = True
-        m1[hr, matched[has]] = A[has, i]
-        matched[has] += 1
+        win = in_s2 & _LOW_BITS[np.minimum(i + mw + 1, 64)] & ~_LOW_BITS[np.maximum(i - mw, 0)]
+        avail = mask1[i] & win & ~matched2
+        matched2 |= avail & (~avail + one)   # the lowest unmatched position
+        matched1 |= (avail != 0).astype(np.uint64) << np.uint64(i)
 
-    # s2's matched characters compacted in position order via cumsum-scatter.
-    k2 = np.cumsum(used2, axis=1) - 1
-    seq2 = np.full_like(m1, _PAD_B)
-    r2, c2 = np.nonzero(used2)
-    seq2[r2, k2[r2, c2]] = B[r2, c2]
-
-    valid = np.arange(m1.shape[1])[None, :] < matched[:, None]
-    trans = ((m1 != seq2) & valid).sum(axis=1) // 2
+    # Each side's matched characters in position order, row after row: a
+    # row's k-th s1 match and k-th s2 match sit at the same offset.
+    sel1 = (matched1[:, None] >> np.arange(L1, dtype=np.uint64)) & one == one
+    sel2 = (matched2[:, None] >> np.arange(L2, dtype=np.uint64)) & one == one
+    matched = sel1.sum(axis=1)
+    row = np.repeat(np.arange(m), matched)
+    trans = np.bincount(row[A[sel1] != B[sel2]], minlength=m) // 2
 
     sim = np.zeros(m, dtype=np.float64)
     nz = matched > 0

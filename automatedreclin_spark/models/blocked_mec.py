@@ -15,9 +15,14 @@ One fit loop, two routes for the operations over Ω, chosen by |Ω|:
        ``_FIT_LOCAL`` rows, or none when the caller hands in the keys as a
        pandas frame: fewer rows decide the route, and block sizes, ν and
        |Ω| then come from pandas (pairs mode);
-    2. one collect, both sides at once, of the comparators' *prepared*
-       values (``Comparator.prep``, evaluated once per record by Spark) for
-       the records Ω references;
+    2. the comparators' *prepared* values, once per record, for the
+       records Ω references: computed on the driver
+       (``Comparator.prep_local``) from batch readers of the records when
+       the caller hands them in (the pipeline's record snapshots), with no
+       Spark job and only the referenced records' prepared values kept
+       from each batch; otherwise, or for a comparator with no driver
+       prep, in one collect, both sides at once, of ``Comparator.prep``
+       evaluated by Spark;
     3. the gammas from each comparator's numpy form
        (``Comparator.local``), in bounded chunks of pairs;
     4. the fit.
@@ -54,7 +59,7 @@ import pyarrow as pa
 import pyarrow.compute as pc
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.pandas.types import from_arrow_schema
+from pyspark.sql.pandas.types import from_arrow_schema, to_arrow_type
 from pyspark.sql.types import (
     ArrayType,
     AtomicType,
@@ -138,8 +143,9 @@ class BlockedMecResult:
     #: where the Ω operations ran: "driver" (numpy over Ω on the driver) or
     #: "distributed" (Spark jobs over the persisted Ω)
     route: str
-    #: how Ω's gammas were computed: "records" (numpy over per-record
-    #: prepared values, driver route only) or "spark" (the Spark pair join)
+    #: how Ω's gammas were computed, on the driver route numpy over
+    #: per-record prepared values from "snapshot" (the batch readers) or
+    #: "records" (a Spark collect), or "spark" (the Spark pair join)
     omega_build: str
     blocking_eval: dict[str, float] | None = None
     eval_metrics: dict[str, float] | None = None
@@ -153,8 +159,9 @@ class BlockedMecResult:
     #: select = greedy + truncation + new-M count/convergence),
     #: and the non-iterative stages (pair_setup = the pair plans and, where
     #: Spark computes it, the block summary; init_agg = building Ω: on the
-    #: driver route the keys collect, the prepared-record collects and the
-    #: numpy comparators (or the Spark Ω collect), on the distributed route
+    #: driver route the keys collect, the prepared values (read from the
+    #: batch readers, or collected) and the numpy comparators (or the
+    #: Spark Ω collect), on the distributed route
     #: the guard agg that materializes the Ω cache; init_select = the
     #: ascending init greedy of ν pairs; final_summary = the outputs).
     iter_seconds: list[float] = field(default_factory=list)
@@ -563,17 +570,56 @@ def _chunks(weights: np.ndarray):
         start = stop
 
 
-def _omega_from_records(keys: pd.DataFrame, A: DataFrame, B: DataFrame,
-                        comparators: dict, gamma_cols: list[str],
-                        a_col: str, b_col: str) -> pd.DataFrame | None:
-    """Ω (the keys plus one gamma column per variable) from the prepared
-    values of the records the keys reference, or None when this build does
-    not apply: a comparator has no local form, a prepared type differs
-    between the sides or has no exact Arrow form, an id repeats or is not
-    found, or the prepared values exceed ``_PREP_BUDGET``."""
-    variables, comps = list(comparators), list(comparators.values())
-    if any(c.local is None for c in comps):
-        return None
+def _value_bytes(arr: pa.Array) -> np.ndarray:
+    """:func:`_prepared_bytes` of each value of a prepared pyarrow array."""
+    if pa.types.is_list(arr.type):
+        lengths = pc.binary_length(pc.list_flatten(arr)).fill_null(0).to_numpy()
+        size = np.bincount(pc.list_parent_indices(arr).to_numpy(),
+                           weights=lengths + 4, minlength=len(arr)) + 4
+    elif pa.types.is_string(arr.type) or pa.types.is_binary(arr.type):
+        size = pc.binary_length(arr).fill_null(0).to_numpy() + 4
+    else:
+        size = np.full(len(arr), 16)
+    size = size.astype(np.int64)
+    size[arr.is_null().to_numpy(zero_copy_only=False)] = 0
+    return size
+
+
+def _prepared_from_snapshots(keys: pd.DataFrame, readers, id_cols: list[str],
+                             variables: list[str], comps: list) -> list | None:
+    """Per side, the ids, prepared values (``Comparator.prep_local``) and
+    prepared bytes of the records the keys reference, streamed from the
+    side's batches: only the prepared values of a batch's referenced
+    records outlive it. None once they exceed ``_PREP_BUDGET``, or when a
+    side yields no batch."""
+    sides, total = [], 0
+    for reader, id_col, k in zip(readers, id_cols, ("a", "b")):
+        wanted = pa.array(keys[k].drop_duplicates())
+        parts = []
+        for batch in reader([id_col, *variables]):
+            batch = batch.filter(pc.is_in(batch.column(id_col), value_set=wanted))
+            prepared = [c.prep_local(batch.column(v)) for v, c in zip(variables, comps)]
+            weight = sum(map(_value_bytes, prepared))
+            total += int(weight.sum())
+            if total > _PREP_BUDGET:
+                return None
+            parts.append((batch.column(id_col), prepared, weight))
+        if not parts:
+            return None
+        ids, prepared, weights = zip(*parts)
+        sides.append((pa.concat_arrays(ids).to_numpy(zero_copy_only=False),
+                      [pa.concat_arrays(list(p)) for p in zip(*prepared)],
+                      np.concatenate(weights)))
+    return sides
+
+
+def _prepared_from_spark(keys: pd.DataFrame, A: DataFrame, B: DataFrame,
+                         variables: list[str], comps: list,
+                         a_col: str, b_col: str) -> list | None:
+    """:func:`_prepared_from_snapshots`' sides from one Spark collect of
+    both sides' ``Comparator.prep`` values. None when a prepared type
+    differs between the sides or has no exact Arrow form, or the prepared
+    values exceed ``_PREP_BUDGET``."""
     cols = [f"_p{i}" for i in range(len(comps))]
     id_types = [A.schema[a_col].dataType, B.schema[b_col].dataType]
     # Both sides in one frame, so that each collect is one job: a row's
@@ -605,7 +651,9 @@ def _omega_from_records(keys: pd.DataFrame, A: DataFrame, B: DataFrame,
         return parts[0].unionByName(parts[1]).select(
             "_a", "_b", *shown, "_bytes").toArrow()
 
-    ids = [keys[k].drop_duplicates() for k in ("a", "b")]
+    # Plain numpy ids: a multi-chunk Arrow-backed Series would send
+    # createDataFrame down its row-by-row fallback.
+    ids = [keys[k].drop_duplicates().to_numpy() for k in ("a", "b")]
     # A record over its even share of the budget sends only its size, and
     # its values once the total is known to fit.
     share = _PREP_BUDGET // max(1, len(ids[0]) + len(ids[1]))
@@ -616,19 +664,55 @@ def _omega_from_records(keys: pd.DataFrame, A: DataFrame, B: DataFrame,
     over = nbytes > share
     if over.any():
         held = table.filter(pa.array(over))
-        extra = collect([held[k].drop_null().to_pandas() for k in ("_a", "_b")], None)
+        extra = collect([held[k].drop_null().to_numpy() for k in ("_a", "_b")], None)
         table = pa.concat_tables([table.filter(pa.array(~over)),
                                   extra.cast(table.schema)])
+    out = []
+    for k in ("_a", "_b"):
+        side = table.filter(pc.is_valid(table[k]))
+        out.append((side[k].to_numpy(), [side[p].combine_chunks() for p in cols],
+                    side["_bytes"].to_numpy()))
+    return out
+
+
+def _omega_from_records(keys: pd.DataFrame, A: DataFrame, B: DataFrame,
+                        comparators: dict, gamma_cols: list[str],
+                        a_col: str, b_col: str, readers=None
+                        ) -> tuple[pd.DataFrame, str] | None:
+    """Ω (the keys plus one gamma column per variable) from the prepared
+    values of the records the keys reference, with the build taken:
+    "snapshot" when ``readers`` are given, every raw type is the same on
+    both sides with an exact Arrow form, and every comparator has a
+    ``prep_local``; "records" (one Spark collect) otherwise. None when this
+    build does not apply: a comparator has no local form, a type check
+    fails, an id repeats or is not found, or the prepared values exceed
+    ``_PREP_BUDGET``."""
+    variables, comps = list(comparators), list(comparators.values())
+    if any(c.local is None for c in comps):
+        return None
+    build = "records"
+    if readers is not None:
+        # prep_local has a driver form or not by its input's type alone, so
+        # an empty array of each column's type tells.
+        types = [[R.schema[v].dataType for v in variables] for R in (A, B)]
+        if types[0] == types[1] and all(map(_local_type_ok, types[0])) and all(
+                c.prep_local(pa.array([], to_arrow_type(t))) is not None
+                for c, t in zip(comps, types[0])):
+            build = "snapshot"
+    sides = (_prepared_from_snapshots(keys, readers, [a_col, b_col], variables, comps)
+             if build == "snapshot" else
+             _prepared_from_spark(keys, A, B, variables, comps, a_col, b_col))
+    if sides is None:
+        return None
 
     rows, values, weights = [], [], []
-    for k in ("a", "b"):
-        side = table.filter(pc.is_valid(table[f"_{k}"]))
-        index = pd.Index(side[f"_{k}"].to_numpy(zero_copy_only=False))
+    for (ids, prepared, weight), k in zip(sides, ("a", "b")):
+        index = pd.Index(ids)
         if not index.is_unique:
             return None
         rows.append(index.get_indexer(keys[k]))
-        values.append([side[p].combine_chunks() for p in cols])
-        weights.append(side["_bytes"].to_numpy())
+        values.append(prepared)
+        weights.append(weight)
     ia, ib = rows
     if (ia < 0).any() or (ib < 0).any():
         return None
@@ -638,7 +722,7 @@ def _omega_from_records(keys: pd.DataFrame, A: DataFrame, B: DataFrame,
         take_a, take_b = pa.array(ia[start:stop]), pa.array(ib[start:stop])
         for c, g, xa, xb in zip(comps, gamma_cols, *values):
             gammas[g][start:stop] = c.local(xa.take(take_a), xb.take(take_b))
-    return keys.assign(**gammas)
+    return keys.assign(**gammas), build
 
 
 class _LocalOmega:
@@ -784,6 +868,7 @@ def blocked_mec(
     b_col: str = "b",
     seed: int = 1,
     pairs: DataFrame | pd.DataFrame | None = None,
+    readers: tuple[Callable, Callable] | None = None,
     verbose: bool = False,
 ) -> BlockedMecResult:
     """Inverted blocked MEC.
@@ -799,6 +884,13 @@ def blocked_mec(
       A pandas frame of keys already on the driver is taken as the keys
       collect's result: no job runs for it, and its Spark frame is built
       only if a Spark Ω is.
+
+    ``readers``, one per side, stream the same records as ``A`` and ``B``
+    (for instance their committed snapshots): ``reader(columns)`` yields
+    pyarrow record batches of those columns. The driver route then takes
+    the records' values from them, with no Spark job, wherever every
+    comparator has a ``prep_local``. They change where the values come
+    from, not the fit.
 
     Allowed methods: binary / continuous_parametric only (reference restricts
     the blocked path, unsupervised_learning.R:1002-1006).
@@ -934,11 +1026,9 @@ def blocked_mec(
             # The pair join drops pairs with a NULL id; so does this build.
             keys = keys.filter(pc.and_(pc.is_valid(keys["a"]),
                                        pc.is_valid(keys["b"]))).to_pandas()
-            pdf = _omega_from_records(keys, A, B, comparators, gamma_cols,
-                                      a_col, b_col)
-            omega_build = "records"
-            if pdf is None:
-                pdf, omega_build = spark_omega().toPandas(), "spark"
+            built = _omega_from_records(keys, A, B, comparators, gamma_cols,
+                                        a_col, b_col, readers)
+            pdf, omega_build = built or (spark_omega().toPandas(), "spark")
             # Ω's schema, the Spark build's: the keys plus one double per gamma.
             schema = StructType(
                 [f for f in keys_schema.fields if f.name in ("a", "b", "block")]

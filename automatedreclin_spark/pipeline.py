@@ -34,11 +34,14 @@ it: the 20_candidates and 30_components snapshots are read once with
 pyarrow, components are labeled in numpy, the labeled (block, a, b) keys go
 to the fit as a pandas frame (no keys collect), matches are clustered in
 numpy, and the entities are a pandas merge over the clustered ids' columns
-of the record snapshots. Each snapshot is written with pyarrow, with the
-schema the Spark plan gives it; the fit's collect of prepared record values
-is then the only Spark work after the records. Above the bound each stage
-runs its Spark plan. The manifests of stages 20, 30, 50 and 55 name the
-route taken (``meta.route``, "driver" or "spark"); 40's names the fit's.
+of the record snapshots. With both records snapshots under the bound, the
+fit also reads its records' values from them (one pyarrow batch at a time)
+instead of collecting them through Spark. Each snapshot is written with
+pyarrow, with the schema the Spark plan gives it, so no Spark job runs
+after the records. Above the bound each stage runs its Spark plan. The
+manifests of stages 20, 30, 50 and 55 name the route taken
+(``meta.route``, "driver" or "spark"); 40's names the fit's and its Ω
+build.
 
 Kill the job at any stage boundary and rerun: committed stages are skipped
 (resume-from-snapshot), and the final output is byte-identical — tested in
@@ -48,6 +51,7 @@ tests/test_pipeline.py.
 from __future__ import annotations
 
 from dataclasses import dataclass
+from functools import partial
 
 import numpy as np
 import pandas as pd
@@ -302,6 +306,9 @@ def link_repo_files(
                 "content": "continuous_parametric",
             },
             pairs=fit_pairs,
+            # The records' values, read from their snapshots on the driver.
+            readers=(partial(ck.batches, "10_records_A"),
+                     partial(ck.batches, "10_records_B")) if records_local else None,
             seed=seed,
         )
 

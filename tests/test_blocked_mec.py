@@ -2,8 +2,12 @@
 (reference inst/tinytest/test_mec_blocking.R, scenarios re-created with
 explicit block assignments in place of the external ANN blocking run)."""
 
+import sys
+from functools import partial
+
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 import pytest
 from pyspark.sql import functions as F
 
@@ -452,6 +456,88 @@ def test_omega_builds_agree_and_budget_bounds_records(spark, monkeypatch):
         pd.testing.assert_frame_equal(m, outs[bm._PREP_BUDGET], check_exact=True)
 
 
+def _readers(*frames, rows=2):
+    """A batch reader per frame, like the pipeline's readers of the record
+    snapshots: ``reader(columns)`` yields the frame's rows in pyarrow
+    batches of ``rows``."""
+    def batches(table, columns):
+        return table.select(columns).to_batches(max_chunksize=rows)
+    return tuple(partial(batches, df.toArrow()) for df in frames)
+
+
+def _with_readers(A, B, *args, **kwargs):
+    return bm.blocked_mec(A, B, *args, readers=_readers(A, B), **kwargs)
+
+
+def test_snapshot_build_agrees_and_budget_bounds_it(spark, monkeypatch):
+    """With a batch reader per side, the driver route builds Ω from the
+    records' values on the driver (``prep_local``), with no Spark job:
+    M_est is bit-identical to the Spark-collected records build's. The
+    same budget bounds it, counted the same way (24 records, 6,346
+    prepared bytes): over it, the Spark build runs, with the same M_est."""
+    A, B, fit_args = _long_record_case(spark)
+    want = blocked_mec(A, B, **fit_args)
+    assert want.omega_build == "records"
+    readers = _readers(A, B, rows=5)
+    for budget, build in ((bm._PREP_BUDGET, "snapshot"), (7_000, "snapshot"),
+                          (6_000, "spark")):
+        monkeypatch.setattr(bm, "_PREP_BUDGET", budget)
+        res = blocked_mec(A, B, **fit_args, readers=readers)
+        assert (res.route, res.omega_build) == ("driver", build), budget
+        pd.testing.assert_frame_equal(res.M_est.toPandas(), want.M_est.toPandas(),
+                                      check_exact=True)
+        _contract(res)
+
+
+def test_snapshot_build_launches_no_job(spark):
+    """Given readers and keys as a pandas frame, the driver-route fit runs
+    no Spark job: neither the keys nor the records' values are collected
+    through Spark."""
+    A, B, fit_args = _cpar_case(spark)
+    pairs = A.select("block", "a").join(B.select("block", "b"), "block").toPandas()
+    readers = _readers(A, B)
+    tracker = spark.sparkContext.statusTracker()
+    before = set(tracker.getJobIdsForGroup(None))
+    res = blocked_mec(A, B, **fit_args, pairs=pairs, readers=readers)
+    assert (res.route, res.omega_build) == ("driver", "snapshot")
+    assert set(tracker.getJobIdsForGroup(None)) == before
+
+
+def test_comparator_without_driver_prep_collects_through_spark(spark):
+    """A comparator with a numpy form but no driver ``prep_local`` (a
+    ``token_jaccard`` pattern other than Java's whitespace) makes a fit
+    with readers collect the prepared values through Spark, as without
+    readers: bit-identical M_est."""
+    A, B, fit_args = _long_record_case(spark)
+    fit_args["comparators"] = {**fit_args["comparators"], "city": token_jaccard(",")}
+    fit_args["methods"] = {**fit_args["methods"], "city": "continuous_parametric"}
+    assert token_jaccard(",").prep_local(pa.array(["a,b"])) is None
+    want = blocked_mec(A, B, **fit_args)
+    res = blocked_mec(A, B, **fit_args, readers=_readers(A, B))
+    assert (want.omega_build, res.omega_build) == ("records", "records")
+    pd.testing.assert_frame_equal(res.M_est.toPandas(), want.M_est.toPandas(),
+                                  check_exact=True)
+
+
+@pytest.mark.filterwarnings("error::UserWarning")
+def test_arrow_backed_keys_collect_without_arrow_fallback(spark):
+    """Keys handed in as a pandas frame backed by several Arrow chunks (as
+    the pipeline's labeled keys can be) reach the records collect's id
+    relations as plain numpy ids: createDataFrame keeps its Arrow path and
+    warns of no row-by-row fallback."""
+    A, B, fit_args = _cpar_case(spark)
+    pairs = pa.Table.from_pandas(
+        A.select("block", "a").join(B.select("block", "b"), "block").toPandas(),
+        preserve_index=False)
+    pairs = pa.Table.from_batches(pairs.to_batches(max_chunksize=50))
+    keys = pairs.to_pandas(types_mapper=pd.ArrowDtype)
+    assert keys["a"].array._pa_array.num_chunks > 1
+    res = blocked_mec(A, B, **fit_args, pairs=keys)
+    assert (res.route, res.omega_build) == ("driver", "records")
+    pd.testing.assert_frame_equal(
+        _fit_outputs(res), _fit_outputs(blocked_mec(A, B, **fit_args)), check_exact=True)
+
+
 def test_comparator_without_local_form_uses_spark_build(spark):
     A, B, fit_args = _long_record_case(spark)
     fit_args["comparators"] = {"name": levenshtein_norm()}
@@ -559,7 +645,7 @@ def test_routes_agree_on_pipeline_corpus(spark, monkeypatch, tmp_path):
     dist = link_repo_files(spark, A, B, checkpoint_dir=ck)
     builds["distributed"] = CheckpointManager(spark, ck).manifest("40_linkage")["meta"]
     assert builds == {
-        "driver": {"route": "driver", "omega_build": "records"},
+        "driver": {"route": "driver", "omega_build": "snapshot"},
         "distributed": {"route": "distributed", "omega_build": "spark"},
     }
     _assert_routes_agree(drv.fit, dist.fit, m_drv,
@@ -616,4 +702,24 @@ class TestSparkOmegaBuild:
     test_cpar_blocked = staticmethod(test_cpar_blocked)
     test_pairs_mode_restricts_omega = staticmethod(test_pairs_mode_restricts_omega)
     test_nonfinite_gamma_raises = staticmethod(test_nonfinite_gamma_raises)
+    test_null_token_content_raises = staticmethod(test_null_token_content_raises)
+
+
+class TestSnapshotBuild:
+    """Scenario tests rerun on the driver route with a batch reader per
+    side, so that Ω comes from the records' values read on the driver
+    (``Comparator.prep_local``), two rows per batch."""
+
+    @pytest.fixture
+    def route(self, monkeypatch):
+        monkeypatch.setattr(sys.modules[__name__], "blocked_mec", _with_readers)
+        return "driver", "snapshot"
+
+    test_singleton_blocks_all_match = staticmethod(test_singleton_blocks_all_match)
+    test_singleton_nonmatch = staticmethod(test_singleton_nonmatch)
+    test_threshold_blocks = staticmethod(test_threshold_blocks)
+    test_cpar_blocked = staticmethod(test_cpar_blocked)
+    test_alpha_u_drop_diagnostics = staticmethod(test_alpha_u_drop_diagnostics)
+    test_pairs_mode_restricts_omega = staticmethod(test_pairs_mode_restricts_omega)
+    test_duplicates_in_A_relaxes_b_reuse = staticmethod(test_duplicates_in_A_relaxes_b_reuse)
     test_null_token_content_raises = staticmethod(test_null_token_content_raises)

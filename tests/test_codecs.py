@@ -1,6 +1,6 @@
 """Real stdlib media codecs (functions/codecs.py): PNG round-trips, all five
-PNG scanline filters invert correctly, WAV round-trips — plus the 2x2-PNG
-golden through the full image_features operator (bytes checked in)."""
+PNG scanline filters invert correctly, WAV round-trips, and a checked-in
+2x2 PNG decodes to its pixels."""
 
 import struct
 import zlib
@@ -100,45 +100,3 @@ def test_wav_roundtrip():
     assert len(back) == 4000
     # PCM16 truncation (1/32767) + the 32767-encode/32768-decode scale
     assert np.abs(back - samples).max() < 1e-4
-
-
-def test_image_features_png_golden(spark):
-    """The full Spark operator over a REAL 2x2 PNG: dimensions come from the
-    decoded image (not metadata), luma stats match the hand-computed golden
-    (luma = [[85, 85], [85, 255]] -> mean 127.5, std 73.612159)."""
-    import pandas as pd
-
-    from automatedreclin_spark.ops.multimodal import MEDIA_SCHEMA, image_features
-
-    media = spark.createDataFrame(pd.DataFrame([{
-        "media_id": 1, "kind": "image", "content": PNG_2X2,
-        "meta": {"width": 99, "height": 99, "channels": 3, "sample_rate": 0,
-                 "duration_ms": 0, "codec": "png"},   # wrong on purpose
-    }]), schema=MEDIA_SCHEMA)
-    out = image_features(media, resize_to=2).toPandas()
-    assert len(out) == 1
-    row = out.iloc[0]
-    assert (row["width"], row["height"]) == (2, 2)    # decoded, not meta
-    assert row["mean_luma"] == pytest.approx(127.5, abs=1e-9)
-    assert row["std_luma"] == pytest.approx(73.612159, abs=1e-6)
-
-
-def test_audio_features_real_wav(spark):
-    """audio_features over a REAL PCM16 WAV: RMS of a 0.5-amplitude sine is
-    0.5/sqrt(2) ~ 0.3536 — a value the fake byte-stream path could never
-    produce from these bytes."""
-    import pandas as pd
-
-    from automatedreclin_spark.ops.multimodal import MEDIA_SCHEMA, audio_features
-
-    t = np.arange(16000) / 16000.0
-    data = encode_wav(0.5 * np.sin(2 * np.pi * 440 * t), 16000)
-    media = spark.createDataFrame(pd.DataFrame([{
-        "media_id": 7, "kind": "audio", "content": data,
-        "meta": {"width": 0, "height": 0, "channels": 1, "sample_rate": 16000,
-                 "duration_ms": 1000, "codec": "pcm16"},
-    }]), schema=MEDIA_SCHEMA)
-    out = audio_features(media).toPandas()
-    assert len(out) == 1
-    assert out.iloc[0]["rms"] == pytest.approx(0.5 / np.sqrt(2), rel=1e-3)
-    assert out.iloc[0]["n_samples"] == 16000

@@ -308,20 +308,20 @@ def linkage_jobs(spark, tmp_path_factory):
 def test_link_repo_files_recovery_launches_few_jobs(linkage_jobs):
     """A recovery that lost the fit and everything after it reads the four
     committed stages back without a job and runs stages 40-55 on the
-    driver: the fit's keys come from the committed pair snapshots, so its
-    only jobs are the collect of the prepared record values (two broadcast
-    id relations and the collect), and every snapshot is written with
-    pyarrow: 3 jobs, where the Spark-written stages, the keys collect and
-    the entities join made 13. The run leaves no persisted RDD behind."""
+    driver: the fit's keys come from the committed pair snapshots and its
+    record values from the committed record snapshots, and every snapshot
+    is written with pyarrow: no Spark job, where the Spark-written stages,
+    the keys collect and the entities join made 13, and the collect of the
+    prepared record values 3. The run leaves no persisted RDD behind."""
     run, _, recovery, cached, after = linkage_jobs
-    assert (run.fit.route, run.fit.omega_build) == ("driver", "records")
-    assert recovery <= 3, recovery
+    assert (run.fit.route, run.fit.omega_build) == ("driver", "snapshot")
+    assert recovery == 0, recovery
     assert after == cached
 
 
 def test_link_repo_files_fresh_run_launches_few_jobs(linkage_jobs):
     """A whole fresh run on the driver route: the two record snapshots'
-    writes, then the fit's 3; stages 20-55 run no Spark job (blocking
-    alone ran 17)."""
+    writes; stages 20-55 run no Spark job (blocking alone ran 17, and the
+    fit's collect of prepared record values 3)."""
     _, fresh, _, _, _ = linkage_jobs
-    assert fresh <= 5, fresh
+    assert fresh <= 2, fresh

@@ -106,10 +106,12 @@ def test_greedy_duplicates_in_A_b_side_free(inst, n_M):
 
 # --- driver forms of the comparators: bit-identical to their Spark forms ---
 
-#: whitespace runs, repeated tokens, non-BMP characters, and a long run of
-#: one letter so that strings pass Jaro's 64-character batch cutoff
+#: whitespace runs (Java's, and U+001C, U+00A0 and U+2003, which Java's
+#: ``\s`` does not match), repeated tokens, non-BMP characters, and a long
+#: run of one letter so that strings pass Jaro's 64-character batch cutoff
 _words = st.sampled_from(["a", "b", "ab", "ba", "\U0001F600", "\U0001D11E",
-                          "é", "x" * 40, " ", "  ", "\t", "\n", ""])
+                          "é", "x" * 40, " ", "  ", "\t", "\n", "\x0b", "\x1c",
+                          "\u00a0", "\u2003", ""])
 _texts = st.none() | st.lists(_words, max_size=8).map("".join)
 
 
@@ -171,6 +173,40 @@ def test_numeric_comparators_local_bit_identical(spark, rows):
         _assert_bits_equal(want, got)
 
 
+@given(st.lists(st.tuples(_texts, _texts), min_size=1, max_size=40),
+       st.integers(1, 40))
+@example(rows=[(" a\x0bb ", "\u00a0a b\u2003"), ("\x1c x", ""), (None, "  "),
+               ("a a b", None)], batch_rows=3)
+@settings(max_examples=20, deadline=None)
+def test_token_jaccard_prep_local_matches_spark(spark, rows, batch_rows):
+    """token_jaccard's driver prep, over any split of the rows into
+    batches, gives each row Spark's token set (distinct, NULL as NULL),
+    and the numpy form over it the Spark form's gammas, bit for bit."""
+    import pyarrow as pa
+    from pyspark.sql import functions as F
+
+    from automatedreclin_spark.functions.comparators import token_jaccard
+
+    tj = token_jaccard()
+    xs, ys = zip(*rows)
+    t = spark.createDataFrame(list(zip(xs, ys)), "x string, y string").select(
+        tj(F.col("x"), F.col("y")).alias("g"),
+        tj.prep(F.col("x")).alias("px"), tj.prep(F.col("y")).alias("py")).toArrow()
+
+    def prep_local(values):
+        return pa.concat_arrays([
+            tj.prep_local(pa.array(values[s:s + batch_rows], pa.string()))
+            for s in range(0, len(values), batch_rows)])
+
+    px, py = prep_local(xs), prep_local(ys)
+    for want, got in ((t["px"], px), (t["py"], py)):
+        got = got.to_pylist()
+        assert all(v is None or len(v) == len(set(v)) for v in got)
+        assert ([None if v is None else set(v) for v in got]
+                == [None if v is None else set(v) for v in want.to_pylist()])
+    _assert_bits_equal(t["g"].to_numpy(zero_copy_only=False), tj.local(px, py))
+
+
 def test_token_jaccard_null_is_null(spark):
     """NULL on either side is NULL in the Spark form, not a perfect score
     (size(NULL) is -1 with ANSI off)."""
@@ -197,6 +233,49 @@ def test_jaro_local_chunking_exact(rows, cuts):
     parts = np.concatenate([jw.local(xs[s:e], ys[s:e])
                             for s, e in zip(bounds, bounds[1:])])
     _assert_bits_equal(whole, parts)
+
+
+#: strings around the batch kernel's 64-character limit, over an alphabet
+#: small enough to repeat characters, with non-BMP ones
+_jaro_alphabet = st.sampled_from(["a", "b", "c", " ", "é", "\U0001F600", "\U0001D11E"])
+_jaro_texts = (st.none() | st.text(_jaro_alphabet, max_size=10)
+               | st.text(_jaro_alphabet, min_size=62, max_size=66))
+
+
+@given(st.lists(st.tuples(_jaro_texts, _jaro_texts), min_size=1, max_size=40),
+       st.lists(st.integers(1, 39), max_size=4), st.sampled_from([1 << 22, 1]))
+@example(rows=[("a" * 64, "a" * 63 + "b"), ("ab" * 32, "ba" * 33), ("", ""),
+               ("", "a"), (None, "a"), ("\U0001F600a", "a\U0001F600")],
+         cuts=[], cells=1 << 22)
+@settings(max_examples=100, deadline=None)
+def test_jaro_batch_matches_scalar(rows, cuts, cells):
+    """The batch Jaro kernel, over any split of the rows and any grouping
+    of its mask table, gives each row the scalar kernels' double: the
+    classic matcher's (and the scalar bit-parallel one's up to 64
+    characters), 0 with an empty side, 1 for equal strings, NaN for
+    NULL."""
+    from unittest import mock
+
+    from automatedreclin_spark.functions import strings
+
+    xs, ys = map(list, zip(*rows))
+    bounds = [0, *sorted(c for c in set(cuts) if c < len(xs)), len(xs)]
+    with mock.patch.object(strings, "_TABLE_CELLS", cells):
+        got = np.concatenate([strings.jaro_similarity_batch(xs[s:e], ys[s:e])
+                              for s, e in zip(bounds, bounds[1:])])
+    want = []
+    for x, y in rows:
+        if x is None or y is None:
+            want.append(np.nan)
+        elif not x or not y:
+            want.append(0.0)
+        elif x == y:
+            want.append(1.0)
+        else:
+            want.append(_jaro_similarity_long(x, y))
+            if max(len(x), len(y)) <= 64:
+                assert jaro_similarity(x, y) == want[-1]
+    _assert_bits_equal(np.array(want), got)
 
 
 # --- the driver form of the candidate blocks: bit-identical to Spark's ---
