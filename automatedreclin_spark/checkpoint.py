@@ -272,15 +272,3 @@ class CheckpointManager:
               int(r["n_partitions"]), float(r["elapsed_sec"])) for r in recs],
             self._COUNTERS_SCHEMA,
         )
-
-    def scalar(self, name: str, builder: Callable[[], dict[str, Any]]) -> dict[str, Any]:
-        """Checkpoint small driver-side results (fitted params, counts)."""
-        sdir = self._stage_dir(name)
-        p = sdir / "scalar.json"
-        if self.resume and self.is_committed(name):
-            return json.loads(p.read_text())
-        value = builder()
-        sdir.mkdir(parents=True, exist_ok=True)
-        p.write_text(json.dumps(value, indent=2, default=str))
-        (sdir / "_COMMITTED").write_text(str(time.time()))
-        return value

@@ -667,10 +667,15 @@ FROM scored
 
 def q_blocked_mec_alpha(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Blocked inverted MEC with alpha=0.25 and a continuous name gamma —
-    every iteration past the first runs the ranked U-retention
-    (retain_top_n sketch cut over the continuous q_est scores). Contract:
-    the blocked-MEC structural invariants PLUS the alpha arithmetic of
-    internals.R:1824-1839 — n_U_fit = n_U − floor(alpha·n_U) on every
+    every iteration past the first runs the ranked U-retention over the
+    continuous q_est scores. At sf0.001 the fit takes the driver route:
+    ``levenshtein_norm`` has no ``local`` form, so Ω comes from the Spark
+    build (``omega_build == "spark"``) and the retention runs in
+    ``_LocalOmega.retained_u_rows``; the distributed retention
+    (``retain_top_n``'s sketch cut) is pinned by
+    tests/test_blocked_mec.py::test_alpha_drop_scale_path_matches_window_reference.
+    Contract: the blocked-MEC structural invariants PLUS the alpha arithmetic
+    of internals.R:1824-1839 — n_U_fit = n_U − floor(alpha·n_U) on every
     applied iteration, valid reason codes, and ≥1 actually-applied drop
     (else the path under test never ran)."""
     from automatedreclin_spark.models.blocked_mec import blocked_mec

@@ -50,7 +50,7 @@ def name_examples(spark: SparkSession) -> tuple[DataFrame, DataFrame, DataFrame]
 
 
 LANGS = ["python", "java", "c", "js", "go", "rust", "ruby"]
-#: skew: python dominates (exercises salting / AQE skew-join).
+#: skew: python dominates (exercises the block caps / AQE skew-join).
 LANG_WEIGHTS = [0.45, 0.15, 0.10, 0.10, 0.08, 0.07, 0.05]
 
 _STEMS = (

@@ -4,17 +4,17 @@ The reference delegates to the external `blocking` package (shingles → ANN →
 graph components, ``run_blocking`` internals.R:635-645) and then re-validates
 the result into DISJOINT blocks (``reconstruct_block_summary``
 internals.R:668-715). At 10^12-file scale an ANN graph is the wrong tool; the
-north rule prescribes *derived deterministic keys*: ``(lang, minhash bucket of
-path tokens)`` — pure narrow column work, no shuffle until the block join.
+north rule prescribes *derived deterministic keys*: ``(lang, probe, minhash
+bucket of path or content tokens)`` — pure narrow column work, no shuffle
+until the block join.
 
 Skew control (the `python`-dominated lang in the fixture is deliberate):
-- AQE skew-join splitting handles moderate skew automatically;
-- :func:`salt_blocks` decomposes pathological blocks: the A side gets a
-  random-but-deterministic salt, the B side replicates over all salts —
-  classic salted-join replication, bounded by ``n_salts``;
-- :func:`cap_blocks` drops/flags blocks whose pair count exceeds a budget
-  (mirroring the reference's excluded-records reporting,
-  internals.R:706-709).
+:func:`cap_blocks` drops every block whose pair count exceeds a budget and
+reports how many blocks and pairs it dropped (mirroring the reference's
+excluded-records reporting, internals.R:706-709); the blocks it keeps are
+joined as they are, and AQE's skew-join splitting
+(``session.ENGINE_CONF``) splits the skewed partitions of that join. No
+block is salted.
 
 :func:`files_candidate_blocks` and :func:`cap_blocks` are the Spark plan of
 the pipeline's candidate stage. :func:`files_candidate_pairs_local` is its
@@ -68,48 +68,6 @@ def minhash_bucket_expr(tokens_col, n_buckets: int, perm: tuple[int, int] = _DEF
         lambda t: ((F.lit(a) * token_hash_expr(t) + F.lit(b)) % F.lit(MERSENNE_61)),
     )
     return (F.array_min(hashed) % n_buckets).cast("long")
-
-
-def files_blocking_key(df: DataFrame, n_buckets: int = 1024,
-                       path_col: str = "path", lang_col: str = "lang") -> DataFrame:
-    """The north-star blocking key for the repo-file table:
-    block = xxhash64(lang, minhash_bucket(path tokens)).
-
-    Path tokens = directory components + basename split on [._-]; the minhash
-    makes small typos in one token still collide on the bucket chosen by the
-    minimum, giving fuzzy recall without an ANN graph."""
-    tokens = F.split(F.regexp_replace(F.col(path_col), _PATH_SEPS, " "), r"\s+")
-    bucket = minhash_bucket_expr(tokens, n_buckets)
-    return df.withColumn("block", F.xxhash64(F.col(lang_col), bucket))
-
-
-def multi_probe_blocking_keys(
-    df: DataFrame,
-    id_col: str,
-    n_buckets: int = 1024,
-    n_probes: int = 2,
-    path_col: str = "path",
-    lang_col: str = "lang",
-) -> DataFrame:
-    """Multi-probe variant: one row per (record, probe) with block =
-    xxhash64(lang, probe_idx, minhash_bucket_probe). Union of per-probe
-    candidate pairs raises recall (standard LSH banding); pairs are
-    deduplicated downstream on (a, b). Returns (id, block) assignments."""
-    tokens = F.split(F.regexp_replace(F.col(path_col), _PATH_SEPS, " "), r"\s+")
-    assignments = []
-    for i in range(n_probes):
-        perm = _DEFAULT_PERMS[i % len(_DEFAULT_PERMS)]
-        bucket = minhash_bucket_expr(tokens, n_buckets, perm)
-        assignments.append(
-            df.select(
-                F.col(id_col),
-                F.xxhash64(F.col(lang_col), F.lit(i), bucket).alias("block"),
-            )
-        )
-    out = assignments[0]
-    for other in assignments[1:]:
-        out = out.unionByName(other)
-    return out
 
 
 def files_candidate_blocks(
@@ -374,50 +332,6 @@ def assert_disjoint_blocks(assignments: DataFrame, id_col: str,
     )
     if dup:
         raise ValueError("Blocking must assign each record to at most one block.")
-
-
-def salt_blocks(
-    A_blocked: DataFrame,
-    B_blocked: DataFrame,
-    hot_blocks: DataFrame,
-    n_salts: int = 8,
-    a_col: str = "a",
-    block_col: str = "block",
-) -> tuple[DataFrame, DataFrame]:
-    """Explicit salting for pathological blocks: A rows in a hot block get
-    ``salted_block = hash(block, xxhash64(a) % n_salts)``; B rows in a hot
-    block are REPLICATED across all salts. Non-hot blocks pass through with
-    salt 0. Join on ``salted_block`` afterwards; results are identical to the
-    unsalted join (every original (a,b) pair co-occurs in exactly one salted
-    block)."""
-    hot = F.broadcast(hot_blocks.select(F.col(block_col)).withColumn("_hot", F.lit(True)))
-
-    # NB: xxhash64 is input-type-sensitive — keep salt LongType on BOTH sides.
-    a_side = A_blocked.join(hot, block_col, "left").withColumn(
-        "salt",
-        F.when(F.col("_hot").isNotNull(),
-               F.pmod(F.xxhash64(F.col(a_col)), F.lit(n_salts)))
-        .otherwise(F.lit(0)).cast("long"),
-    ).drop("_hot")
-
-    salts = F.array([F.lit(i).cast("long") for i in range(n_salts)])
-    b_side = (
-        B_blocked.join(hot, block_col, "left")
-        .withColumn(
-            "_salts",
-            F.when(F.col("_hot").isNotNull(), salts)
-            .otherwise(F.array(F.lit(0).cast("long"))),
-        )
-        .withColumn("salt", F.explode("_salts"))
-        .drop("_hot", "_salts")
-    )
-    mk = lambda df: df.withColumn("salted_block", F.xxhash64(F.col(block_col), F.col("salt"))).drop("salt")
-    return mk(a_side), mk(b_side)
-
-
-def find_hot_blocks(summary: DataFrame, max_pairs_per_block: int) -> DataFrame:
-    """Blocks whose pair count exceeds the budget → candidates for salting."""
-    return summary.filter(F.col("pair_count") > max_pairs_per_block).select("block")
 
 
 def cap_blocks(summary: DataFrame, max_pairs_per_block: int,

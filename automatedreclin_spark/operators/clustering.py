@@ -138,11 +138,10 @@ def connected_components(
     spark = edges.sparkSession
 
     # Materialize the canonical input ONCE before the loop (r6): the caller's
-    # edge pipeline is often expensive (dedup_clusters feeds the full
-    # MinHash-LSH-verify chain in here), and round 0's star steps reference
-    # the edge set many times — plus the node universe and the first
-    # convergence probe each re-derived it again. Measured at sf0.1 (6M LSH
-    # pairs / 5k docs): 115.9 s → 37 s end-to-end from this + the cheaper
+    # edge plan can be expensive (a pair join), and round 0's star steps
+    # reference the edge set many times — plus the node universe and the
+    # first convergence probe each re-derived it again. Measured on a 6M-edge
+    # input over 5k nodes: 115.9 s → 37 s end-to-end from this + the cheaper
     # convergence check below (guide §2.4: remove recompute, §5: cache only
     # what is reused).
     e, n_e = _materialize(

@@ -34,8 +34,8 @@ def block_pairs(
     ``internals.R:718-737`` + dedup/sort ``unsupervised_learning.R:1078-1081``).
 
     THE scalable candidate generator: the cross product becomes a shuffle on
-    ``block``; AQE skew-join handles moderately hot blocks, and explicitly
-    salted keys (operators/blocking.py) handle pathological ones.
+    ``block``; AQE skew-join handles moderately hot blocks, and
+    ``blocking.cap_blocks`` drops (and reports) blocks over the pair budget.
 
     ``dedup=False`` skips the (a, b) dropDuplicates — a full extra shuffle of
     the pair table — and is CORRECT whenever each record carries at most one

@@ -22,8 +22,8 @@ ENGINE_CONF: dict[str, str] = {
     "spark.sql.ansi.enabled": "false",
     # Adaptive execution: runtime coalescing of shuffle partitions and
     # skew-join splitting — hot blocks in the candidate-pair join get split
-    # without manual salting for moderate skew (we still salt pathological
-    # blocks explicitly, see operators/blocking.py).
+    # without salting (blocks over the pair budget are dropped and reported
+    # first, see operators/blocking.py cap_blocks).
     "spark.sql.adaptive.enabled": "true",
     "spark.sql.adaptive.coalescePartitions.enabled": "true",
     "spark.sql.adaptive.skewJoin.enabled": "true",

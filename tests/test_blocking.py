@@ -7,11 +7,7 @@ from automatedreclin_spark.operators.blocking import (
     assert_disjoint_blocks,
     block_summary,
     cap_blocks,
-    files_blocking_key,
     files_candidate_blocks,
-    find_hot_blocks,
-    multi_probe_blocking_keys,
-    salt_blocks,
 )
 from automatedreclin_spark.operators.pairs import block_pairs
 
@@ -21,18 +17,23 @@ def corpus(spark):
     return synth_files(spark, n_a=200, n_b=400, seed=11)
 
 
+def _path_probes(A, B, n_probes):
+    """Candidate pairs from ``n_probes`` path probes alone (no content)."""
+    ba = files_candidate_blocks(A, "a", n_buckets=256, path_probes=n_probes, content_probes=0)
+    bb = files_candidate_blocks(B, "b", n_buckets=256, path_probes=n_probes, content_probes=0)
+    return block_pairs(ba, bb).select("a", "b")
+
+
 def test_files_blocking_key_recall(corpus):
     """Exact duplicates must always collide; fuzzy (typo'd basename) should
     mostly collide — minhash over path tokens tolerates single-token edits."""
     A, B, labels = corpus
-    KA = files_blocking_key(A, n_buckets=256)
-    KB = files_blocking_key(B, n_buckets=256)
-    pairs = block_pairs(KA, KB)
-    kept = labels.join(pairs.select("a", "b"), ["a", "b"], "left_semi").count()
+    pairs = _path_probes(A, B, 1)
+    kept = labels.join(pairs, ["a", "b"], "left_semi").count()
     total = labels.count()
     # exact dups = first 30 labels (15%), fuzzy = next 50 (25%)
     exact = labels.filter(F.col("a") <= 30)
-    kept_exact = exact.join(pairs.select("a", "b"), ["a", "b"], "left_semi").count()
+    kept_exact = exact.join(pairs, ["a", "b"], "left_semi").count()
     assert kept_exact == exact.count(), "exact duplicates must share a block"
     assert kept / total >= 0.6, f"single-probe blocking recall too low: {kept}/{total}"
 
@@ -53,17 +54,9 @@ def test_files_candidate_blocks_recall(corpus):
 
 def test_multi_probe_improves_recall(corpus):
     A, B, labels = corpus
-    single_a = files_blocking_key(A, n_buckets=256)
-    single_b = files_blocking_key(B, n_buckets=256)
-    single_pairs = block_pairs(single_a, single_b).select("a", "b")
-
-    multi_a = multi_probe_blocking_keys(A, "a", n_buckets=256, n_probes=3).join(A, "a")
-    multi_b = multi_probe_blocking_keys(B, "b", n_buckets=256, n_probes=3).join(B, "b")
-    multi_pairs = block_pairs(multi_a, multi_b).select("a", "b")
-
-    r1 = labels.join(single_pairs, ["a", "b"], "left_semi").count()
-    r2 = labels.join(multi_pairs, ["a", "b"], "left_semi").count()
-    assert r2 >= r1
+    r1 = labels.join(_path_probes(A, B, 1), ["a", "b"], "left_semi").count()
+    r3 = labels.join(_path_probes(A, B, 3), ["a", "b"], "left_semi").count()
+    assert r3 >= r1
 
 
 def test_block_summary_and_caps(spark):
@@ -87,26 +80,3 @@ def test_disjointness_check(spark):
     bad = spark.createDataFrame(pd.DataFrame({"id": [1, 1], "block": [1, 2]}))
     with pytest.raises(ValueError, match="at most one block"):
         assert_disjoint_blocks(bad, "id")
-
-
-def test_salting_preserves_pair_set(spark):
-    """Salted join must produce exactly the same (a, b) pairs as unsalted."""
-    import numpy as np
-    rng = np.random.default_rng(0)
-    A = spark.createDataFrame(pd.DataFrame({
-        "a": range(1, 201), "block": np.r_[np.zeros(150, int), rng.integers(1, 10, 50)],
-    }))
-    B = spark.createDataFrame(pd.DataFrame({
-        "b": range(1, 101), "block": np.r_[np.zeros(60, int), rng.integers(1, 10, 40)],
-    }))
-    s = block_summary(A, B)
-    hot = find_hot_blocks(s.summary, max_pairs_per_block=1000)
-    assert hot.count() == 1  # block 0: 150*60 = 9000 pairs
-    SA, SB = salt_blocks(A, B, hot, n_salts=4)
-    salted_pairs = block_pairs(SA, SB, block_col="salted_block").select("a", "b")
-    plain_pairs = block_pairs(A, B).select("a", "b")
-    assert salted_pairs.count() == plain_pairs.count()
-    assert salted_pairs.exceptAll(plain_pairs).count() == 0
-    # salted A side splits the hot block into multiple join keys
-    n_keys = SA.filter(F.col("block") == 0).select("salted_block").distinct().count()
-    assert n_keys == 4
